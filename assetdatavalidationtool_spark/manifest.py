@@ -143,10 +143,10 @@ ALIGNED_RULE_PREFIXES = (
 
 # Per-row modality rules that bucket their violations by a fixed key
 # column of their table (rules/audio.py, rules/video.py use
-# pmod(xxhash64(<id>), num_buckets) exactly like bucket_col). They are
-# bucket-aligned whenever the run's key_col IS that column — then a
-# resume re-decodes only the missing buckets instead of the whole
-# clips/videos table.
+# pmod(xxhash64(<id>), num_buckets) exactly like RuleContext.bucket_of).
+# They are bucket-aligned whenever the run's key_col IS that column —
+# then a resume re-decodes only the missing buckets instead of the
+# whole clips/videos table.
 FIXED_KEY_ALIGNED = {"audio_invariant": "clip_id", "video_invariant": "video_id"}
 
 
@@ -453,11 +453,17 @@ class ValidationRun:
             # metadata-cheap job and provably the same data.
             from pyspark.errors import AnalysisException
 
+            # ONLY the read may fail as "no verdicts" (an empty
+            # partitioned write leaves no files); a schema or plan error
+            # in the select must surface, not record zero done buckets
             try:
                 verd_tbl = self.spark.read.parquet(
                     f"{self.out}/verdicts/run_id={self.run_id}"
                     f"/rule={rule.name}"
                 )
+            except AnalysisException:
+                verd_rows = []
+            else:
                 if aligned:
                     # the dir may already hold buckets _inherit wrote
                     # earlier this invocation (dynamic partition
@@ -469,8 +475,6 @@ class ValidationRun:
                 verd_rows = verd_tbl.select(
                     "bucket", "rows_scanned", "violation_count"
                 ).collect()
-            except AnalysisException:
-                verd_rows = []  # empty partitioned write leaves no files
             rows = [
                 (
                     self.run_id,

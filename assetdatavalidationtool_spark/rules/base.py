@@ -31,8 +31,19 @@ VIOLATIONS_SCHEMA = T.StructType(
 )
 
 
-def bucket_col(key_col: str, num_buckets: int) -> F.Column:
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets)).cast("long")
+def violation_rows(spark: SparkSession, rows: list[tuple] | tuple = ()) -> DataFrame:
+    """Driver-side violation rows (VIOLATIONS_SCHEMA order) as an inline
+    ``VALUES`` table — a local relation Catalyst folds at plan time, not
+    an RDD-backed ``createDataFrame`` that runs a ``Scan ExistingRDD``
+    stage in every action, even when empty."""
+    cols = ", ".join(f"CAST(col{j + 1} AS {f.dataType.simpleString()}) AS `{f.name}`"
+                     for j, f in enumerate(VIOLATIONS_SCHEMA))
+    if not rows:  # typed dummy row, pruned at plan time
+        return spark.sql(f"SELECT {cols} FROM VALUES ('', NULL, NULL, NULL, NULL) WHERE false")
+    values = ", ".join("(" + ", ".join(f":v{i}_{j}" for j in range(len(r))) + ")"
+                       for i, r in enumerate(rows))
+    args = {f"v{i}_{j}": v for i, r in enumerate(rows) for j, v in enumerate(r)}
+    return spark.sql(f"SELECT {cols} FROM VALUES {values}", args=args)
 
 
 @dataclass
@@ -61,7 +72,8 @@ class RuleContext:
         return df.withColumn("bucket", self.bucket_of(F.col(key or self.key_col)))
 
     def empty_violations(self) -> DataFrame:
-        return self.spark.createDataFrame([], VIOLATIONS_SCHEMA)
+        """Zero rows as a local relation that unions prune (violation_rows)."""
+        return violation_rows(self.spark)
 
 
 class Rule:
@@ -85,14 +97,20 @@ class Rule:
 class RuleSet:
     """Compile + run rules; produce violations, verdicts, metrics.
 
-    Scale notes: the violations union is lazy — Catalyst sees one plan
-    per rule and the scan of the images table is shared where rules read
-    the same columns. Verdict aggregation groups by (rule, bucket); the
-    bucket count is engine-chosen (thousands at 10^12 rows) so this
-    aggregate is small and partial/final hash-agg handles it map-side.
+    Scale notes: the violations union is lazy — one plan per rule, the
+    images scan shared where rules read the same columns, empty seeds
+    pruned (:func:`violation_rows`). Verdicts are ONE ``groupBy(rule,
+    bucket)`` over the persisted violations (a mark each) and the
+    per-bucket row counts exploded over the rule names — no join. Its
+    rules x buckets groups are few, so partial/final hash aggregation
+    handles it map-side. Only buckets holding image rows, and the
+    table-level bucket -1, get a verdict.
     """
 
     def __init__(self, rules: list[Rule]):
+        dups = sorted({r.name for r in rules if sum(q.name == r.name for q in rules) > 1})
+        if dups:
+            raise ValueError(f"duplicate rule names in RuleSet: {dups}")
         self.rules = rules
 
     def run(self, ctx: RuleContext, persist: bool = True) -> dict[str, DataFrame]:
@@ -107,45 +125,24 @@ class RuleSet:
             # the input, so this is cheap at any scale.
             vio = vio.persist()
 
-        # rows scanned per bucket (the verdict denominator)
-        rows_per_bucket = (
-            ctx.with_bucket(ctx.images.select(ctx.key_col))
-            .groupBy("bucket")
-            .agg(F.count("*").alias("rows_scanned"))
-        )
-        rule_names = ctx.spark.createDataFrame(
-            [(r.name,) for r in self.rules], "rule string"
-        )
-        # table-level violations (no key → no bucket) get reserved bucket -1
-        # so verdict totals always reconcile with the violations table
-        vio_counts = vio.groupBy(
-            "rule", F.coalesce("bucket", F.lit(-1)).alias("bucket")
-        ).agg(F.count("*").alias("violation_count"))
+        # the verdict denominator (rows per bucket) once per rule, plus one
+        # mark per violation; table-level violations (no key → no bucket)
+        # get reserved bucket -1 so verdict totals reconcile with them
+        names = F.array(*[F.lit(r.name) for r in self.rules])
+        row_counts = ctx.with_bucket(ctx.images.select(ctx.key_col)).groupBy("bucket").count()
         verdicts = (
-            rows_per_bucket.crossJoin(F.broadcast(rule_names))
-            .join(vio_counts.where(F.col("bucket") >= 0), ["rule", "bucket"], "left_outer")
-            .select(
-                "rule",
-                "bucket",
-                "rows_scanned",
-                F.coalesce("violation_count", F.lit(0)).alias("violation_count"),
-            )
-            .unionByName(
-                vio_counts.where(F.col("bucket") < 0).select(
-                    "rule",
-                    "bucket",
-                    F.lit(0).cast("long").alias("rows_scanned"),
-                    "violation_count",
-                )
-            )
-            .select(
-                F.lit(ctx.run_id).alias("run_id"),
-                "rule",
-                "bucket",
-                "rows_scanned",
-                "violation_count",
-                (F.col("violation_count") == 0).alias("pass"),
-            )
+            row_counts.select(F.explode(names).alias("rule"), "bucket",
+                              F.col("count").alias("rows"), F.lit(0).alias("vio"),
+                              F.lit(True).alias("has_rows"))
+            .unionByName(vio.select("rule", F.coalesce("bucket", F.lit(-1)).alias("bucket"),
+                                    F.lit(0).cast("long").alias("rows"), F.lit(1).alias("vio"),
+                                    F.lit(False).alias("has_rows")))
+            .groupBy("rule", "bucket")
+            .agg(F.sum("rows").alias("rows_scanned"), F.sum("vio").alias("violation_count"),
+                 F.max("has_rows").alias("has_rows"))
+            .where((F.col("bucket") < 0) | F.col("has_rows"))
+            .select(F.lit(ctx.run_id).alias("run_id"), "rule", "bucket", "rows_scanned",
+                    "violation_count", (F.col("violation_count") == 0).alias("pass"))
         )
 
         metrics = None

@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import Rule, RuleContext
+from .base import Rule, RuleContext, violation_rows
 
 
 def histogram(df: DataFrame, col: str, kind: str, lo: float = 0.0, hi: float = 1024.0,
@@ -116,10 +116,7 @@ class DriftRule(Rule):
             rows.append(
                 (self.name, None, self.column, f"psi drift {psi:.4f} > {self.psi_threshold}", None)
             )
-        out = ctx.empty_violations()
-        if rows:
-            out = out.unionByName(ctx.spark.createDataFrame(rows, out.schema))
-        return out
+        return violation_rows(ctx.spark, rows)
 
 
 def snapshot_reference(df: DataFrame, column: str, kind: str, lo: float = 0.0,

@@ -14,7 +14,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import Rule, RuleContext
+from .base import Rule, RuleContext, violation_rows
 
 
 @dataclass
@@ -33,7 +33,6 @@ class SchemaRule(Rule):
     def violations(self, ctx: RuleContext) -> DataFrame:
         df = ctx.images
         actual = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        out = ctx.empty_violations()
 
         # table-level: missing / mistyped columns (schema is metadata —
         # checked driver-side, emitted as bucket-less violations)
@@ -54,10 +53,7 @@ class SchemaRule(Rule):
         for col in actual:
             if col not in {s.name for s in self.columns} and col != "bucket":
                 table_level.append((self.name, None, col, "unexpected column", None))
-        if table_level:
-            out = out.unionByName(
-                ctx.spark.createDataFrame(table_level, out.schema)
-            )
+        out = violation_rows(ctx.spark, table_level)
 
         # row-level: nullability + domain predicates — FUSED into a single
         # scan. Each check becomes a conditional struct in one array;

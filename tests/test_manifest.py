@@ -155,6 +155,28 @@ def test_crash_before_manifest_append_resumes_without_double_count(
     assert not glob.glob(f"{out}/manifest/_temporary*")
 
 
+def test_verdict_readback_schema_error_raises(spark, data, tmp_path_factory):
+    """ADVICE r6: only the verdicts READ may count as "no verdicts". A
+    column-resolution error in the read-back (here a renamed
+    rows_scanned) must raise, not append zero manifest rows that leave
+    every bucket undone and silently rerun the rule on each resume."""
+    from pyspark.errors import AnalysisException
+
+    images, captions = data
+
+    class Renamed(ValidationRun):
+        def _verdicts(self, ctx, rule, vio, aligned):
+            return super()._verdicts(ctx, rule, vio, aligned).withColumnRenamed(
+                "rows_scanned", "rows"
+            )
+
+    run = Renamed(spark, str(tmp_path_factory.mktemp("run_renamed")),
+                  [UniquenessRule(["image_id"])], num_buckets=8, run_id="rR")
+    with pytest.raises(AnalysisException, match="rows_scanned"):
+        run.run(images, captions)
+    assert run.read_manifest() is None
+
+
 def test_audio_video_rules_are_bucket_aligned():
     """ADVICE r03: audio/video invariant rules bucket by their fixed id
     column, so they resume at bucket grain iff the run's key_col is that

@@ -147,6 +147,76 @@ def test_ruleset_verdicts(ctx):
     assert all(r["s"] == N + DUPS for r in per_rule_rows)
 
 
+@pytest.fixture(scope="module")
+def tiny(spark):
+    """Three images (buckets 0 and 1) and a caption-only key x9 that
+    hashes to bucket 7, which holds no image rows."""
+    images = spark.createDataFrame([("i1", 10), ("i2", 20), ("i3", 30)], "image_id string, w int")
+    captions = spark.createDataFrame([("i1",), ("i2",), ("x9",)], "image_id string")
+    return RuleContext(
+        spark=spark, images=images, captions=captions, num_buckets=8,
+        bucket_expr=lambda c: F.when(c.startswith("x"), 7).otherwise(
+            F.substring(c, 2, 1).cast("long") % 2
+        ),
+    )
+
+
+def _verdict_rows(ctx, rules, persist=True):
+    out = RuleSet(rules).run(ctx, persist=persist)
+    cols = ["rule", "bucket", "rows_scanned", "violation_count", "pass"]
+    rows = sorted(tuple(r) for r in out["verdicts"].select(*cols).collect())
+    out["violations"].unpersist()
+    return rows
+
+
+def _tiny_schema():
+    return SchemaRule([ColumnSpec("image_id", "string"), ColumnSpec("h", "int")])
+
+
+def test_ruleset_verdict_skips_imageless_bucket(tiny):
+    rule = ReferentialRule()
+    assert {r["bucket"] for r in rule.violations(tiny).collect()} == {1, 7}
+    assert _verdict_rows(tiny, [rule]) == [
+        ("referential", 0, 1, 0, True),
+        ("referential", 1, 2, 1, False),
+    ]
+
+
+def test_ruleset_verdict_table_level_bucket(tiny):
+    """Missing h + unexpected w: bucket -1, no rows scanned, failing."""
+    assert _verdict_rows(tiny, [_tiny_schema()]) == [
+        ("schema", -1, 0, 2, False),
+        ("schema", 0, 1, 0, True),
+        ("schema", 1, 2, 0, True),
+    ]
+
+
+def test_ruleset_clean_rule_passes_every_bucket(tiny):
+    assert _verdict_rows(tiny, [UniquenessRule(["image_id"])]) == [
+        ("uniqueness(image_id)", 0, 1, 0, True),
+        ("uniqueness(image_id)", 1, 2, 0, True),
+    ]
+
+
+def test_ruleset_empty_images_no_bucket_verdicts(spark, tiny):
+    empty = RuleContext(
+        spark=spark, images=tiny.images.limit(0), captions=None, num_buckets=8,
+        bucket_expr=tiny.bucket_expr,
+    )
+    rows = _verdict_rows(empty, [_tiny_schema(), UniquenessRule(["image_id"])])
+    assert rows == [("schema", -1, 0, 2, False)]
+
+
+def test_ruleset_persist_false_same_verdicts(tiny):
+    rules = [_tiny_schema(), UniquenessRule(["image_id"]), ReferentialRule()]
+    assert _verdict_rows(tiny, rules, persist=False) == _verdict_rows(tiny, rules)
+
+
+def test_ruleset_rejects_duplicate_rule_names():
+    with pytest.raises(ValueError, match=r"uniqueness\(image_id\)"):
+        RuleSet([UniquenessRule(["image_id"]), ReferentialRule(), UniquenessRule(["image_id"])])
+
+
 def test_row_invariant_one_violation_per_failed_check(spark):
     """A row failing BOTH pixel and caption checks emits TWO violation
     rows (bytes + caption), and a decoded-shape mismatch records the
