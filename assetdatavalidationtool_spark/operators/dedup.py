@@ -40,38 +40,36 @@ def _sweep_cc_roots() -> None:
 
 def _hash_to_min_labels(u, v, n: int):
     """Min-label connected components over a factorized edge list on
-    the DRIVER (r6): vectorized hash-to-min with pointer jumping. Each
-    round takes the edge-wise minimum of the two endpoint labels
-    (``np.minimum.at`` — unbuffered, duplicate-safe) and then jumps
-    every label to its label's label, so the distance from any node to
-    its component minimum at least halves per round → O(log diameter)
-    rounds, each one O(E) of pure numpy.
+    the DRIVER: vectorized hooking with full pointer jumping. Each
+    round hooks, for every edge whose endpoints sit in different trees,
+    the larger root onto the smaller one (``np.minimum.at`` —
+    unbuffered, duplicate-safe), then jumps every pointer to its root,
+    so each round ends with every tree a star. Every unfinished round
+    merges at least two trees (so the loop terminates); in practice
+    the tree count falls geometrically (a randomly ordered 10^6-node
+    chain takes 14 rounds; edge-min steps with one jump per round took
+    1,700-6,100 rounds on a 10^4-node one), each round O(E) of numpy.
 
-    Correctness invariants (each is inductive over rounds): labels only
-    decrease; ``lbl[i] <= i``; every label value is a member of its
-    node's component (edge steps copy a neighbor's label, jumps copy a
-    component member's label). At the fixpoint the two endpoint labels
-    agree on every edge and the pointer map is idempotent, so each
-    component carries exactly one label c with lbl[c] == c; c is a
-    member and c <= every member, i.e. c IS the minimum member — the
-    same labeling the distributed loop converges to. Returns
-    ``lbl`` with ``lbl[i]`` = smallest member index of i's component.
+    Correctness invariants (each is inductive over rounds): pointers
+    only decrease, so ``lbl[i] <= i`` and the pointer graph is a
+    forest; pointers only follow edges, so every root is a member of
+    its node's component. At the fixpoint no edge joins two trees, so
+    each component is one star whose root c is a member with c <=
+    every member, i.e. c IS the minimum member. Returns ``lbl`` with
+    ``lbl[i]`` = smallest member index of i's component.
     """
     import numpy as np
 
     lbl = np.arange(n, dtype=np.int64)
-    if len(u) == 0:
-        return lbl
-    for _ in range(64):  # 2^64 nodes worth of halvings — unreachable
-        m = np.minimum(lbl[u], lbl[v])
+    while True:
+        lu, lv = lbl[u], lbl[v]
         new = lbl.copy()
-        np.minimum.at(new, u, m)
-        np.minimum.at(new, v, m)
-        new = new[new]
+        np.minimum.at(new, np.maximum(lu, lv), np.minimum(lu, lv))
+        while not np.array_equal(new[new], new):
+            new = new[new]
         if np.array_equal(new, lbl):
             return lbl
         lbl = new
-    raise RuntimeError("hash-to-min did not converge in 64 rounds")
 
 
 def norm_text(c: F.Column) -> F.Column:
@@ -318,55 +316,70 @@ def minhash_lsh_candidates(
     )
 
 
+# Pair-count bound of the driver finish: at or below it the whole pair
+# table is labelled on the driver (5M pairs is a few hundred MB); above
+# it the distributed star loop runs.
+_DRIVER_FINISH_MAX_PAIRS = 5_000_000
+# Round cap of the distributed loop (one round = small-star + large-star).
+_MAX_ROUNDS = 30
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iterations: int = 25,
     checkpoint_dir: str | None = None,
-    contract_min_edges: int = 1_000_000,
-    driver_finish_max_pairs: int = 5_000_000,
 ) -> DataFrame:
     """Connected components over an undirected duplicate-pair graph →
     ``(doc_id, cluster_id)`` where ``cluster_id`` is the minimum member
     id of the component. This is the step that turns near-dup PAIRS
     (from LSH / Jaccard / SimHash) into dedup GROUPS: keep one doc per
-    cluster, drop the rest.
+    cluster, drop the rest. Pairs with a null endpoint are dropped;
+    duplicate, reversed and self-loop pairs are allowed.
 
-    Algorithm (r6): when the whole pair set fits a bounded driver
-    budget (``driver_finish_max_pairs``, default 5M pairs ≈ a few
-    hundred MB), the entire computation runs on the driver as one
-    Arrow transfer + a vectorized hash-to-min
-    (:func:`_hash_to_min_labels`) — the broadcast-join principle
-    applied to an iterative algorithm; the collect is bounded by the
-    gate, exactly like the histogram/centroid collects elsewhere.
-    Otherwise: large-star contraction rounds (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond" — window-min per
-    node, components preserved, cliques collapse to stars in one round
-    and chain diameters roughly halve per round, so high-diameter
-    graphs converge in O(log n) total rounds), then iterative
-    min-label propagation — ``label(v) ← min(label(v), min over
-    neighbors u of label(u))`` — over the contracted edge set until
-    fixpoint. Each propagation iteration is one equi-join + one
-    aggregate on the node key over edges cached hash-partitioned on
-    that key. ``max_iterations`` caps the propagation loop and
-    non-convergence raises rather than returning a wrong answer.
+    Two execution paths, chosen by the pair count:
 
-    Lineage discipline: the label table is CHECKPOINTED to parquet every
-    iteration and re-read, so each iteration's logical plan has constant
-    size. This is not optional hygiene — without truncation the plan for
-    iteration k embeds TWO copies of iteration k-1's plan (the join side
-    and the union side), i.e. 2^k plan nodes: a 12-hop chain OOMs the
-    DRIVER during plan analysis long before any data is large (observed:
-    java heap exhaustion building plan strings at k≈12). Caching does
-    not help — persist stops recomputation, not plan growth. Production
-    iterative graph jobs (GraphX, GraphFrames) checkpoint for exactly
-    this reason. The label table is (node, lbl) — a compact projection,
-    pennies to round-trip even at 10^10 nodes; intermediate iteration
-    dirs are deleted as soon as superseded. The returned DataFrame is a
-    clean scan of the final checkpoint — no cached RDDs left pinned in
-    the session (the leak class the round-4 advice found in
-    ruleset_verdicts).
+    * **Driver finish** (``_DRIVER_FINISH_MAX_PAIRS``, 5M pairs ≈ a few
+      hundred MB): one Arrow transfer + vectorized hooking and pointer
+      jumping (:func:`_hash_to_min_labels`) — the broadcast-join
+      principle applied to an iterative algorithm; the collect is
+      bounded by the gate, exactly like the histogram/centroid collects
+      elsewhere. Measured crossover: at ~200k pairs the driver finish
+      is ~4x faster than the distributed path; at ~2-3M (image graph,
+      string ids) pandas factorize + the result round-trip already
+      lose to it.
+    * **Distributed**: alternating small-star / large-star rounds
+      (Kiveris et al., "Connected Components in MapReduce and Beyond",
+      SoCC 2014; O(log² n) rounds) over a canonical edge table
+      ``(big, small)`` with ``big >= small``. Each star step is ONE
+      per-node min aggregate ``m(u) = min small over u's rows``
+      (map-side partial) joined back to the edges, then a distinct.
+      Small-star emits ``(small, m(big))`` per row plus ``(u, m(u))``
+      per node, so afterwards every node is a ``big`` (a node without
+      smaller neighbors keeps a ``(u, u)`` row); large-star emits
+      ``(big, m(small))`` per edge and keeps those ``(u, u)`` rows.
+      Components are preserved by both steps. The loop stops on an
+      exact test observed on the large-star write: no node has two
+      distinct smaller neighbors and no edge's smaller end has a
+      smaller neighbor — both counts are zero iff every component is a
+      star around its minimum, and then the step's output is exactly
+      one ``(node, min member)`` row per node, i.e. the labels.
+      Running out of ``_MAX_ROUNDS`` raises instead of returning
+      partial labels.
+
+    Lineage discipline: every step's output is CHECKPOINTED to parquet
+    and re-read, so each step's logical plan has constant size. This
+    is not optional hygiene — without truncation the plan for step k
+    embeds step k-1's plan twice (the aggregate side and the join
+    side), i.e. 2^k plan nodes: a 12-step loop OOMs the DRIVER during
+    plan analysis long before any data is large (observed: java heap
+    exhaustion building plan strings at k≈12). Caching does not help —
+    persist stops recomputation, not plan growth. Production iterative
+    graph jobs (GraphX, GraphFrames) checkpoint for exactly this
+    reason. Superseded step dirs are deleted at once. The returned
+    DataFrame is a clean scan of the final checkpoint — no cached RDDs
+    left pinned in the session (the leak class the round-4 advice
+    found in ruleset_verdicts).
     """
     import shutil
     import tempfile
@@ -374,19 +387,12 @@ def connected_components(
     from pyspark.sql import Observation
 
     spark = pairs.sparkSession
-    # r6: no edge distinct — every upstream pair source here emits
-    # distinct (a<b) pairs already, and both contraction and min-label
-    # propagation are idempotent over duplicate edges (identical labels
-    # either way; a caller passing heavily duplicated pairs only pays
-    # proportionally more first-round volume). The CANONICAL pair table
-    # is what gets persisted (half the rows of the directed form);
-    # whether the directed union is ever materialized depends on the
-    # contraction gate below.
-    _par = max(spark.sparkContext.defaultParallelism * 2, 8)
-    pairs_p = pairs.select(
-        F.col(src).alias("pa"), F.col(dst).alias("pb")
-    ).persist()
-    n_directed = 2 * pairs_p.count()
+    pairs_p = (
+        pairs.select(F.col(src).alias("pa"), F.col(dst).alias("pb"))
+        .dropna()
+        .persist()
+    )
+    n_pairs = pairs_p.count()
 
     root = checkpoint_dir or tempfile.mkdtemp(prefix="spark_cc_")
     if checkpoint_dir is None:
@@ -398,37 +404,24 @@ def connected_components(
         # checkpoint_dir is the caller's to manage.
         _TEMP_CC_ROOTS.append(root)
 
-    def _checkpoint(df: DataFrame, it: int) -> DataFrame:
-        path = f"{root}/iter_{it}"
+    def _checkpoint(df: DataFrame, name: str) -> DataFrame:
+        path = f"{root}/{name}"
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    def _driver_finish(edge_df: DataFrame) -> DataFrame:
-        """Bounded driver finish (r6): when the whole pair set fits the
-        driver budget, ONE Arrow ``toPandas`` plus a vectorized
-        hash-to-min replaces the node aggregate, the contraction rounds
-        and the label loop — each of which costs joins/aggregates plus
-        checkpoint round-trips of mostly fixed overhead at this size.
-        This is the broadcast-join principle applied to an iterative
-        algorithm: once the graph fits one machine, stop iterating over
-        the cluster. The collect is BOUNDED by
-        ``driver_finish_max_pairs`` (checked by the caller) — the same
-        bounded-collect class as histogram bins and IVF centroids; at
-        100 TB the pair set blows the bound and the distributed path
-        below runs unchanged. Duplicate rows, reversed pairs and
-        self-loops are all no-ops for hash-to-min, so the raw pair
-        table is passed as-is (its endpoint union IS the label node
-        set, same as the distributed seed). Measured crossover: at
-        ~200k pairs the driver finish is ~4x faster than the
-        distributed path; at ~2-3M (contracted image graph, string
-        ids) pandas factorize + the result round-trip already LOSE to
-        the distributed label loop — which is why there is
-        deliberately no post-contraction driver gate."""
+    def _driver_finish() -> DataFrame:
+        """Bounded driver finish: ONE Arrow ``toPandas`` plus a
+        vectorized hash-to-min replaces every distributed round — each
+        of which costs an aggregate, a join and a checkpoint round-trip
+        of mostly fixed overhead at this size. Duplicate rows, reversed
+        pairs and self-loops are all no-ops for hash-to-min, so the
+        pair table is passed as-is (its endpoint union IS the node
+        set). An empty pair table takes this path too."""
         import numpy as np
         import pandas as pd
         from pyspark.sql import types as T
 
-        pdf = edge_df.toPandas()
+        pdf = pairs_p.toPandas()
         # sort=True: code order == value order (pandas str comparison is
         # code-point order == Spark's UTF8 binary order for valid
         # UTF-8), so the min CODE per component is the min VALUE —
@@ -440,284 +433,70 @@ def connected_components(
         m = len(pdf)
         lbl = _hash_to_min_labels(codes[:m], codes[m:], len(uniq))
         uniq = np.asarray(uniq)
-        node_t = edge_df.schema[0].dataType
-        out_pdf = pd.DataFrame({"node": uniq, "lbl": uniq[lbl]})
-        sdf = spark.createDataFrame(
-            out_pdf,
-            T.StructType(
-                [
-                    T.StructField("node", node_t, True),
-                    T.StructField("lbl", node_t, True),
-                ]
-            ),
-        )
-        path = f"{root}/final_driver"
-        sdf.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    # r6 driver finish, gate 1: the whole pair set already fits the
-    # driver budget — skip the node aggregate, the contraction rounds
-    # and the label loop outright (at bench scale these are pure
-    # fixed-overhead jobs; at real scale this gate simply never fires
-    # pre-contraction)
-    if 0 < n_directed <= 2 * driver_finish_max_pairs:
-        labels = _driver_finish(pairs_p)
-        pairs_p.unpersist()
-        return labels.select(
-            F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
-        )
-
-    # Per-node closed-neighborhood minima, ONE aggregate over both
-    # orientations (r6b): this single table seeds the labels (its node
-    # set IS the original node set — contraction below only rewrites
-    # edges, and the union in every propagation step carries `labels`
-    # through, so every original node keeps a label even if contraction
-    # leaves it edgeless) and, on the fast contraction path, doubles as
-    # the round-1 min table. Checkpointed so both consumers read one
-    # materialization: per-partition group cardinality here is near the
-    # node count, so partial aggregation barely shrinks the stream and
-    # recomputing it would be the plan's single heaviest stage.
-    nm_path = f"{root}/node_mins"
-    nm_plan = (
-        pairs_p.select(F.col("pa").alias("node"), F.col("pb").alias("nbr"))
-        .unionByName(
-            pairs_p.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
-        )
-        .groupBy("node")
-        .agg(F.min("nbr").alias("mn"))
-    )
-    _will_contract = n_directed >= contract_min_edges
-    if _will_contract:
-        # two consumers (label seed + round-1 min table): materialize
-        nm_plan.write.mode("overwrite").parquet(nm_path)
-        node_mins = spark.read.parquet(nm_path)
-        labels = _checkpoint(
-            node_mins.select("node", F.col("node").alias("lbl")), 0
-        )
-    else:
-        # single consumer: the label-seed checkpoint IS the
-        # materialization, no separate node_mins round trip
-        node_mins = None
-        labels = _checkpoint(
-            nm_plan.select("node", F.col("node").alias("lbl")), 0
-        )
-
-    # ---- large-star contraction rounds (r6; Kiveris et al. 2014) ----
-    # Each round connects every node's strictly-larger neighbors to the
-    # minimum of its closed neighborhood: one pinned-partition window
-    # min + filter + distinct, NO join. Large-star preserves components
-    # (lemma 1 of the paper), dense near-dup cliques collapse to stars
-    # in ONE round, and chain diameters roughly halve per round — so
-    # the min-label loop below then iterates over a drastically smaller
-    # edge set (measured at sf1.0: 34M directed edges -> ~3M after one
-    # round; each label iteration was ~130 s of executor time on the
-    # uncontracted graph). Rounds stop when the edge count stops
-    # shrinking by >=25%; convergence of the LABELS stays the label
-    # loop's job, so a conservative early stop here costs only speed,
-    # never correctness.
-    from pyspark.sql import Window as _W
-
-    par = _par
-
-    def _contract(
-        start_edges: DataFrame,
-        start_round: int = 1,
-        prev_sig: tuple[int, int] | None = None,
-    ) -> DataFrame:
-        """Run large-star rounds over ``start_edges`` (when persisted
-        hash-partitioned on esrc, round 1 reuses that partitioning)
-        and return a NEW persisted, partitioned directed edge table;
-        ``start_edges`` is unpersisted once its last read completes."""
-        cur = start_edges
-        for r in range(start_round, 11):
-            m = F.least(
-                F.min("edst").over(_W.partitionBy("esrc")), F.col("esrc")
-            )
-            obs_s = Observation(f"cc_star_{id(start_edges)}_{r}")
-            src_df = cur if r == 1 else cur.repartition(par, "esrc")
-            contracted = (
-                src_df
-                .withColumn("_m", m)
-                .where(F.col("edst") > F.col("esrc"))
-                .select(F.col("edst").alias("big"), F.col("_m").alias("small"))
-                .repartition(par, "big", "small")
-                .dropDuplicates()
-                .observe(
-                    obs_s,
-                    F.count(F.lit(1)).alias("n_edges"),
-                    # order-independent multiset signature: stop when
-                    # the edge SET stops changing (a chain keeps its
-                    # edge COUNT while its diameter halves per round,
-                    # so a count-based stop would quit too early). A
-                    # signature collision merely stops rounds early —
-                    # the label loop still converges correctly, just
-                    # with more iterations.
-                    # hashes wrapped to < 2^30 so the BIGINT sum cannot
-                    # overflow (ANSI mode errors on overflow) below
-                    # ~2^33 edges; beyond that the 10-round cap governs
-                    F.sum(
-                        F.pmod(
-                            F.xxhash64(F.col("big"), F.col("small")),
-                            F.lit(1_000_000_007),
-                        )
-                    ).alias("sig"),
-                )
-            )
-            path = f"{root}/star_{r}"
-            contracted.write.mode("overwrite").parquet(path)
-            star = spark.read.parquet(path)
-            sig = (int(obs_s.get["n_edges"] or 0), int(obs_s.get["sig"] or 0))
-            if r == 1:
-                start_edges.unpersist()
-            shutil.rmtree(f"{root}/star_{r - 1}", ignore_errors=True)
-            cur = star.select(
-                F.col("big").alias("esrc"), F.col("small").alias("edst")
-            ).unionByName(
-                star.select(
-                    F.col("small").alias("esrc"), F.col("big").alias("edst")
-                )
-            )
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-        return cur.repartition(par, "esrc").persist()
-
-    # Contraction gates (r6): contract IMMEDIATELY when the edge table
-    # is large (below ~contract_min_edges directed edges a propagation
-    # iteration costs about the same as a contraction round — both are
-    # dominated by per-job fixed overhead — so contraction could only
-    # add latency there: measured +3-4 s on the small document-dedup
-    # graphs at sf1.0, −50% on the 34M-edge image graph); contract
-    # LAZILY for a small graph that turns out to be deep (the label
-    # loop still unconverged after 8 rounds ⇒ diameter > 8), so a
-    # planted 60-hop chain converges well inside ``max_iterations``
-    # instead of raising like the r5 propagation-only loop would. The
-    # count() also pre-materializes the pair cache the label seed reads
-    # either way. The threshold scales with the data, not the local
-    # core count, and is a parameter.
-    contracted_done = False
-    if _will_contract:
-        # Round 1 straight off the CANONICAL pair table (r6b): the
-        # directed union is never materialized — per-node closed-
-        # neighborhood minima come from a map-side-partial aggregate
-        # over both orientations (full volume shrinks to one row per
-        # node before its shuffle), and the emissions (v, m(u)) for
-        # v > u are exactly one join of the canonical pairs (u=a, v=b)
-        # against that min table. Equivalent to the window round 1
-        # over directed edges, minus a full-edge exchange and a
-        # full-edge sort. Self-loops are dropped (they emit nothing in
-        # the window form either); reversed inputs are canonicalized.
-        pc = pairs_p.select(
-            F.least("pa", "pb").alias("pa"),
-            F.greatest("pa", "pb").alias("pb"),
-        ).where(F.col("pa") != F.col("pb"))
-        mins = node_mins.select(
-            "node", F.least("mn", "node").alias("m")
-        )
-        obs1 = Observation("cc_star_fast1")
-        r1 = (
-            pc.join(mins, pc["pa"] == mins["node"])
-            .select(F.col("pb").alias("big"), F.col("m").alias("small"))
-            .repartition(par, "big", "small")
-            .dropDuplicates()
-            .observe(
-                obs1,
-                F.count(F.lit(1)).alias("n_edges"),
-                F.sum(
-                    F.pmod(
-                        F.xxhash64(F.col("big"), F.col("small")),
-                        F.lit(1_000_000_007),
-                    )
-                ).alias("sig"),
-            )
-        )
-        r1.write.mode("overwrite").parquet(f"{root}/star_1")
-        star1 = spark.read.parquet(f"{root}/star_1")
-        sig1 = (int(obs1.get["n_edges"] or 0), int(obs1.get["sig"] or 0))
-        pairs_p.unpersist()
-        cur1 = star1.select(
-            F.col("big").alias("esrc"), F.col("small").alias("edst")
-        ).unionByName(
-            star1.select(
-                F.col("small").alias("esrc"), F.col("big").alias("edst")
-            )
-        )
-        edges = _contract(cur1, start_round=2, prev_sig=sig1)
-        contracted_done = True
-    else:
-        edges = (
-            pairs_p.select(F.col("pa").alias("esrc"), F.col("pb").alias("edst"))
-            .unionByName(
-                pairs_p.select(
-                    F.col("pb").alias("esrc"), F.col("pa").alias("edst")
-                )
-            )
-            .repartition(_par, "esrc")
-            .persist()
-        )
-        edges.count()  # materialize off the pair cache before freeing it
-        pairs_p.unpersist()
-
-    converged = False
-    for it in range(1, max_iterations + 1):
-        # ONE action per iteration (r6): the old loop ran the
-        # checkpoint write and then a separate join+count to detect
-        # convergence — two full passes over the label table per
-        # round. Here the previous label rides along in the union as
-        # ``old`` (every node appears exactly once in ``labels``, so
-        # min(old) recovers it), the changed-count is attached to the
-        # write job itself via observe(), and the join+count action
-        # disappears.
-        neighbor_lbls = edges.join(
-            labels, edges["esrc"] == labels["node"]
-        ).select(
-            F.col("edst").alias("node"),
-            F.col("lbl"),
-            F.lit(None).cast(labels.schema["lbl"].dataType).alias("old"),
-        )
-        obs = Observation(f"cc_iter_{it}")
-        merged = (
-            neighbor_lbls.unionByName(
-                labels.select("node", "lbl", F.col("lbl").alias("old"))
-            )
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
-            .observe(
-                obs,
-                F.sum((F.col("lbl") != F.col("old")).cast("long")).alias(
-                    "n_changed"
+        node_t = pairs_p.schema[0].dataType
+        return _checkpoint(
+            spark.createDataFrame(
+                pd.DataFrame({"big": uniq, "small": uniq[lbl]}),
+                T.StructType(
+                    [
+                        T.StructField("big", node_t, True),
+                        T.StructField("small", node_t, True),
+                    ]
                 ),
-            )
-            .select("node", "lbl")
+            ),
+            "final_driver",
         )
-        new_labels = _checkpoint(merged, it)
-        n_changed = obs.get["n_changed"] or 0
-        labels = new_labels
-        shutil.rmtree(f"{root}/iter_{it - 1}", ignore_errors=True)
-        if n_changed == 0:
-            converged = True
-            break
-        if not contracted_done and it >= 8:
-            # small-but-deep graph: switch to the contracted edge set;
-            # current labels are valid intermediate minima, propagation
-            # over any component-preserving edge set continues to the
-            # same fixpoint
-            edges = _contract(edges)
-            contracted_done = True
-    edges.unpersist()
-    import glob as _glob
 
-    for d in _glob.glob(f"{root}/star_*"):
-        shutil.rmtree(d, ignore_errors=True)
-    shutil.rmtree(nm_path, ignore_errors=True)
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations — post-contraction component diameter exceeds "
-            "the cap; raise max_iterations"
+    def _star_loop() -> DataFrame:
+        big, small, m, node = F.col("big"), F.col("small"), F.col("m"), F.col("node")
+        # self-loops stay: a node whose only pair is (u, u) keeps that row
+        edges = pairs_p.select(
+            F.greatest("pa", "pb").alias("big"), F.least("pa", "pb").alias("small")
         )
+        for step in range(2 * _MAX_ROUNDS):
+            large = step % 2 == 1
+            # m(u) = min of u and its smaller neighbors; mx(u) = largest
+            # strictly smaller neighbor, > m(u) iff there are two of them
+            mins = edges.groupBy(big.alias("node")).agg(
+                F.min("small").alias("m"),
+                F.max(F.when(small < big, small)).alias("mx"),
+            )
+            if large:
+                obs_nodes = Observation(f"cc_star_nodes_{step}")
+                obs_edges = Observation(f"cc_star_edges_{step}")
+                mins = mins.observe(
+                    obs_nodes, F.count(F.when(F.col("mx") > m, 1)).alias("n")
+                )
+                out = (
+                    edges.join(mins, small == node)
+                    .observe(
+                        obs_edges,
+                        F.count(F.when((big > small) & (m < small), 1)).alias("n"),
+                    )
+                    .where((big > small) | (m == small))
+                    .select("big", m.alias("small"))
+                )
+            else:
+                out = (
+                    edges.join(mins, big == node)
+                    .select(small.alias("big"), m.alias("small"))
+                    .unionByName(mins.select(node.alias("big"), m.alias("small")))
+                )
+            edges = _checkpoint(out.dropDuplicates(), f"star_{step}")
+            if step == 0:
+                pairs_p.unpersist()
+            else:
+                shutil.rmtree(f"{root}/star_{step - 1}", ignore_errors=True)
+            if large and obs_nodes.get["n"] == 0 and obs_edges.get["n"] == 0:
+                return edges
+        raise RuntimeError(
+            f"connected_components did not converge in {_MAX_ROUNDS} rounds"
+        )
+
+    labels = _driver_finish() if n_pairs <= _DRIVER_FINISH_MAX_PAIRS else _star_loop()
+    pairs_p.unpersist()
     return labels.select(
-        F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
+        F.col("big").alias("doc_id"), F.col("small").alias("cluster_id")
     )
 
 

@@ -601,46 +601,73 @@ def test_ivf_topk_large_quantizer_join_path(spark):
 # ---------------------------------------------------------------------------
 
 
+def _uf_labels(edges):
+    """Pure-Python union-find reference: node -> minimum member id."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in list(parent)}
+
+
+def _cc_labels(pairs, **kw):
+    from assetdatavalidationtool_spark.operators import connected_components
+
+    return {r["doc_id"]: r["cluster_id"]
+            for r in connected_components(pairs, **kw).collect()}
+
+
+def _cc_both_paths(pairs, monkeypatch, **kw):
+    """(driver-finish labels, distributed-loop labels) of one pair table:
+    the second run forces the distributed path with a zero driver
+    budget."""
+    from assetdatavalidationtool_spark.operators import dedup
+
+    driver = _cc_labels(pairs, **kw)
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup, "_DRIVER_FINISH_MAX_PAIRS", 0)
+        return driver, _cc_labels(pairs, **kw)
+
+
 def test_connected_components_merges_chains(spark):
     # two components: {1,2,3,4} via a chain (forces >1 propagation
     # round) and {10, 11}; 4 appears only on the dst side
     pairs = spark.createDataFrame(
         [(3, 4), (2, 3), (1, 2), (10, 11)], "doc_a long, doc_b long"
     )
-    from assetdatavalidationtool_spark.operators import connected_components
-
-    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
+    got = _cc_labels(pairs)
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_long_chain_converges(spark):
-    """A planted 60-hop chain (diameter far beyond the old 25-iteration
-    propagation cap) must converge — the large-star contraction rounds
-    halve the diameter per round, so the label loop sees a shallow
-    graph — with labels identical to min-member semantics. Shuffled
-    pair order and both-side-only nodes are covered by construction."""
-    from assetdatavalidationtool_spark.operators import connected_components
-
+def test_connected_components_long_chain_converges(spark, monkeypatch):
+    """A planted 60-hop chain must converge on both paths with labels
+    identical to min-member semantics (the distributed loop needs
+    O(log n) star rounds for it). Shuffled pair order and both-side-only
+    nodes are covered by construction."""
     chain = [(i, i + 1) for i in range(100, 160)]  # 61 nodes, 60 hops
     extra = [(500, 501), (502, 501)]  # second component, dst-side hub
     pairs = spark.createDataFrame(chain[::-1] + extra, "doc_a long, doc_b long")
     want = {i: 100 for i in range(100, 161)}
     want.update({500: 500, 501: 500, 502: 500})
-    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
-    assert got == want
-    # driver finish disabled: the lazy-contraction + label-loop path
-    # (the shape this test existed for) must still converge on its own
-    dist = {r["doc_id"]: r["cluster_id"]
-            for r in connected_components(
-                pairs, driver_finish_max_pairs=0).collect()}
+    driver, dist = _cc_both_paths(pairs, monkeypatch)
+    assert driver == want
     assert dist == want
 
 
-def test_connected_components_deep_clique_chain_distributed(spark):
-    """A small-but-deep clique chain that blows a tiny driver budget
-    must converge on the distributed path alone (label loop → lazy
-    contraction at round 8 → label loop on the contracted graph)."""
-    from assetdatavalidationtool_spark.operators import connected_components
+def test_connected_components_deep_clique_chain_distributed(spark, monkeypatch):
+    """A small-but-deep clique chain must converge on the distributed
+    path alone: cliques collapse to stars in one round, the bridging
+    chain needs the alternating rounds."""
+    from assetdatavalidationtool_spark.operators import dedup
 
     rows = []
     for c in range(20):  # 20 10-cliques bridged into one 40-hop chain
@@ -649,60 +676,106 @@ def test_connected_components_deep_clique_chain_distributed(spark):
         if c:
             rows.append((base - 1, base))
     pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in connected_components(
-               pairs, driver_finish_max_pairs=460).collect()}
-    assert got == {n: 0 for n in range(200)}
+    monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_PAIRS", 0)
+    assert _cc_labels(pairs) == {n: 0 for n in range(200)}
 
 
-def test_connected_components_fast_path_matches_small_path(spark):
-    """contract_min_edges=0 forces the immediate-contraction fast path
-    (round 1 computed straight off the canonical pair table) on a
-    fixture that also covers reversed pairs, duplicates, self-loops
-    and a chain — labels must equal the small-path propagation's."""
-    from assetdatavalidationtool_spark.operators import connected_components
+def test_connected_components_round_cap_raises(spark, monkeypatch):
+    """Running out of distributed rounds raises instead of returning
+    partial labels."""
+    from assetdatavalidationtool_spark.operators import dedup
 
-    rows = [(3, 4), (2, 3), (1, 2), (10, 11), (9, 8), (9, 8), (7, 7),
+    monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_PAIRS", 0)
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", 1)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(pairs)
+
+
+def test_connected_components_duplicate_and_self_pairs(spark, monkeypatch, tmp_path):
+    """Duplicate pair rows, reversed pairs and self-loops must not change
+    labels on either path, and every original node keeps a label. An
+    empty pair table returns an empty frame typed like its ids without
+    running a distributed round."""
+    import os
+
+    from assetdatavalidationtool_spark.operators import dedup
+
+    rows = [(1, 2), (1, 2), (2, 3), (7, 7), (9, 8), (9, 8), (3, 3),
             (20, 21), (22, 21)]
     pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
-    fast = {r["doc_id"]: r["cluster_id"]
-            for r in connected_components(pairs, contract_min_edges=0).collect()}
-    slow = {r["doc_id"]: r["cluster_id"]
-            for r in connected_components(pairs).collect()}
-    assert fast == slow
-    assert fast[4] == 1 and fast[8] == 8 and fast[7] == 7 and fast[22] == 20
+    driver, dist = _cc_both_paths(pairs, monkeypatch)
+    assert driver == dist == _uf_labels(rows)
+    assert driver[3] == 1 and driver[7] == 7 and driver[9] == 8
+
+    monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_PAIRS", 0)
+    for id_type in ("long", "string"):
+        empty = spark.createDataFrame([], f"doc_a {id_type}, doc_b {id_type}")
+        ckpt = tmp_path / id_type
+        out = dedup.connected_components(empty, checkpoint_dir=str(ckpt))
+        assert out.count() == 0
+        assert out.schema["doc_id"].dataType == empty.schema["doc_a"].dataType
+        assert out.schema["cluster_id"].dataType == empty.schema["doc_a"].dataType
+        assert os.listdir(ckpt) == ["final_driver"]
 
 
-def test_connected_components_duplicate_and_self_pairs(spark):
-    """Duplicate pair rows and self-loops must not change labels: the
-    r6 edge build drops the distinct (propagation is idempotent over
-    duplicates) and contraction discards self-loops, but every original
-    node must keep a label."""
-    from assetdatavalidationtool_spark.operators import connected_components
-
+def test_connected_components_null_endpoints(spark, monkeypatch):
+    """Pairs with a null endpoint are dropped before either path: no
+    null doc_id, and the non-null endpoints of such pairs do not
+    disturb any other label."""
     pairs = spark.createDataFrame(
-        [(1, 2), (1, 2), (2, 3), (7, 7), (9, 8)], "doc_a long, doc_b long"
+        [(1, None), (None, 2), (3, 4)], "doc_a long, doc_b long"
     )
-    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 8, 9: 8}
+    driver, dist = _cc_both_paths(pairs, monkeypatch)
+    assert driver == dist == {3: 3, 4: 3}
 
-    from assetdatavalidationtool_spark.operators import connected_components
+    spairs = spark.createDataFrame(
+        [("a", None), (None, "b"), ("d", "c"), ("c", None)],
+        "doc_a string, doc_b string",
+    )
+    driver, dist = _cc_both_paths(spairs, monkeypatch)
+    assert driver == dist == {"c": "c", "d": "c"}
 
-    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert connected_components(pairs).count() == 0
+
+def test_connected_components_wide_ids(spark, monkeypatch):
+    """int64 ids at both ends of the range and 200-character string ids
+    match union-find on both paths; string min is code-point order
+    (``img_10 < img_9``, ``z < é``)."""
+    top, bottom = 2**63 - 1, -(2**63)
+    edges = [(top, top - 1), (top - 7, top - 1), (bottom, -3), (-3, 7),
+             (7, top - 2), (0, -1), (top - 3, top - 3)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    for got in _cc_both_paths(pairs, monkeypatch):
+        assert got == _uf_labels(edges)
+    assert _uf_labels(edges)[top - 2] == bottom
+
+    def wide(s):  # pad with a code point below every id character
+        return s + "#" * (200 - len(s))
+
+    sedges = [(wide("img_9"), wide("img_10")), (wide("img_10"), wide("img_11")),
+              (wide("img_é"), wide("img_z")), (wide("img_zz"), wide("img_é"))]
+    spairs = spark.createDataFrame(sedges, "doc_a string, doc_b string")
+    for got in _cc_both_paths(spairs, monkeypatch):
+        assert got == _uf_labels(sedges)
+        assert got[wide("img_9")] == wide("img_10")
+        assert got[wide("img_é")] == wide("img_z")
 
 
-def test_connected_components_leaves_no_cached_rdds(spark):
-    # the iterative loop persists per-iteration label tables; all of
-    # them must be unpersisted by return (the ruleset_verdicts leak
-    # class from the round-4 advice)
-    from assetdatavalidationtool_spark.operators import connected_components
+def test_connected_components_leaves_no_cached_rdds(spark, monkeypatch):
+    # the pair table is persisted for the count and the first step; it
+    # must be unpersisted by return on both paths (the
+    # ruleset_verdicts leak class from the round-4 advice)
+    from assetdatavalidationtool_spark.operators import dedup
 
     spark.catalog.clearCache()
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
-    connected_components(pairs).collect()
     jsc = spark.sparkContext._jsc.sc()
-    assert jsc.getPersistentRDDs().size() == 0
+    for budget in (dedup._DRIVER_FINISH_MAX_PAIRS, 0):
+        monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_PAIRS", budget)
+        dedup.connected_components(pairs).collect()
+        assert jsc.getPersistentRDDs().size() == 0
 
 
 def test_canonical_docs_keeps_longest_then_smallest_id(spark):
@@ -768,37 +841,19 @@ def test_stratified_hash_sample_rates(spark):
     assert "Exchange" not in plan
 
 
-def test_connected_components_property_vs_union_find(spark):
-    """Random edge lists vs a pure-Python union-find reference. Not
-    @given-decorated — one Spark job per example is too slow for
-    hypothesis's default budget; instead a fixed set of seeded random
-    graphs spanning the shapes that break naive propagation (chains,
-    stars, cycles, self-loops, disconnected singleton pairs)."""
+def test_connected_components_property_vs_union_find(spark, monkeypatch):
+    """Random edge lists vs a pure-Python union-find reference, on both
+    the driver finish and the distributed loop. Not @given-decorated —
+    one Spark job per example is too slow for hypothesis's default
+    budget; instead a fixed set of seeded random graphs spanning the
+    shapes that break naive propagation (chains, stars, cycles,
+    self-loops, disconnected singleton pairs, a randomly ordered
+    chain)."""
     import random
 
-    from assetdatavalidationtool_spark.operators import connected_components
-
-    def uf_reference(edges):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # fully compress, then min-id per component
-        comp = {}
-        for n in list(parent):
-            comp.setdefault(find(n), []).append(n)
-        return {n: root for root, ns in comp.items() for n in ns}
-
     rng = random.Random(42)
+    order = list(range(150))
+    rng.shuffle(order)
     cases = [
         [(i, i + 1) for i in range(12)],                      # long chain
         [(0, i) for i in range(1, 10)],                       # star
@@ -806,15 +861,14 @@ def test_connected_components_property_vs_union_find(spark):
         [(3, 3), (4, 5)],                                     # self-loop
         [(rng.randrange(30), rng.randrange(30)) for _ in range(25)],
         [(rng.randrange(50), rng.randrange(50)) for _ in range(40)],
+        list(zip(order, order[1:])),                          # shuffled chain
     ]
     for edges in cases:
-        expect = uf_reference(edges)
+        expect = _uf_labels(edges)
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = {
-            r["doc_id"]: r["cluster_id"]
-            for r in connected_components(pairs).collect()
-        }
-        assert got == expect, f"edges={edges}"
+        driver, dist = _cc_both_paths(pairs, monkeypatch)
+        assert driver == expect, f"driver finish, edges={edges}"
+        assert dist == expect, f"distributed, edges={edges}"
 
 
 def test_ann_recall_counts(spark):
@@ -1718,10 +1772,11 @@ def test_header_consistency_real_payloads(spark):
 
 
 def test_hash_to_min_labels_matches_union_find():
-    """r6 driver-finish kernel: vectorized hash-to-min must equal a
-    union-find reference on every graph shape that breaks naive
+    """Driver-finish kernel: vectorized hooking + pointer jumping must
+    equal a union-find reference on every graph shape that breaks naive
     propagation (chains, stars, cycles, duplicates, self-loops,
-    singletons, random graphs)."""
+    singletons, random graphs, randomly ordered chains — the last take
+    one round per hop under edge-min steps with a single jump)."""
     import random
 
     import numpy as np
@@ -1746,6 +1801,8 @@ def test_hash_to_min_labels_matches_union_find():
         return [find(i) for i in range(n)]
 
     rng = random.Random(7)
+    order = list(range(3000))
+    rng.shuffle(order)
     cases = [
         ([], 0),
         ([], 5),
@@ -1756,6 +1813,7 @@ def test_hash_to_min_labels_matches_union_find():
         ([(1, 2), (1, 2), (2, 1)], 4),                      # duplicates
         ([(rng.randrange(60), rng.randrange(60)) for _ in range(80)], 60),
         ([(rng.randrange(200), rng.randrange(200)) for _ in range(120)], 200),
+        (list(zip(order, order[1:])), 3000),                # shuffled chain
     ]
     for edges, n in cases:
         u = np.array([a for a, _ in edges], dtype=np.int64)
@@ -1764,38 +1822,19 @@ def test_hash_to_min_labels_matches_union_find():
         assert list(got) == uf(edges, n), f"edges={edges} n={n}"
 
 
-def test_connected_components_driver_finish_matches_distributed(spark):
-    """r6: all three execution shapes — driver finish (default),
-    contraction + driver finish (contract_min_edges=0), and the fully
-    distributed contraction + label loop (driver_finish_max_pairs=0) —
-    must yield identical labels, on long/string ids alike."""
-    from assetdatavalidationtool_spark.operators import connected_components
-
+def test_connected_components_driver_finish_matches_distributed(spark, monkeypatch):
+    """The driver finish and the distributed star loop must yield
+    identical labels, on long/string ids alike."""
     rows = [(3, 4), (2, 3), (1, 2), (10, 11), (9, 8), (9, 8), (7, 7),
             (20, 21), (22, 21)] + [(i, i + 1) for i in range(100, 130)]
     pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
-    want = {r["doc_id"]: r["cluster_id"]
-            for r in connected_components(
-                pairs, driver_finish_max_pairs=0).collect()}
-    driver = {r["doc_id"]: r["cluster_id"]
-              for r in connected_components(pairs).collect()}
-    contracted = {r["doc_id"]: r["cluster_id"]
-                  for r in connected_components(
-                      pairs, contract_min_edges=0).collect()}
-    mixed = {r["doc_id"]: r["cluster_id"]
-             for r in connected_components(
-                 pairs, contract_min_edges=0,
-                 driver_finish_max_pairs=0).collect()}
-    assert driver == want and contracted == want and mixed == want
+    driver, want = _cc_both_paths(pairs, monkeypatch)
+    assert driver == want
     assert want[4] == 1 and want[22] == 20 and want[129] == 100
 
     spairs = spark.createDataFrame(
         [(f"img_{a}", f"img_{b}") for a, b in rows],
         "doc_a string, doc_b string",
     )
-    sdriver = {r["doc_id"]: r["cluster_id"]
-               for r in connected_components(spairs).collect()}
-    swant = {r["doc_id"]: r["cluster_id"]
-             for r in connected_components(
-                 spairs, driver_finish_max_pairs=0).collect()}
+    sdriver, swant = _cc_both_paths(spairs, monkeypatch)
     assert sdriver == swant and sdriver["img_4"] == "img_1"
