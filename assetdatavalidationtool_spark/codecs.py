@@ -18,7 +18,9 @@ This container has no imaging libraries (no PIL/cv2), so:
   production — the Spark-side plumbing (binary column, Arrow batch
   decode, schema) does not change.
 
-All functions are pure and executor-safe (no globals, no RNG).
+All functions are pure and executor-safe (no globals, no RNG). On a
+corrupt or foreign payload every decoder raises one of ``DATA_ERRORS``;
+any other exception is an engine fault.
 """
 
 from __future__ import annotations
@@ -28,6 +30,10 @@ import struct
 import zlib
 
 import numpy as np
+
+# what the decoders (and the datagen renderers' id parse) raise on bad
+# data — the per-row media harness turns exactly these into row faults
+DATA_ERRORS = (ValueError, zlib.error, struct.error)
 
 
 def _try_import_c_png_decoder():
@@ -46,10 +52,13 @@ def _try_import_c_png_decoder():
         from PIL import Image
 
         def dec(data: bytes) -> np.ndarray:
-            img = Image.open(io.BytesIO(data))
-            if img.mode != "RGB":
-                img = img.convert("RGB")
-            return np.asarray(img, dtype=np.uint8)
+            try:
+                img = Image.open(io.BytesIO(data))
+                if img.mode != "RGB":
+                    img = img.convert("RGB")
+                return np.asarray(img, dtype=np.uint8)
+            except OSError as e:  # Pillow's corrupt-payload error
+                raise ValueError(f"bad PNG: {e}") from e
 
         return dec
     except ImportError:
@@ -350,8 +359,10 @@ def decode_y4m(data: bytes) -> tuple[list[np.ndarray], int]:
         elif tok[0] == "H":
             h = int(tok[1:])
         elif tok[0] == "F":
-            num, den = tok[1:].split(":")
-            fps = max(1, round(int(num) / int(den)))
+            num, den = (int(v) for v in tok[1:].split(":"))
+            if not den:
+                raise ValueError(f"bad Y4M frame rate {tok}")
+            fps = max(1, round(num / den))
         elif tok[0] == "C":
             ctag = tok
     if not w or not h:

@@ -110,6 +110,16 @@ def _gradient_base(w: int, h: int) -> np.ndarray:
 _gradient_base._cache = {}
 
 
+def id_index(key: str) -> int | None:
+    """The row index the ``render_*`` functions read from an
+    ``<prefix>_<n>`` id, or None when the id carries none (no reference
+    rendering exists for it)."""
+    try:
+        return int(key.split("_")[-1])
+    except ValueError:
+        return None
+
+
 def render_image(image_id: str, w: int, h: int) -> np.ndarray:
     """Deterministic reference rendering for an image_id: a seeded
     gradient + block-noise pattern. Pure function of (id, w, h)."""

@@ -38,10 +38,11 @@ from __future__ import annotations
 import dataclasses
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .rules.base import Rule, RuleContext
+from .rules.base import Rule, RuleContext, path_missing
 
 MANIFEST_SCHEMA = (
     "run_id string, rule string, bucket long, status string, "
@@ -213,7 +214,9 @@ class ValidationRun:
     def read_manifest(self) -> DataFrame | None:
         try:
             return self.spark.read.parquet(self._manifest_path())
-        except Exception:
+        except AnalysisException as e:
+            if not path_missing(e):  # unreadable ≠ no manifest yet
+                raise
             return None
 
     def completed(self, run_id: str | None = None) -> dict[str, set[int]]:
@@ -451,8 +454,6 @@ class ValidationRun:
             # the violation aggregate) a second time per rule. The
             # written table is a handful of rows; reading it back is a
             # metadata-cheap job and provably the same data.
-            from pyspark.errors import AnalysisException
-
             # ONLY the read may fail as "no verdicts" (an empty
             # partitioned write leaves no files); a schema or plan error
             # in the select must surface, not record zero done buckets
@@ -521,7 +522,9 @@ class ValidationRun:
             base_rows = self.spark.read.parquet(
                 self._fingerprints_path(base_run_id)
             ).collect()
-        except Exception:
+        except AnalysisException as e:
+            if not path_missing(e):  # unreadable ≠ no fingerprints
+                raise
             return set()
         cur = {(r["side"], r["bucket"]): (r["n_rows"], r["fp"])
                for r in fp_rows}
@@ -568,15 +571,11 @@ class ValidationRun:
         run's violation count, not the table. Missing base artifacts
         narrow safely: no verdicts for a rule → that rule recomputes;
         no violations dir → the rule was clean, nothing to copy."""
-        from pyspark.errors import AnalysisException
-
         def _missing(e: AnalysisException) -> bool:
             # UNABLE_TO_INFER_SCHEMA = the dir exists but holds no data
             # files — how an empty partitioned write (a CLEAN rule's
             # violations) materializes
-            return ("PATH_NOT_FOUND" in str(e)
-                    or "Path does not exist" in str(e)
-                    or "UNABLE_TO_INFER_SCHEMA" in str(e))
+            return path_missing(e) or "UNABLE_TO_INFER_SCHEMA" in str(e)
 
         base_done = self.completed(base_run_id)
         all_buckets = set(range(self.num_buckets))
@@ -761,8 +760,6 @@ class ValidationRun:
             key_col=self.key_col,
             bucket_expr=self.bucket_expr,
         )
-        from pyspark.errors import AnalysisException
-
         try:
             vio = self.violations()
         except AnalysisException as e:
@@ -771,8 +768,7 @@ class ValidationRun:
             # corrupt files, mistyped --output) must abort, not tag
             # every known-bad row status=clean (same narrowing as
             # streaming stream_dedup_exact's ledger read).
-            if ("PATH_NOT_FOUND" not in str(e)
-                    and "Path does not exist" not in str(e)):
+            if not path_missing(e):
                 raise
             vio = ctx.empty_violations()
         parts = split_violations(ctx, vio)

@@ -10,34 +10,39 @@ and check declared metadata + signal health. WAV/PCM16 is lossless, so
 the reference comparison is EXACT sample equality (the counterpart of
 the PSNR >= 40 dB gate for lossy images).
 
-Checks per row, each emitting its own violation (SchemaRule /
-RowInvariantRule explode pattern, ONE UDF pass):
+Checks per row, each emitting its own violation (``check_violations``,
+ONE UDF pass):
 
-* decode     — bytes parse as RIFF/WAVE PCM16
+* decode     — bytes parse as RIFF/WAVE PCM16; a failure names the
+  codec error class (``audio decode failed: struct.error``)
 * meta       — declared (sample_rate, n_samples) == decoded
 * reference  — decoded samples exactly equal render_audio(clip_id)
 * clipping   — fraction of samples at the rails <= max_clip_frac
   (abs computed on widened int32: int16 abs wraps -32768 and hides
   negative-rail clipping)
 
-Execution shape: ``mapInPandas`` in the scan stage — audio bytes are
+Execution shape: ``mapInPandas`` in the scan stage through the shared
+media harness (``operators.multimodal.row_batches``) — audio bytes are
 decoded where they are read and never enter a shuffle; the UDF output
-is a few flags per row. Run it with ``RuleContext(images=clips_df,
-key_col="clip_id")`` — the rule engine is table-generic.
+is a few flags per row. Only codec data errors become row faults; any
+other exception fails the task. Run it with
+``RuleContext(images=clips_df, key_col="clip_id")`` — the rule engine
+is table-generic.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .base import Rule, RuleContext
+from .. import codecs
+from ..datagen import id_index, render_audio
+from ..operators.multimodal import row_batches
+from .base import Rule, RuleContext, check_violations
 
 AUDIO_CHECK_SCHEMA = T.StructType(
     [
@@ -46,57 +51,29 @@ AUDIO_CHECK_SCHEMA = T.StructType(
         T.StructField("meta_ok", T.BooleanType(), True),
         T.StructField("ref_ok", T.BooleanType(), True),
         T.StructField("clip_frac", T.DoubleType(), True),
+        T.StructField("error", T.StringType(), True),
     ]
 )
 
 DEFAULT_MAX_CLIP_FRAC = 0.001
 
 
-def _audio_check_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from assetdatavalidationtool_spark.codecs import decode_wav
-    from assetdatavalidationtool_spark.datagen import render_audio
+def _check_clip(clip_id, data, sample_rate, n_samples):
+    samples, sr = codecs.decode_wav(data)
+    mono = samples[:, 0]
+    meta_ok = bool(sr == sample_rate and len(mono) == n_samples)
+    # a decodable row whose id names no reference is a per-row
+    # reference mismatch, not a decode fault
+    ref_ok = id_index(clip_id) is not None and bool(
+        np.array_equal(render_audio(clip_id, len(mono), sr), mono))
+    a = np.abs(samples.astype(np.int32))
+    clip_frac = float(np.mean(a >= 32767)) if len(mono) else 0.0
+    return True, meta_ok, ref_ok, clip_frac
 
-    for pdf in batches:
-        n = len(pdf)
-        ids = pdf["clip_id"].tolist()
-        decode_ok = np.zeros(n, dtype=bool)
-        meta_ok = np.zeros(n, dtype=object)
-        ref_ok = np.zeros(n, dtype=object)
-        clip_frac = np.full(n, np.nan)
-        for j in range(n):
-            try:
-                samples, sr = decode_wav(bytes(pdf["bytes"].iat[j]))
-                decode_ok[j] = True
-            except Exception:
-                meta_ok[j] = None
-                ref_ok[j] = None
-                continue
-            mono = samples[:, 0]
-            meta_ok[j] = bool(
-                sr == pdf["sample_rate"].iat[j]
-                and len(mono) == pdf["n_samples"].iat[j]
-            )
-            try:
-                # render_audio parses the numeric suffix of clip_id; a
-                # decodable row with an unexpected id must degrade to a
-                # per-row violation, not fail the Spark task.
-                ref = render_audio(ids[j], len(mono), sr)
-                ref_ok[j] = bool(
-                    len(ref) == len(mono) and np.array_equal(ref, mono)
-                )
-            except Exception:
-                ref_ok[j] = False
-            a = np.abs(samples.astype(np.int32))
-            clip_frac[j] = float(np.mean(a >= 32767)) if len(mono) else 0.0
-        yield pd.DataFrame(
-            {
-                "clip_id": ids,
-                "decode_ok": decode_ok,
-                "meta_ok": meta_ok,
-                "ref_ok": ref_ok,
-                "clip_frac": clip_frac,
-            }
-        )
+
+_audio_check_batches = row_batches(
+    _check_clip, (False, None, None, np.nan), AUDIO_CHECK_SCHEMA
+)
 
 
 @dataclass
@@ -111,46 +88,11 @@ class AudioInvariantRule(Rule):
         )
 
     def violations(self, ctx: RuleContext) -> DataFrame:
-        checks = self.checks(ctx)
-        fails = F.array_compact(
-            F.array(
-                F.when(
-                    ~F.col("decode_ok"),
-                    F.struct(
-                        F.lit("bytes").alias("column"),
-                        F.lit("audio decode failed").alias("detail"),
-                    ),
-                ),
-                F.when(
-                    F.col("decode_ok") & ~F.col("meta_ok"),
-                    F.struct(
-                        F.lit("sample_rate,n_samples").alias("column"),
-                        F.lit("declared metadata != decoded").alias("detail"),
-                    ),
-                ),
-                F.when(
-                    F.col("decode_ok") & ~F.col("ref_ok"),
-                    F.struct(
-                        F.lit("bytes").alias("column"),
-                        F.lit("sample mismatch vs reference").alias("detail"),
-                    ),
-                ),
-                F.when(
-                    F.col("decode_ok") & (F.col("clip_frac") > self.max_clip_frac),
-                    F.struct(
-                        F.lit("bytes").alias("column"),
-                        F.concat(
-                            F.lit("clipping frac="),
-                            F.round(F.col("clip_frac"), 4).cast("string"),
-                        ).alias("detail"),
-                    ),
-                ),
-            )
-        )
-        return checks.select(F.col("clip_id"), F.explode(fails).alias("f")).select(
-            F.lit(self.name).alias("rule"),
-            F.col("clip_id").alias("key"),
-            F.col("f.column").alias("column"),
-            F.col("f.detail").alias("detail"),
-            ctx.bucket_of(F.col("clip_id")).alias("bucket"),
-        )
+        ok = F.col("decode_ok")
+        return check_violations(ctx, self.name, self.checks(ctx), "clip_id", [
+            (~ok, "bytes", F.concat(F.lit("audio decode failed: "), "error")),
+            (ok & ~F.col("meta_ok"), "sample_rate,n_samples", "declared metadata != decoded"),
+            (ok & ~F.col("ref_ok"), "bytes", "sample mismatch vs reference"),
+            (ok & (F.col("clip_frac") > self.max_clip_frac), "bytes",
+             F.concat(F.lit("clipping frac="), F.round("clip_frac", 4).cast("string"))),
+        ])

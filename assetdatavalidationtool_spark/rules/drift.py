@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import Rule, RuleContext, violation_rows
+from .base import Rule, RuleContext, path_missing, violation_rows
 
 
 def histogram(df: DataFrame, col: str, kind: str, lo: float = 0.0, hi: float = 1024.0,
@@ -183,8 +183,7 @@ def _read_snapshot(spark, output_dir: str, run_id: str, column: str):
         # or unreadable snapshot must surface as-is, not as a
         # self-contradictory "run recorded no snapshot" hint (same
         # narrowing as ValidationRun.split / stream_dedup_exact)
-        if ("PATH_NOT_FOUND" not in str(exc)
-                and "Path does not exist" not in str(exc)):
+        if not path_missing(exc):
             raise
         run_dir = f"{output_dir.rstrip('/')}/metrics/run_id={run_id}"
         recorded = sorted(

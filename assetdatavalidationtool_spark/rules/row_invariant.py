@@ -11,11 +11,18 @@ Execution shape (the scale-critical part):
 * ``mapInPandas`` over Arrow record batches — vectorized transfer, no
   per-row Python serialization (input_hint requirement). Batch size is
   bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` so image
-  buffers fit executor memory.
+  buffers fit executor memory. The batch loop, null checks and error
+  policy are the shared media harness
+  (``operators.multimodal.row_batches``): a payload that fails to
+  decode is a per-row ``bytes`` violation naming the codec error class
+  (``pixel decode failed: zlib.error``), and any other exception fails
+  the task instead of posing as a data violation.
 * Runs in the *scan stage* (narrow transformation): image bytes are
   decoded where they are read and never enter a shuffle. The UDF output
-  is only ``(image_id, psnr_db, pixel_ok, caption_ok, bucket)`` — a few
+  is only ``(image_id, psnr_db, pixel_ok, caption_ok, error)`` — a few
   dozen bytes/row.
+* The caption is checked whenever the id names a reference row, also
+  when the bytes fail to decode.
 * The reference rendering is *regenerated from image_id on the
   executor* (datagen.render_image is a pure function), never broadcast
   or shuffled — SURVEY.md §7.3.
@@ -23,16 +30,17 @@ Execution shape (the scale-critical part):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .base import Rule, RuleContext
+from .. import codecs
+from ..datagen import id_index, render_image, row_params
+from ..operators.multimodal import row_batches
+from .base import Rule, RuleContext, check_violations
 
 CHECK_SCHEMA = T.StructType(
     [
@@ -40,63 +48,44 @@ CHECK_SCHEMA = T.StructType(
         T.StructField("psnr_db", T.DoubleType(), True),
         T.StructField("pixel_ok", T.BooleanType(), True),
         T.StructField("caption_ok", T.BooleanType(), True),
+        T.StructField("error", T.StringType(), True),
     ]
 )
 
 PSNR_GATE_DB = 40.0
 
 
-def _check_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # imports inside the worker function: keeps the closure picklable
-    # and the modules importable on any executor via --py-files
-    from assetdatavalidationtool_spark.codecs import decode_image, psnr
-    from assetdatavalidationtool_spark.datagen import render_image, row_params
+def _expected(image_id: str | None) -> dict | None:
+    i = None if image_id is None else id_index(image_id)
+    return None if i is None else row_params(i)
 
-    for pdf in batches:
-        n = len(pdf)
-        psnrs = np.full(n, np.nan)
-        pixel_ok = np.zeros(n, dtype=bool)
-        caption_ok = np.zeros(n, dtype=bool)
-        # r6: one bulk tolist per column instead of per-row .iat —
-        # the Python loop then touches plain lists (a few µs/row saved
-        # across 80k rows, and no pandas block-manager calls in the
-        # hot loop)
-        ids = pdf["image_id"].tolist()
-        fmts = pdf["fmt"].tolist()
-        datas = pdf["bytes"].tolist()
-        caps = pdf["caption"].tolist()
-        for j in range(n):
-            image_id = ids[j]
-            fmt = fmts[j]
-            data = datas[j]
-            try:
-                i = int(image_id.split("_")[-1])
-                expected = row_params(i)
-                ref = render_image(image_id, expected["w"], expected["h"])
-                got = decode_image(bytes(data), fmt)
-                p = psnr(ref, got)
-                # +inf (exact match) → 999.0 display sentinel;
-                # -inf (shape mismatch) → -1.0 — np.isfinite alone would
-                # conflate the two and record a failure as a perfect score
-                if p == float("inf"):
-                    psnrs[j] = 999.0
-                elif p == float("-inf") or not np.isfinite(p):
-                    psnrs[j] = -1.0
-                else:
-                    psnrs[j] = p
-                pixel_ok[j] = (p == float("inf")) if fmt == "png" else (p >= PSNR_GATE_DB)
-                caption_ok[j] = caps[j] == expected["caption"]
-            except Exception:
-                pixel_ok[j] = False
-                caption_ok[j] = False
-        yield pd.DataFrame(
-            {
-                "image_id": ids,
-                "psnr_db": psnrs,
-                "pixel_ok": pixel_ok,
-                "caption_ok": caption_ok,
-            }
-        )
+
+def _check_row(image_id, data, fmt, caption):
+    expected = _expected(image_id)
+    if expected is None:  # no reference rendering for this id
+        return np.nan, False, False
+    ref = render_image(image_id, expected["w"], expected["h"])
+    p = codecs.psnr(ref, codecs.decode_image(data, fmt))
+    # +inf (exact match) → 999.0 display sentinel; -inf (shape mismatch)
+    # → -1.0 — np.isfinite alone would conflate the two and record a
+    # failure as a perfect score
+    if p == float("inf"):
+        psnr_db = 999.0
+    elif p == float("-inf") or not np.isfinite(p):
+        psnr_db = -1.0
+    else:
+        psnr_db = p
+    pixel_ok = (p == float("inf")) if fmt == "png" else (p >= PSNR_GATE_DB)
+    return psnr_db, pixel_ok, caption == expected["caption"]
+
+
+def _fault_row(image_id, data, fmt, caption):
+    # the caption check needs only the id, not the bytes
+    expected = _expected(image_id)
+    return np.nan, False, expected is not None and caption == expected["caption"]
+
+
+_check_batches = row_batches(_check_row, _fault_row, CHECK_SCHEMA)
 
 
 @dataclass
@@ -109,37 +98,12 @@ class RowInvariantRule(Rule):
 
     def violations(self, ctx: RuleContext) -> DataFrame:
         # one violation row PER failed check (a row failing both pixel
-        # and caption emits two rows) — explode an array of per-check
-        # structs, same pattern as SchemaRule; nulls (passing checks)
-        # compact away and explode drops empty arrays. ONE UDF pass.
-        checks = self.checks(ctx)
-        fails = F.array_compact(
-            F.array(
-                F.when(
-                    ~F.col("pixel_ok"),
-                    F.struct(
-                        F.lit("bytes").alias("column"),
-                        F.concat(
-                            F.lit("pixel mismatch psnr="),
-                            F.round(F.col("psnr_db"), 2).cast("string"),
-                        ).alias("detail"),
-                    ),
-                ),
-                F.when(
-                    ~F.col("caption_ok"),
-                    F.struct(
-                        F.lit("caption").alias("column"),
-                        F.lit("caption mismatch").alias("detail"),
-                    ),
-                ),
-            )
-        )
-        return checks.select(
-            F.col("image_id"), F.explode(fails).alias("f")
-        ).select(
-            F.lit(self.name).alias("rule"),
-            F.col("image_id").alias("key"),
-            F.col("f.column").alias("column"),
-            F.col("f.detail").alias("detail"),
-            ctx.bucket_of(F.col("image_id")).alias("bucket"),
-        )
+        # and caption emits two rows); ONE UDF pass
+        pixel_detail = F.when(
+            F.col("error").isNotNull(), F.concat(F.lit("pixel decode failed: "), "error")
+        ).otherwise(F.concat(F.lit("pixel mismatch psnr="),
+                             F.round("psnr_db", 2).cast("string")))
+        return check_violations(ctx, self.name, self.checks(ctx), "image_id", [
+            (~F.col("pixel_ok"), "bytes", pixel_detail),
+            (~F.col("caption_ok"), "caption", "caption mismatch"),
+        ])

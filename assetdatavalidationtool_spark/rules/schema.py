@@ -14,7 +14,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import Rule, RuleContext, violation_rows
+from .base import Rule, RuleContext, check_violations, violation_rows
 
 
 @dataclass
@@ -56,10 +56,7 @@ class SchemaRule(Rule):
         out = violation_rows(ctx.spark, table_level)
 
         # row-level: nullability + domain predicates — FUSED into a single
-        # scan. Each check becomes a conditional struct in one array;
-        # explode drops the nulls. One branch in the violations union
-        # regardless of column count (vs one scan per check, which at
-        # ~10 checks multiplies AQE stage-scheduling overhead ~10x).
+        # scan (check_violations).
         #
         # EXCEPTION — wide binary columns with ONLY a nullability check:
         # folding `bytes IS NULL` into the fused scan forces the scan to
@@ -82,54 +79,20 @@ class SchemaRule(Rule):
                 wide_null_specs.append(spec)
                 continue
             if not spec.nullable:
-                checks.append(
-                    F.when(
-                        F.col(spec.name).isNull(),
-                        F.struct(
-                            F.lit(spec.name).alias("column"),
-                            F.lit("null value").alias("detail"),
-                        ),
-                    )
-                )
+                checks.append((F.col(spec.name).isNull(), spec.name, "null value"))
             if spec.domain is not None:
-                checks.append(
-                    F.when(
-                        F.col(spec.name).isNotNull() & ~spec.domain,
-                        F.struct(
-                            F.lit(spec.name).alias("column"),
-                            F.lit("domain violation").alias("detail"),
-                        ),
-                    )
-                )
-        if not checks and not wide_null_specs:
-            return out
-        df_b = ctx.with_bucket(df)
+                checks.append((F.col(spec.name).isNotNull() & ~spec.domain,
+                               spec.name, "domain violation"))
         if checks:
-            fused = (
-                df_b.select(
-                    F.col(ctx.key_col).cast("string").alias("key"),
-                    F.col("bucket"),
-                    F.array_compact(F.array(*checks)).alias("_viol"),
-                )
-                .where(F.size("_viol") > 0)
-                .select(
-                    F.lit(self.name).alias("rule"),
-                    "key",
-                    F.explode("_viol").alias("v"),
-                    "bucket",
-                )
-                .select("rule", "key", F.col("v.column").alias("column"),
-                        F.col("v.detail").alias("detail"), "bucket")
-            )
-            out = out.unionByName(fused)
+            out = out.unionByName(check_violations(ctx, self.name, df, ctx.key_col, checks))
         for spec in wide_null_specs:
             out = out.unionByName(
-                df_b.where(F.col(spec.name).isNull()).select(
+                df.where(F.col(spec.name).isNull()).select(
                     F.lit(self.name).alias("rule"),
                     F.col(ctx.key_col).cast("string").alias("key"),
                     F.lit(spec.name).alias("column"),
                     F.lit("null value").alias("detail"),
-                    F.col("bucket"),
+                    ctx.bucket_of(F.col(ctx.key_col)).alias("bucket"),
                 )
             )
         return out

@@ -14,7 +14,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import Rule, RuleContext
+from .base import Rule, RuleContext, check_violations
 
 
 @dataclass
@@ -66,10 +66,9 @@ class StatsRule(Rule):
         ).select("s.metric", "s.column", "s.value")
 
     def violations(self, ctx: RuleContext) -> DataFrame:
-        out = ctx.empty_violations()
         if not self.bounds:
-            return out
-        # fused single-scan bound checks (same pattern as SchemaRule)
+            return ctx.empty_violations()
+        # fused single-scan bound checks (check_violations, as in SchemaRule)
         checks = []
         for c, (lo, hi) in self.bounds.items():
             cond = F.lit(False)
@@ -77,32 +76,6 @@ class StatsRule(Rule):
                 cond = cond | (F.col(c) < F.lit(lo))
             if hi is not None:
                 cond = cond | (F.col(c) > F.lit(hi))
-            checks.append(
-                F.when(
-                    F.col(c).isNotNull() & cond,
-                    F.struct(
-                        F.lit(c).alias("column"),
-                        F.concat(
-                            F.lit("out of bounds: "), F.col(c).cast("string")
-                        ).alias("detail"),
-                    ),
-                )
-            )
-        df_b = ctx.with_bucket(ctx.images)
-        fused = (
-            df_b.select(
-                F.col(ctx.key_col).cast("string").alias("key"),
-                F.col("bucket"),
-                F.array_compact(F.array(*checks)).alias("_viol"),
-            )
-            .where(F.size("_viol") > 0)
-            .select(
-                F.lit(self.name).alias("rule"),
-                "key",
-                F.explode("_viol").alias("v"),
-                "bucket",
-            )
-            .select("rule", "key", F.col("v.column").alias("column"),
-                    F.col("v.detail").alias("detail"), "bucket")
-        )
-        return out.unionByName(fused)
+            checks.append((F.col(c).isNotNull() & cond, c,
+                           F.concat(F.lit("out of bounds: "), F.col(c).cast("string"))))
+        return check_violations(ctx, self.name, ctx.images, ctx.key_col, checks)

@@ -18,24 +18,29 @@ nobody re-verifies every frame of every clip; the invariant is a
 statistical gate, and the stride is deterministic so violations are
 reproducible.
 
-Execution shape: ``mapInPandas`` in the scan stage — video bytes are
+Execution shape: ``mapInPandas`` in the scan stage through the shared
+media harness (``operators.multimodal.row_batches``) — video bytes are
 decoded where they are read and never enter a shuffle; the UDF output
-is a few flags per row. Run with ``RuleContext(images=videos_df,
-key_col="video_id")``.
+is a few flags per row. A payload that fails to decode is a per-row
+violation naming the codec error class (``video decode failed:
+ValueError``); any other exception fails the task. Run with
+``RuleContext(images=videos_df, key_col="video_id")``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .base import Rule, RuleContext
+from .. import codecs
+from ..datagen import id_index, render_video
+from ..operators.multimodal import row_batches
+from .base import Rule, RuleContext, check_violations
 
 VIDEO_CHECK_SCHEMA = T.StructType(
     [
@@ -44,6 +49,7 @@ VIDEO_CHECK_SCHEMA = T.StructType(
         T.StructField("meta_ok", T.BooleanType(), True),
         T.StructField("frames_ok", T.BooleanType(), True),
         T.StructField("min_psnr_db", T.DoubleType(), True),
+        T.StructField("error", T.StringType(), True),
     ]
 )
 
@@ -53,72 +59,30 @@ VIDEO_CHECK_SCHEMA = T.StructType(
 PSNR_GATE_DB = 25.0
 
 
+def _check_video(check_every_n, video_id, data, n_frames, fps):
+    frames, got_fps = codecs.decode_y4m(data)
+    meta_ok = bool(len(frames) == n_frames and got_fps == fps)
+    # no frames, or an id naming no reference: a per-row frame mismatch
+    if not frames or id_index(video_id) is None:
+        return True, meta_ok, False, np.nan
+    h, w = frames[0].shape[:2]
+    ref = render_video(video_id, len(frames), w, h).astype(np.float64)
+    worst = float("inf")
+    for idx in range(0, len(frames), check_every_n):
+        got = frames[idx].astype(np.float64)
+        if got.shape != ref[idx].shape:
+            worst = -1.0
+            break
+        mse = ((got - ref[idx]) ** 2).mean()
+        p = 999.0 if mse == 0 else 10 * np.log10(255.0**2 / mse)
+        worst = min(worst, p)
+    min_psnr = -1.0 if worst == float("inf") else round(worst, 2)
+    return True, meta_ok, bool(worst >= PSNR_GATE_DB), min_psnr
+
+
 def _video_check_batches(check_every_n: int):
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from assetdatavalidationtool_spark.codecs import decode_y4m
-        from assetdatavalidationtool_spark.datagen import render_video
-
-        for pdf in it:
-            n = len(pdf)
-            ids = pdf["video_id"].tolist()
-            decode_ok = np.zeros(n, dtype=bool)
-            meta_ok = np.zeros(n, dtype=object)
-            frames_ok = np.zeros(n, dtype=object)
-            min_psnr = np.full(n, np.nan)
-            for j in range(n):
-                try:
-                    frames, fps = decode_y4m(bytes(pdf["bytes"].iat[j]))
-                    decode_ok[j] = True
-                except Exception:
-                    meta_ok[j] = None
-                    frames_ok[j] = None
-                    continue
-                meta_ok[j] = bool(
-                    len(frames) == pdf["n_frames"].iat[j]
-                    and fps == pdf["fps"].iat[j]
-                )
-                if not frames:
-                    frames_ok[j] = False
-                    continue
-                try:
-                    # render_video parses the numeric suffix of
-                    # video_id; a decodable row with an unexpected id
-                    # must degrade to a per-row violation, not fail
-                    # the Spark task.
-                    h, w = frames[0].shape[:2]
-                    ref = render_video(ids[j], len(frames), w, h).astype(
-                        np.float64
-                    )
-                    worst = float("inf")
-                    for idx in range(0, len(frames), check_every_n):
-                        got = frames[idx].astype(np.float64)
-                        if got.shape != ref[idx].shape:
-                            worst = -1.0
-                            break
-                        mse = ((got - ref[idx]) ** 2).mean()
-                        p = (
-                            999.0
-                            if mse == 0
-                            else 10 * np.log10(255.0**2 / mse)
-                        )
-                        worst = min(worst, p)
-                    min_psnr[j] = (
-                        -1.0 if worst == float("inf") else round(worst, 2)
-                    )
-                    frames_ok[j] = bool(worst >= PSNR_GATE_DB)
-                except Exception:
-                    frames_ok[j] = False
-            yield pd.DataFrame(
-                {
-                    "video_id": ids,
-                    "decode_ok": decode_ok,
-                    "meta_ok": meta_ok,
-                    "frames_ok": frames_ok,
-                    "min_psnr_db": min_psnr,
-                }
-            )
-
-    return batches
+    return row_batches(partial(_check_video, check_every_n),
+                       (False, None, None, np.nan), VIDEO_CHECK_SCHEMA)
 
 
 @dataclass
@@ -133,44 +97,12 @@ class VideoInvariantRule(Rule):
         )
 
     def violations(self, ctx: RuleContext) -> DataFrame:
-        checks = self.checks(ctx)
-        fails = F.array_compact(
-            F.array(
-                F.when(
-                    ~F.col("decode_ok"),
-                    F.struct(
-                        F.lit("bytes").alias("column"),
-                        F.lit("video decode failed").alias("detail"),
-                    ),
-                ),
-                F.when(
-                    F.col("decode_ok") & ~F.col("meta_ok"),
-                    F.struct(
-                        F.lit("n_frames,fps").alias("column"),
-                        F.lit("declared metadata != decoded").alias("detail"),
-                    ),
-                ),
-                F.when(
-                    F.col("decode_ok") & ~F.col("frames_ok"),
-                    F.struct(
-                        F.lit("bytes").alias("column"),
-                        F.concat(
-                            F.lit("frame mismatch min_psnr="),
-                            # null when the reference render itself
-                            # failed (e.g. unparseable video_id)
-                            F.coalesce(
-                                F.col("min_psnr_db").cast("string"),
-                                F.lit("n/a"),
-                            ),
-                        ).alias("detail"),
-                    ),
-                ),
-            )
-        )
-        return checks.select(F.col("video_id"), F.explode(fails).alias("f")).select(
-            F.lit(self.name).alias("rule"),
-            F.col("video_id").alias("key"),
-            F.col("f.column").alias("column"),
-            F.col("f.detail").alias("detail"),
-            ctx.bucket_of(F.col("video_id")).alias("bucket"),
-        )
+        ok = F.col("decode_ok")
+        # min_psnr_db is null when no reference exists for the row
+        min_psnr = F.coalesce(F.col("min_psnr_db").cast("string"), F.lit("n/a"))
+        return check_violations(ctx, self.name, self.checks(ctx), "video_id", [
+            (~ok, "bytes", F.concat(F.lit("video decode failed: "), "error")),
+            (ok & ~F.col("meta_ok"), "n_frames,fps", "declared metadata != decoded"),
+            (ok & ~F.col("frames_ok"), "bytes",
+             F.concat(F.lit("frame mismatch min_psnr="), min_psnr)),
+        ])

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import IMAGES_SCHEMA
-from ..rules.base import Rule, RuleContext
+from ..rules.base import Rule, RuleContext, path_missing
 
 
 def stream_validate(
@@ -402,7 +402,7 @@ def stream_dedup_exact(
             # swallowing it would skip the anti-join and let previously
             # seen digests back in, permanently breaking the ledger's
             # one-row-per-digest invariant.
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
+            if not path_missing(e):
                 raise
             seen = None
         kept = batch if seen is None else batch.join(

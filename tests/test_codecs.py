@@ -119,16 +119,50 @@ def test_y4m_c444_roundtrip_within_one(frames, fps):
         assert np.abs(a.astype(np.int16) - b.astype(np.int16)).max() <= 1
 
 
+_DECODERS = (decode_png, lambda b: decode_image(b, "jpeg"), decode_wav, decode_y4m)
+
+
 @settings(max_examples=20, deadline=None)
 @given(data=st.binary(min_size=0, max_size=200))
 def test_decoders_never_hang_on_garbage(data):
-    """Arbitrary bytes must raise cleanly (the rules' per-row degrade
-    path depends on decoders failing fast, never crashing the worker)."""
-    for dec in (decode_png, lambda b: decode_wav(b), lambda b: decode_y4m(b)):
+    """Arbitrary bytes must raise cleanly and only a codec data error
+    (the media harness turns exactly ``DATA_ERRORS`` into row faults;
+    anything else would fail the Spark task)."""
+    from assetdatavalidationtool_spark.codecs import DATA_ERRORS
+
+    for dec in _DECODERS:
         try:
             dec(data)
-        except Exception:
+        except DATA_ERRORS:
             pass
+
+
+def test_decoders_raise_only_data_errors_on_corrupt_payloads():
+    """Every truncation and every single-byte flip of a valid PNG,
+    stub-lossy, WAV and Y4M payload either decodes or raises one of
+    ``DATA_ERRORS`` — including a Y4M header with a zero frame-rate
+    denominator."""
+    from assetdatavalidationtool_spark.codecs import DATA_ERRORS
+
+    img = render_image("img_000000000005", 16, 8)
+    video = encode_y4m(np.stack([img, img[::-1]]), subsampling="444")
+    with pytest.raises(ValueError, match="frame rate"):
+        decode_y4m(video.replace(b" F30:1 ", b" F30:0 "))
+    png, jpeg, wav, y4m = _DECODERS
+    for dec, data in [
+        (png, encode_png(img)),
+        (jpeg, encode_image(img, "jpeg")),
+        (wav, encode_wav(np.arange(-100, 100, dtype=np.int16) * 300)),
+        (y4m, video),
+        (y4m, encode_y4m(np.stack([img]), subsampling="420")),
+    ]:
+        variants = [data[:k] for k in range(len(data))]
+        variants += [data[:k] + bytes([data[k] ^ 0xFF]) + data[k + 1:] for k in range(len(data))]
+        for v in variants:
+            try:
+                dec(v)
+            except DATA_ERRORS:
+                pass
 
 
 def test_c_codec_seam_prefers_c_path_and_is_bit_identical(monkeypatch):

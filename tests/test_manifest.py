@@ -177,6 +177,28 @@ def test_verdict_readback_schema_error_raises(spark, data, tmp_path_factory):
     assert run.read_manifest() is None
 
 
+def test_unreadable_manifest_or_fingerprints_raise(spark, tmp_path_factory):
+    """Only a MISSING manifest or fingerprints dir means "none yet". A
+    dir that exists but holds a non-parquet file must raise — not pass
+    as a fresh run (every bucket rerun) or a base without fingerprints
+    (silent full recompute)."""
+    import os
+
+    out = str(tmp_path_factory.mktemp("run_unreadable"))
+    run = ValidationRun(spark, out, [UniquenessRule(["image_id"])],
+                        num_buckets=8, run_id="rU")
+    assert run.read_manifest() is None
+    assert run._unchanged_buckets([], "b0") == set()
+    for d in (f"{out}/manifest", f"{out}/fingerprints/run_id=b0"):
+        os.makedirs(d)
+        with open(f"{d}/part-0.parquet", "wb") as f:
+            f.write(b"not parquet at all")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        run.read_manifest()
+    with pytest.raises(Exception, match="not a Parquet file"):
+        run._unchanged_buckets([], "b0")
+
+
 def test_audio_video_rules_are_bucket_aligned():
     """ADVICE r03: audio/video invariant rules bucket by their fixed id
     column, so they resume at bucket grain iff the run's key_col is that

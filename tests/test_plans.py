@@ -6,17 +6,25 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from assetdatavalidationtool_spark.contract import QUERIES
-from assetdatavalidationtool_spark.datagen import generate_captions, generate_images
+from assetdatavalidationtool_spark.datagen import (
+    generate_captions,
+    generate_clips,
+    generate_images,
+    generate_videos,
+)
 from assetdatavalidationtool_spark.rules import (
+    AudioInvariantRule,
     ReferentialRule,
     RowInvariantRule,
     RuleContext,
     UniquenessRule,
+    VideoInvariantRule,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -52,13 +60,31 @@ def test_referential_scans_key_only(ctx):
             assert "image_id" in line
 
 
-def test_row_invariant_decodes_in_scan_stage(ctx):
-    """The pixel UDF is a narrow transformation: zero exchanges, and
-    the scan reads exactly the four columns the check needs."""
-    p = plan(RowInvariantRule().checks(ctx))
+@pytest.fixture(scope="module")
+def media_dir(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("mediadata")
+    generate_clips(spark, 8, partitions=2, n_samples=200).write.parquet(str(d / "clips"))
+    generate_videos(spark, 4, partitions=2, n_frames=2, w=16, h=8).write.parquet(
+        str(d / "videos"))
+    return d
+
+
+@pytest.mark.parametrize("rule, table, cols", [
+    (RowInvariantRule(), None, ["image_id", "bytes", "fmt", "caption"]),
+    (AudioInvariantRule(), "clips", ["clip_id", "bytes", "sample_rate", "n_samples"]),
+    (VideoInvariantRule(), "videos", ["video_id", "bytes", "n_frames", "fps"]),
+], ids=["image", "audio", "video"])
+def test_row_invariant_decodes_in_scan_stage(ctx, media_dir, rule, table, cols):
+    """Each per-row media UDF is a narrow transformation: zero
+    exchanges, and the scan reads exactly the columns the check needs."""
+    if table is not None:
+        ctx = RuleContext(spark=ctx.spark, key_col=cols[0], num_buckets=8,
+                          images=ctx.spark.read.parquet(str(media_dir / table)))
+    p = plan(rule.checks(ctx))
     assert p.count("Exchange") == 0
     read = [l for l in p.splitlines() if "ReadSchema" in l]
-    assert read and "bytes" in read[0] and "phash" not in read[0]
+    assert len(read) == 1
+    assert set(re.findall(r"(\w+):", read[0].split("struct<", 1)[1])) == set(cols)
 
 
 def test_uniqueness_partial_final_aggregation(ctx):

@@ -250,6 +250,106 @@ def test_row_invariant_one_violation_per_failed_check(spark):
     assert checks[good["image_id"]]["psnr_db"] in (999.0,) or checks[good["image_id"]]["psnr_db"] >= 40.0
 
 
+def test_row_invariant_undecodable_bytes_keep_caption_check(spark):
+    """Bytes that do not decode are ONE bytes violation naming the codec
+    error class; the caption is still compared (the id alone names the
+    expected caption), so a correct caption adds no violation and a
+    wrong one still does."""
+    from assetdatavalidationtool_spark.datagen import IMAGES_SCHEMA, make_row
+
+    right = make_row(7)
+    right["bytes"] = bytes(range(40))
+    wrong = make_row(8)
+    wrong["bytes"] = bytes(range(40))
+    wrong["caption"] = "WRONG caption"
+    images = spark.createDataFrame([right, wrong], IMAGES_SCHEMA)
+    ctx = RuleContext(spark=spark, images=images, captions=None, num_buckets=8)
+    vio = sorted((r["key"], r["column"], r["detail"])
+                 for r in RowInvariantRule().violations(ctx).collect())
+    assert vio == [
+        (right["image_id"], "bytes", "pixel decode failed: ValueError"),
+        (wrong["image_id"], "bytes", "pixel decode failed: ValueError"),
+        (wrong["image_id"], "caption", "caption mismatch"),
+    ]
+
+
+def _media_batch(kind):
+    """(batch function, codec it calls, fault flag column, one clean
+    input row as a pandas frame) for each per-row media rule."""
+    import pandas as pd
+
+    from assetdatavalidationtool_spark.datagen import (
+        make_audio_row,
+        make_row,
+        make_video_row,
+    )
+    from assetdatavalidationtool_spark.rules import audio, row_invariant, video
+
+    if kind == "image":
+        cols = ["image_id", "bytes", "fmt", "caption"]
+        return row_invariant._check_batches, "decode_image", "pixel_ok", \
+            pd.DataFrame([make_row(1)])[cols]
+    if kind == "audio":
+        cols = ["clip_id", "bytes", "sample_rate", "n_samples"]
+        return audio._audio_check_batches, "decode_wav", "decode_ok", \
+            pd.DataFrame([make_audio_row(1, n_samples=200)])[cols]
+    cols = ["video_id", "bytes", "n_frames", "fps"]
+    return video._video_check_batches(2), "decode_y4m", "decode_ok", \
+        pd.DataFrame([make_video_row(1, n_frames=2, w=16, h=8)])[cols]
+
+
+MEDIA = ["image", "audio", "video"]
+
+
+@pytest.mark.parametrize("kind", MEDIA)
+def test_media_rule_engine_error_fails_loud(kind, monkeypatch):
+    """In-process, no Spark: an exception outside the codec data-error
+    set is an engine fault and must propagate, never pose as a row
+    violation."""
+    from assetdatavalidationtool_spark import codecs
+
+    batches, codec, flag, pdf = _media_batch(kind)
+    assert next(batches(iter([pdf])))[flag].tolist() == [True]
+
+    def engine_bug(*args):
+        raise TypeError("engine bug")
+
+    monkeypatch.setattr(codecs, codec, engine_bug)
+    with pytest.raises(TypeError, match="engine bug"):
+        list(batches(iter([pdf])))
+
+
+@pytest.mark.parametrize("kind", MEDIA)
+@pytest.mark.parametrize("fault, error", [
+    ("ValueError", "ValueError"),
+    ("zlib.error", "zlib.error"),
+    ("struct.error", "struct.error"),
+    (None, "null bytes"),
+])
+def test_media_rule_data_error_is_row_fault(kind, fault, error, monkeypatch):
+    """In-process, no Spark: a codec data error or a null payload is a
+    per-row fault that records its error class."""
+    import struct
+    import zlib
+
+    from assetdatavalidationtool_spark import codecs
+
+    batches, codec, flag, pdf = _media_batch(kind)
+    if fault is None:
+        pdf["bytes"] = None
+    else:
+        exc = {"ValueError": ValueError, "zlib.error": zlib.error,
+               "struct.error": struct.error}[fault]
+
+        def corrupt(*args):
+            raise exc("bad payload")
+
+        monkeypatch.setattr(codecs, codec, corrupt)
+    out = next(batches(iter([pdf])))
+    assert out[flag].tolist() == [False]
+    assert out["error"].tolist() == [error]
+
+
 def test_audio_invariant_rule_counts(spark):
     """AudioInvariantRule over a faulted clips table: closed-form
     violation counts. n=40 with 3 corrupt (decode), 4 clipped (ref
