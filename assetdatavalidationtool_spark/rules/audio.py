@@ -36,13 +36,12 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codecs
 from ..datagen import id_index, render_audio
 from ..operators.multimodal import row_batches
-from .base import Rule, RuleContext, check_violations
+from .base import Rule, RuleContext, check_violations, sql_lit
 
 AUDIO_CHECK_SCHEMA = T.StructType(
     [
@@ -88,11 +87,11 @@ class AudioInvariantRule(Rule):
         )
 
     def violations(self, ctx: RuleContext) -> DataFrame:
-        ok = F.col("decode_ok")
-        return check_violations(ctx, self.name, self.checks(ctx), "clip_id", [
-            (~ok, "bytes", F.concat(F.lit("audio decode failed: "), "error")),
-            (ok & ~F.col("meta_ok"), "sample_rate,n_samples", "declared metadata != decoded"),
-            (ok & ~F.col("ref_ok"), "bytes", "sample mismatch vs reference"),
-            (ok & (F.col("clip_frac") > self.max_clip_frac), "bytes",
-             F.concat(F.lit("clipping frac="), F.round("clip_frac", 4).cast("string"))),
+        return check_violations(ctx, self.checks(ctx), "clip_id", [
+            (self.name, "NOT decode_ok", "bytes", "concat('audio decode failed: ', error)"),
+            (self.name, "decode_ok AND NOT meta_ok", "sample_rate,n_samples",
+             "'declared metadata != decoded'"),
+            (self.name, "decode_ok AND NOT ref_ok", "bytes", "'sample mismatch vs reference'"),
+            (self.name, f"decode_ok AND clip_frac > {sql_lit(self.max_clip_frac)}", "bytes",
+             "concat('clipping frac=', CAST(round(clip_frac, 4) AS STRING))"),
         ])

@@ -15,6 +15,7 @@ partition-grain verdict.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,35 +84,65 @@ class RuleContext:
         return violation_rows(self.spark)
 
 
+def sql_name(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_lit(value: str | float | int) -> str:
+    """``value`` as a SQL literal of the type ``F.lit`` would give it.
+    A float goes through a string cast: a bare ``1.5`` is DECIMAL in SQL."""
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(value, float):
+        return f"CAST({sql_lit(repr(value))} AS DOUBLE)"
+    return str(value)
+
+
+def bucket_sql(ctx: RuleContext, df: DataFrame, key: str) -> tuple[DataFrame, str]:
+    """``(df, SQL text)`` of the bucket of the SQL expression ``key``.
+
+    The default bucket is SQL text. A custom ``ctx.bucket_expr`` stays a
+    Column: it is projected onto ``df`` as ``__bucket`` and referenced.
+    """
+    if ctx.bucket_expr is None:
+        return df, f"CAST(pmod(xxhash64({key}), {ctx.num_buckets}) AS BIGINT)"
+    return df.select("*", ctx.bucket_of(F.expr(key)).alias("__bucket")), "`__bucket`"
+
+
+def union_violations(ctx: RuleContext, parts: list[DataFrame]) -> DataFrame:
+    """The union of violation frames; an empty list gives the empty seed."""
+    return reduce(DataFrame.unionByName, parts) if parts else ctx.empty_violations()
+
+
 def check_violations(
-    ctx: RuleContext, rule: str, df: DataFrame, key: str,
-    checks: list[tuple[F.Column, str, F.Column | str]],
+    ctx: RuleContext, df: DataFrame, key: str,
+    checks: list[tuple[str, str, str, str]], bucket_key: str | None = None,
 ) -> DataFrame:
     """One violation row per failed check per row of ``df``, all checks
     fused into a single scan.
 
-    Each ``(failed, column, detail)`` becomes a conditional
-    ``struct(column, detail)`` in one array (``detail`` a literal or a
-    Column); passing checks compact away, rows passing every check are
-    filtered out, and the explode emits the rest keyed and bucketed by
-    ``key``. One branch in the violations union regardless of the check
+    ``key`` is a SQL expression over ``df`` (a column name quoted with
+    :func:`sql_name`); rows are bucketed by ``bucket_key``, default
+    ``key``. Each check is ``(rule, failed, column, detail)`` with
+    ``failed`` and ``detail`` SQL text over ``df``. Each becomes a
+    ``CASE WHEN failed THEN named_struct(rule, column, detail) END`` in
+    one array; passing checks compact away and the ``inline`` emits the
+    rest. One branch in the violations union regardless of the check
     count (vs one scan per check, which at ~10 checks multiplies AQE
-    stage-scheduling overhead ~10x).
+    stage-scheduling overhead ~10x). The plan is built from SQL text:
+    a few Py4J calls, where a Column tree costs one call per node.
     """
-    fails = F.array_compact(F.array(*[
-        F.when(failed, F.struct(
-            F.lit(column).alias("column"),
-            (F.lit(detail) if isinstance(detail, str) else detail).alias("detail"),
-        ))
-        for failed, column, detail in checks
-    ]))
+    df, bucket = bucket_sql(ctx, df, bucket_key or key)
+    structs = ", ".join(
+        f"CASE WHEN {failed} THEN named_struct('rule', {sql_lit(rule)}, "
+        f"'column', {sql_lit(column)}, 'detail', {detail}) END"
+        for rule, failed, column, detail in checks
+    )
     return (
-        df.select(F.col(key).cast("string").alias("key"),
-                  ctx.bucket_of(F.col(key)).alias("bucket"), fails.alias("_viol"))
-        .where(F.size("_viol") > 0)
-        .select(F.lit(rule).alias("rule"), "key", F.explode("_viol").alias("v"), "bucket")
-        .select("rule", "key", F.col("v.column").alias("column"),
-                F.col("v.detail").alias("detail"), "bucket")
+        df.selectExpr(f"CAST({key} AS STRING) AS key", f"{bucket} AS bucket",
+                      f"inline(array_compact(array({structs})))")
+        .selectExpr("rule", "key", "`column`", "detail", "bucket")
     )
 
 
@@ -133,17 +164,84 @@ class Rule:
         return None
 
 
+class KeyRule(Rule):
+    """A rule answered from the images side's row count per key value.
+
+    Key rules with the same ``key_columns`` and ``bucket_key`` share
+    one aggregate (:func:`key_violations`). ``key_checks`` are
+    :func:`check_violations` checks over its columns: ``__n``, the
+    images rows holding the key (NULL for a key only captions hold),
+    and, when ``reads_captions`` and captions exist, ``__cap`` (TRUE
+    when captions hold the key).
+    """
+
+    key_columns: list[str]
+    reads_captions = False
+
+    def bucket_key(self, ctx: RuleContext) -> str:
+        raise NotImplementedError
+
+    def key_salt(self) -> int | None:
+        """Salt buckets for a two-phase count, or None for one phase."""
+        return None
+
+    def key_checks(self, ctx: RuleContext) -> list[tuple[str, str, str, str]]:
+        raise NotImplementedError
+
+    def violations(self, ctx: RuleContext) -> DataFrame:
+        return key_violations(ctx, [self])
+
+
+def key_violations(ctx: RuleContext, rules: list[KeyRule]) -> DataFrame:
+    """Violations of key rules on the same key columns and bucket key,
+    from ONE images-side ``count`` per key over the rows where every key
+    column is non-null. Only the key columns are read; map-side partial
+    aggregation shrinks each side to distinct keys before the exchange.
+
+    A salted rule makes the count two-phase: a partial count per (key,
+    salt) then a sum per key, so one hot key's rows spread over ~salt
+    reducers. A rule reading captions joins the distinct non-null
+    caption keys to the counts full-outer (set semantics, matching the
+    reference's HashSets): the one join serves every rule in the group.
+    """
+    cols = rules[0].key_columns
+    names = [sql_name(c) for c in cols]
+    counts = ctx.images.selectExpr(*names).where(" AND ".join(f"{n} IS NOT NULL" for n in names))
+    salt = next((r.key_salt() for r in rules if r.key_salt()), None)
+    if salt is None:
+        counts = counts.groupBy(*names).agg(F.expr("count(1) AS __n"))
+    else:
+        counts = (
+            counts.selectExpr("*", f"pmod(monotonically_increasing_id(), {salt}) AS __salt")
+            .groupBy(*names, "__salt").agg(F.expr("count(1) AS __c"))
+            .groupBy(*names).agg(F.expr("sum(__c) AS __n"))
+        )
+    if ctx.captions is not None and any(r.reads_captions for r in rules):
+        caps = (ctx.captions.selectExpr(names[0]).where(f"{names[0]} IS NOT NULL")
+                .groupBy(names[0]).agg(F.expr("true AS __cap")))
+        counts = counts.join(caps, cols[0], "full_outer")
+    checks = [c for r in rules for c in r.key_checks(ctx)]
+    if not checks:
+        return ctx.empty_violations()
+    key = names[0] if len(names) == 1 else (
+        "concat_ws('|', " + ", ".join(f"CAST({n} AS STRING)" for n in names) + ")")
+    return check_violations(ctx, counts, key, checks, rules[0].bucket_key(ctx))
+
+
 class RuleSet:
     """Compile + run rules; produce violations, verdicts, metrics.
 
     Scale notes: the violations union is lazy — one plan per rule, the
-    images scan shared where rules read the same columns, empty seeds
-    pruned (:func:`violation_rows`). Verdicts are ONE ``groupBy(rule,
-    bucket)`` over the persisted violations (a mark each) and the
-    per-bucket row counts exploded over the rule names — no join. Its
-    rules x buckets groups are few, so partial/final hash aggregation
-    handles it map-side. Only buckets holding image rows, and the
-    table-level bucket -1, get a verdict.
+    images scan shared where rules read the same columns, and uniqueness
+    and referential rules on one key reading ONE per-key count
+    (:func:`key_violations`); empty seeds are pruned
+    (:func:`violation_rows`). Verdicts are ONE ``groupBy(rule, bucket)``
+    over the persisted violations (a mark each) and the per-bucket row
+    counts exploded over the rule names — no join. Its rules x buckets
+    groups are few, so partial/final hash aggregation handles it
+    map-side. Only buckets holding image rows, and the table-level
+    bucket -1, get a verdict. Every engine-built expression is SQL text,
+    so building the plans costs a few Py4J calls per rule.
     """
 
     def __init__(self, rules: list[Rule]):
@@ -153,9 +251,14 @@ class RuleSet:
         self.rules = rules
 
     def run(self, ctx: RuleContext, persist: bool = True) -> dict[str, DataFrame]:
-        vio = ctx.empty_violations()
+        # key rules on the same key share one aggregate (key_violations)
+        parts, groups = [], {}
         for r in self.rules:
-            vio = vio.unionByName(r.violations(ctx))
+            if isinstance(r, KeyRule):
+                groups.setdefault((tuple(r.key_columns), r.bucket_key(ctx)), []).append(r)
+            else:
+                parts.append(r.violations(ctx))
+        vio = union_violations(ctx, parts + [key_violations(ctx, g) for g in groups.values()])
         if persist:
             # violations feed BOTH the violations sink and the verdict
             # aggregate; without persistence every downstream action
@@ -167,34 +270,29 @@ class RuleSet:
         # the verdict denominator (rows per bucket) once per rule, plus one
         # mark per violation; table-level violations (no key → no bucket)
         # get reserved bucket -1 so verdict totals reconcile with them
-        names = F.array(*[F.lit(r.name) for r in self.rules])
-        row_counts = ctx.with_bucket(ctx.images.select(ctx.key_col)).groupBy("bucket").count()
+        names = ", ".join(sql_lit(r.name) for r in self.rules)
+        images, bucket = bucket_sql(ctx, ctx.images, sql_name(ctx.key_col))
+        row_counts = images.selectExpr(f"{bucket} AS bucket").groupBy("bucket").count()
         verdicts = (
-            row_counts.select(F.explode(names).alias("rule"), "bucket",
-                              F.col("count").alias("rows"), F.lit(0).alias("vio"),
-                              F.lit(True).alias("has_rows"))
-            .unionByName(vio.select("rule", F.coalesce("bucket", F.lit(-1)).alias("bucket"),
-                                    F.lit(0).cast("long").alias("rows"), F.lit(1).alias("vio"),
-                                    F.lit(False).alias("has_rows")))
+            row_counts.selectExpr(f"explode(array({names})) AS rule", "bucket",
+                                  "count AS `rows`", "0 AS vio", "true AS has_rows")
+            .unionByName(vio.selectExpr("rule", "coalesce(bucket, -1) AS bucket",
+                                        "CAST(0 AS BIGINT) AS `rows`", "1 AS vio",
+                                        "false AS has_rows"))
             .groupBy("rule", "bucket")
-            .agg(F.sum("rows").alias("rows_scanned"), F.sum("vio").alias("violation_count"),
-                 F.max("has_rows").alias("has_rows"))
-            .where((F.col("bucket") < 0) | F.col("has_rows"))
-            .select(F.lit(ctx.run_id).alias("run_id"), "rule", "bucket", "rows_scanned",
-                    "violation_count", (F.col("violation_count") == 0).alias("pass"))
+            .agg(F.expr("sum(`rows`) AS rows_scanned"), F.expr("sum(vio) AS violation_count"),
+                 F.expr("max(has_rows) AS has_rows"))
+            .where("bucket < 0 OR has_rows")
+            .selectExpr(f"{sql_lit(ctx.run_id)} AS run_id", "rule", "bucket", "rows_scanned",
+                        "violation_count", "violation_count = 0 AS `pass`")
         )
 
         metrics = None
         for r in self.rules:
             m = r.metrics(ctx)
             if m is not None:
-                m = m.select(
-                    F.lit(ctx.run_id).alias("run_id"),
-                    F.lit(r.name).alias("rule"),
-                    F.col("metric"),
-                    F.col("column"),
-                    F.col("value").cast("double"),
-                )
+                m = m.selectExpr(f"{sql_lit(ctx.run_id)} AS run_id", f"{sql_lit(r.name)} AS rule",
+                                 "metric", "`column`", "CAST(value AS DOUBLE) AS value")
                 metrics = m if metrics is None else metrics.unionByName(m)
 
         return {"violations": vio, "verdicts": verdicts, "metrics": metrics}

@@ -2,62 +2,56 @@
 
 Direct scale analog of the reference's MissingByFile set-difference
 (Validator.cs:86-91: ``allKeys − keys(source)``) and presence matrix
-(Validator.cs:67-79): each direction is a ``left_anti`` join on the key,
-emitting one violation row per unmatched key.
+(Validator.cs:67-79): one violation row per key that one side holds
+and the other lacks.
 
-Scale notes: both sides are projected to the key column *before* the
-join (column pruning keeps image bytes out of the shuffle entirely);
-the join shuffles only (key) pairs. With AQE on, a small side (e.g. a
-dimension-sized caption subset) goes broadcast automatically; we also
-pre-repartition both sides on the key so the two anti-joins reuse one
-exchange (north_rule: explicit repartitioning).
+Scale notes: both directions come from ONE full-outer join of the
+images side's per-key row count with the distinct non-null caption
+keys (``base.key_violations``; set semantics, matching the reference's
+HashSets). Each side is projected to the key column before its
+aggregate, so image bytes never leave the scan, and map-side partial
+aggregation shrinks each side to distinct keys before its exchange. In
+a ``RuleSet`` a ``UniquenessRule`` on the same key reads the same
+images-side count, so the pair costs two key exchanges, not three. On
+inputs bucketed by the key both aggregates and the join are
+exchange-free; with AQE on, a small side goes broadcast automatically.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from .base import KeyRule, RuleContext, sql_name
 
-from .base import Rule, RuleContext
+DIRECTIONS = ("images->captions", "captions->images", "both")
 
 
 @dataclass
-class ReferentialRule(Rule):
+class ReferentialRule(KeyRule):
     key: str = "image_id"
-    direction: str = "both"  # "images->captions", "captions->images", "both"
+    direction: str = "both"  # one of DIRECTIONS
     name: str = "referential"
 
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        if ctx.captions is None:
-            return ctx.empty_violations()
-        k = self.key
-        # Both directions from ONE full-outer join of the two distinct key
-        # sets (set semantics, matching the reference's HashSets) instead
-        # of two anti-joins — halves the shuffle count. Map-side partial
-        # aggregation shrinks each side to distinct keys before the
-        # exchange; only the key column ever moves (bytes stay in the scan).
-        img_keys = (
-            ctx.images.select(F.col(k)).where(F.col(k).isNotNull())
-            .groupBy(k).agg(F.lit(True).alias("_img"))
-        )
-        cap_keys = (
-            ctx.captions.select(F.col(k)).where(F.col(k).isNotNull())
-            .groupBy(k).agg(F.lit(True).alias("_cap"))
-        )
-        joined = img_keys.join(cap_keys, k, "full_outer")
+    reads_captions = True
 
-        want_caption = self.direction in ("images->captions", "both")
-        want_image = self.direction in ("captions->images", "both")
-        detail = (
-            F.when(F.col("_cap").isNull() & F.lit(want_caption), "missing caption row")
-            .when(F.col("_img").isNull() & F.lit(want_image), "missing image row")
-        )
-        return joined.where(detail.isNotNull()).select(
-            F.lit(self.name).alias("rule"),
-            F.col(k).cast("string").alias("key"),
-            F.lit(k).alias("column"),
-            detail.alias("detail"),
-            ctx.bucket_of(F.col(k)).alias("bucket"),
-        )
+    def __post_init__(self):
+        if self.direction not in DIRECTIONS:
+            raise ValueError(
+                f"ReferentialRule direction must be one of {DIRECTIONS}, got {self.direction!r}")
+
+    @property
+    def key_columns(self) -> list[str]:
+        return [self.key]
+
+    def bucket_key(self, ctx: RuleContext) -> str:
+        return sql_name(self.key)
+
+    def key_checks(self, ctx: RuleContext) -> list[tuple[str, str, str, str]]:
+        if ctx.captions is None:
+            return []
+        checks = []
+        if self.direction in ("images->captions", "both"):
+            checks.append((self.name, "__cap IS NULL", self.key, "'missing caption row'"))
+        if self.direction in ("captions->images", "both"):
+            checks.append((self.name, "__n IS NULL", self.key, "'missing image row'"))
+        return checks

@@ -34,7 +34,6 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codecs
@@ -99,11 +98,9 @@ class RowInvariantRule(Rule):
     def violations(self, ctx: RuleContext) -> DataFrame:
         # one violation row PER failed check (a row failing both pixel
         # and caption emits two rows); ONE UDF pass
-        pixel_detail = F.when(
-            F.col("error").isNotNull(), F.concat(F.lit("pixel decode failed: "), "error")
-        ).otherwise(F.concat(F.lit("pixel mismatch psnr="),
-                             F.round("psnr_db", 2).cast("string")))
-        return check_violations(ctx, self.name, self.checks(ctx), "image_id", [
-            (~F.col("pixel_ok"), "bytes", pixel_detail),
-            (~F.col("caption_ok"), "caption", "caption mismatch"),
+        pixel_detail = ("CASE WHEN error IS NOT NULL THEN concat('pixel decode failed: ', error) "
+                        "ELSE concat('pixel mismatch psnr=', CAST(round(psnr_db, 2) AS STRING)) END")
+        return check_violations(ctx, self.checks(ctx), "image_id", [
+            (self.name, "NOT pixel_ok", "bytes", pixel_detail),
+            (self.name, "NOT caption_ok", "caption", "'caption mismatch'"),
         ])

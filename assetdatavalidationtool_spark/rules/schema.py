@@ -4,17 +4,17 @@ The reference only *tolerates* schema problems (pads ragged rows,
 back-fills missing headers — ExcelReader.cs:110-114,164-166); this rule
 instead *reports* them: missing/extra/mistyped columns become rule-level
 violations, null-or-out-of-domain cells become row-level violations.
-All row checks are pure Column predicates → whole-stage codegen, no UDF.
+All row checks are pure SQL predicates → whole-stage codegen, no UDF.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame
 
-from .base import Rule, RuleContext, check_violations, violation_rows
+from .base import (Rule, RuleContext, check_violations, sql_name, union_violations,
+                   violation_rows)
 
 
 @dataclass
@@ -22,7 +22,7 @@ class ColumnSpec:
     name: str
     dtype: str  # Spark simpleString, e.g. "int", "string", "binary", "bigint"
     nullable: bool = True
-    domain: F.Column | None = None  # extra predicate; row passes if True
+    domain: Column | None = None  # extra predicate; row passes if True
 
 
 @dataclass
@@ -53,10 +53,11 @@ class SchemaRule(Rule):
         for col in actual:
             if col not in {s.name for s in self.columns} and col != "bucket":
                 table_level.append((self.name, None, col, "unexpected column", None))
-        out = violation_rows(ctx.spark, table_level)
+        parts = [violation_rows(ctx.spark, table_level)] if table_level else []
 
         # row-level: nullability + domain predicates — FUSED into a single
-        # scan (check_violations).
+        # scan (check_violations). A domain is a user Column: it is
+        # projected as ``__domain<i>`` and referenced from the SQL text.
         #
         # EXCEPTION — wide binary columns with ONLY a nullability check:
         # folding `bytes IS NULL` into the fused scan forces the scan to
@@ -66,33 +67,27 @@ class SchemaRule(Rule):
         # parquet, row-group null_count stats skip every clean group, and
         # the fused scan prunes the binary column away — in the common
         # all-clean case the rule never touches the image bytes at all.
-        checks = []
-        wide_null_specs = []
+        key = sql_name(ctx.key_col)
+        checks, domains = [], []
         for spec in self.columns:
             if spec.name not in actual:
                 continue
+            col = sql_name(spec.name)
             if (
                 actual[spec.name] == "binary"
                 and not spec.nullable
                 and spec.domain is None
             ):
-                wide_null_specs.append(spec)
+                parts.append(check_violations(ctx, df.where(f"{col} IS NULL"), key, [
+                    (self.name, "true", spec.name, "'null value'")]))
                 continue
             if not spec.nullable:
-                checks.append((F.col(spec.name).isNull(), spec.name, "null value"))
+                checks.append((self.name, f"{col} IS NULL", spec.name, "'null value'"))
             if spec.domain is not None:
-                checks.append((F.col(spec.name).isNotNull() & ~spec.domain,
-                               spec.name, "domain violation"))
+                checks.append((self.name, f"{col} IS NOT NULL AND NOT __domain{len(domains)}",
+                               spec.name, "'domain violation'"))
+                domains.append(spec.domain.alias(f"__domain{len(domains)}"))
         if checks:
-            out = out.unionByName(check_violations(ctx, self.name, df, ctx.key_col, checks))
-        for spec in wide_null_specs:
-            out = out.unionByName(
-                df.where(F.col(spec.name).isNull()).select(
-                    F.lit(self.name).alias("rule"),
-                    F.col(ctx.key_col).cast("string").alias("key"),
-                    F.lit(spec.name).alias("column"),
-                    F.lit("null value").alias("detail"),
-                    ctx.bucket_of(F.col(ctx.key_col)).alias("bucket"),
-                )
-            )
-        return out
+            fused = df.select("*", *domains) if domains else df
+            parts.append(check_violations(ctx, fused, key, checks))
+        return union_violations(ctx, parts)

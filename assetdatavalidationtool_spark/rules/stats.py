@@ -12,9 +12,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
-from .base import Rule, RuleContext, check_violations
+from .base import Rule, RuleContext, check_violations, sql_lit, sql_name
 
 
 @dataclass
@@ -26,44 +26,30 @@ class StatsRule(Rule):
     name: str = "stats"
 
     def _numeric(self, ctx: RuleContext, col: str) -> bool:
-        return dict(ctx.images.dtypes)[col] in ("int", "bigint", "double", "float", "smallint")
+        return isinstance(ctx.images.schema[col].dataType, NumericType)
 
     def metrics(self, ctx: RuleContext) -> DataFrame:
-        df = ctx.images
-        aggs, labels = [], []
-        total = F.count("*")
+        # ONE aggregate row, then a stack(...) unpivot into (metric,
+        # column, value); both are SQL text, a few Py4J calls in all
+        aggs, rows = [], []
         for c in self.columns:
-            aggs += [
-                F.count(F.col(c)).alias(f"{c}__count"),
-                (F.lit(1.0) - F.count(F.col(c)) / total).alias(f"{c}__null_frac"),
-                F.approx_count_distinct(c).alias(f"{c}__approx_distinct"),
+            n = sql_name(c)
+            stats = [
+                ("count", f"count({n})"),
+                # CAST: a bare 1.0 is DECIMAL in SQL
+                ("null_frac", f"CAST(1.0 AS DOUBLE) - count({n}) / count(1)"),
+                ("approx_distinct", f"approx_count_distinct({n})"),
             ]
-            labels += [(c, "count"), (c, "null_frac"), (c, "approx_distinct")]
             if self._numeric(ctx, c):
-                aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
-                labels += [(c, "min"), (c, "max")]
-                for p in self.numeric_percentiles:
-                    aggs.append(F.percentile_approx(c, p).alias(f"{c}__p{int(p*100)}"))
-                    labels.append((c, f"p{int(p*100)}"))
-        row = df.agg(*aggs)
-        # unpivot the single wide row into (metric, column, value)
-        pairs = []
-        for (c, m) in labels:
-            pairs += [F.lit(m), F.lit(c), F.col(f"{c}__{m}").cast("double")]
-        return row.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            pairs[i].alias("metric"),
-                            pairs[i + 1].alias("column"),
-                            pairs[i + 2].alias("value"),
-                        )
-                        for i in range(0, len(pairs), 3)
-                    ]
-                )
-            ).alias("s")
-        ).select("s.metric", "s.column", "s.value")
+                stats += [("min", f"min({n})"), ("max", f"max({n})")]
+                stats += [(f"p{int(p*100)}", f"percentile_approx({n}, {sql_lit(float(p))})")
+                          for p in self.numeric_percentiles]
+            for metric, agg in stats:
+                alias = f"`__a{len(aggs)}`"
+                aggs.append(f"{agg} AS {alias}")
+                rows.append(f"{sql_lit(metric)}, {sql_lit(c)}, CAST({alias} AS DOUBLE)")
+        return ctx.images.selectExpr(*aggs).selectExpr(
+            f"stack({len(rows)}, {', '.join(rows)}) AS (metric, `column`, value)")
 
     def violations(self, ctx: RuleContext) -> DataFrame:
         if not self.bounds:
@@ -71,11 +57,8 @@ class StatsRule(Rule):
         # fused single-scan bound checks (check_violations, as in SchemaRule)
         checks = []
         for c, (lo, hi) in self.bounds.items():
-            cond = F.lit(False)
-            if lo is not None:
-                cond = cond | (F.col(c) < F.lit(lo))
-            if hi is not None:
-                cond = cond | (F.col(c) > F.lit(hi))
-            checks.append((F.col(c).isNotNull() & cond, c,
-                           F.concat(F.lit("out of bounds: "), F.col(c).cast("string"))))
-        return check_violations(ctx, self.name, ctx.images, ctx.key_col, checks)
+            n = sql_name(c)
+            conds = [f"{n} {op} {sql_lit(v)}" for op, v in (("<", lo), (">", hi)) if v is not None]
+            checks.append((self.name, f"{n} IS NOT NULL AND ({' OR '.join(conds) or 'false'})", c,
+                           f"concat('out of bounds: ', CAST({n} AS STRING))"))
+        return check_violations(ctx, ctx.images, sql_name(ctx.key_col), checks)

@@ -34,7 +34,6 @@ from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codecs
@@ -97,12 +96,11 @@ class VideoInvariantRule(Rule):
         )
 
     def violations(self, ctx: RuleContext) -> DataFrame:
-        ok = F.col("decode_ok")
         # min_psnr_db is null when no reference exists for the row
-        min_psnr = F.coalesce(F.col("min_psnr_db").cast("string"), F.lit("n/a"))
-        return check_violations(ctx, self.name, self.checks(ctx), "video_id", [
-            (~ok, "bytes", F.concat(F.lit("video decode failed: "), "error")),
-            (ok & ~F.col("meta_ok"), "n_frames,fps", "declared metadata != decoded"),
-            (ok & ~F.col("frames_ok"), "bytes",
-             F.concat(F.lit("frame mismatch min_psnr="), min_psnr)),
+        return check_violations(ctx, self.checks(ctx), "video_id", [
+            (self.name, "NOT decode_ok", "bytes", "concat('video decode failed: ', error)"),
+            (self.name, "decode_ok AND NOT meta_ok", "n_frames,fps",
+             "'declared metadata != decoded'"),
+            (self.name, "decode_ok AND NOT frames_ok", "bytes",
+             "concat('frame mismatch min_psnr=', coalesce(CAST(min_psnr_db AS STRING), 'n/a'))"),
         ])

@@ -235,6 +235,16 @@ def test_headline_violations_plan_has_no_rdd_scans(ctx):
     assert "ExistingRDD" not in p
 
 
+def test_headline_key_rules_share_one_image_id_aggregate(ctx):
+    """uniqueness(image_id) and referential read ONE images-side count
+    per image_id: the headline violations plan holds two image_id
+    exchanges (that count and the caption keys), not three."""
+    import bench
+
+    vio = bench.build_ruleset(ctx.spark, ctx.images).run(ctx, persist=False)["violations"]
+    assert len(re.findall(r"Arguments: hashpartitioning\(image_id#", plan(vio))) == 2
+
+
 def test_contamination_broadcasts_benchmark_side(spark):
     """The benchmark set is tiny next to the corpus (10^3-10^5 vs
     10^12), so the shingle join and both bench-size joins must

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -112,6 +114,26 @@ def test_stats_metrics_and_bounds(ctx):
     assert rule.violations(ctx).count() == 0
 
 
+def test_stats_numeric_metrics_cover_tinyint_and_decimal(spark):
+    """Every NumericType gets min/max/percentiles, not only the
+    int/bigint/double/float/smallint dtype strings."""
+    df = spark.createDataFrame(
+        [("a", 1, Decimal("1.5")), ("b", 3, Decimal("2.5")), ("c", None, None),
+         ("d", 2, Decimal("4"))],
+        "image_id string, t tinyint, d decimal(10,2)",
+    )
+    ctx = RuleContext(spark=spark, images=df, num_buckets=4)
+    rule = StatsRule(columns=["t", "d"], bounds={"t": (None, 2), "d": (2.0, None)})
+    m = {(r["column"], r["metric"]): r["value"] for r in rule.metrics(ctx).collect()}
+    assert m[("t", "min")] == 1 and m[("t", "max")] == 3 and m[("t", "p50")] == 2
+    assert m[("d", "min")] == 1.5 and m[("d", "max")] == 4.0 and m[("d", "p50")] == 2.5
+    assert m[("t", "null_frac")] == pytest.approx(0.25) and m[("d", "count")] == 3
+    assert {k for k in m if k[0] == "t"} == {
+        ("t", x) for x in ("count", "null_frac", "approx_distinct", "min", "max", "p50", "p95")}
+    assert sorted((r["key"], r["detail"]) for r in rule.violations(ctx).collect()) == [
+        ("a", "out of bounds: 1.50"), ("b", "out of bounds: 3")]
+
+
 def test_drift_fires_on_shifted_distribution(ctx, spark):
     ref = snapshot_reference(ctx.images, "fmt", "categorical")
     same = DriftRule(column="fmt", kind="categorical", reference=ref)
@@ -215,6 +237,110 @@ def test_ruleset_persist_false_same_verdicts(tiny):
 def test_ruleset_rejects_duplicate_rule_names():
     with pytest.raises(ValueError, match=r"uniqueness\(image_id\)"):
         RuleSet([UniquenessRule(["image_id"]), ReferentialRule(), UniquenessRule(["image_id"])])
+
+
+def test_referential_rejects_unknown_direction():
+    with pytest.raises(ValueError, match="image->captions"):
+        ReferentialRule(direction="image->captions")
+
+
+def test_uniqueness_rejects_empty_key_columns():
+    with pytest.raises(ValueError, match="key column"):
+        UniquenessRule([])
+
+
+QK = "q'`k"  # a key column whose name needs quoting in SQL
+
+
+def _key_oracle(rules, images, captions, bucket):
+    """Pure-Python violations of uniqueness/referential rules over
+    collected rows: ``bucket(value)`` maps a raw key or a key string to
+    its bucket."""
+    out = []
+    for r in rules:
+        if isinstance(r, UniquenessRule):
+            counts = {}
+            for row in images:
+                vals = tuple(row[c] for c in r.key_columns)
+                if None not in vals:
+                    counts[vals] = counts.get(vals, 0) + 1
+            for vals, n in counts.items():
+                if n > 1:
+                    key = "|".join(map(str, vals))
+                    b = bucket(vals[0] if len(vals) == 1 and r.key_columns[0] == "image_id"
+                               else key)
+                    out.append((r.name, key, ",".join(r.key_columns), f"duplicate count={n}", b))
+        elif captions is not None:
+            img = {row[r.key] for row in images} - {None}
+            cap = {row[r.key] for row in captions} - {None}
+            if r.direction != "captions->images":
+                out += [(r.name, str(k), r.key, "missing caption row", bucket(k)) for k in img - cap]
+            if r.direction != "images->captions":
+                out += [(r.name, str(k), r.key, "missing image row", bucket(k)) for k in cap - img]
+    return sorted(out, key=repr)
+
+
+def _key_rules(salt_image_id):
+    return [
+        UniquenessRule(["image_id"], salted=salt_image_id),
+        UniquenessRule(["image_id", "part"]),
+        UniquenessRule([QK], salted=not salt_image_id),
+        ReferentialRule(),
+        ReferentialRule(name="ref img->cap", direction="images->captions"),
+        ReferentialRule(name="ref'`cap->img", direction="captions->images"),
+        ReferentialRule(key=QK, name="ref'`qk"),
+    ]
+
+
+@pytest.mark.parametrize("bucketing, salt_image_id", [
+    ("default", False), ("default", True), ("override", False), ("no_captions", True)])
+def test_key_rules_match_python_oracle(spark, salt_image_id, bucketing):
+    """Uniqueness and referential rules, run together in one RuleSet
+    (sharing one per-key aggregate) and each on its own, equal a
+    pure-Python oracle: null keys, a two-column key with a null part,
+    duplicate and caption-only caption keys, every direction, salted
+    and unsalted counts, quoted rule and column names."""
+    import zlib
+
+    images = spark.createDataFrame(
+        [("a", 1, 10), ("a", 1, 10), ("a", 2, 10), ("b", None, 20), ("b", None, 21),
+         (None, 3, None), ("c", 4, 30), ("d", 5, 40), ("e", 6, 20)],
+        f"image_id string, part int, `{QK.replace('`', '``')}` bigint",
+    )
+    captions = spark.createDataFrame(
+        [("a", 10), ("a", 10), ("c", None), ("x", 50), (None, 60), ("y", 30), ("e", 20)],
+        f"image_id string, `{QK.replace('`', '``')}` bigint",
+    )
+    override = bucketing == "override"
+    ctx = RuleContext(
+        spark=spark, images=images, captions=None if bucketing == "no_captions" else captions,
+        num_buckets=8,
+        bucket_expr=(lambda c: F.pmod(F.crc32(c.cast("string")), F.lit(7))) if override else None,
+    )
+    if override:
+        def bucket(v):
+            return zlib.crc32(str(v).encode()) % 7
+    else:  # the default xxhash64 bucket of every raw key and key string
+        table = {}
+        for frame in (images, captions):
+            for c in ["image_id", QK]:
+                col = F.col(f"`{c.replace('`', '``')}`")
+                table.update(dict(frame.select(col, ctx.bucket_of(col)).collect()))
+        strings = spark.createDataFrame([(s,) for s in ("a|1", "10", "20")], "s string")
+        table.update(dict(strings.select("s", ctx.bucket_of(F.col("s"))).collect()))
+        bucket = table.__getitem__
+    rules = _key_rules(salt_image_id)
+    caps = None if ctx.captions is None else ctx.captions.collect()
+    want = _key_oracle(rules, images.collect(), caps, bucket)
+    out = RuleSet(rules).run(ctx)
+    together = sorted(map(tuple, out["violations"].collect()), key=repr)
+    out["violations"].unpersist()
+    alone = sorted((tuple(row) for r in rules for row in r.violations(ctx).collect()), key=repr)
+    assert together == want
+    assert alone == want
+    # the fixture exercises every kind of violation
+    kinds = {(rule, detail.split("=")[0]) for rule, _, _, detail, _ in want}
+    assert len(kinds) == (3 if bucketing == "no_captions" else 9)
 
 
 def test_row_invariant_one_violation_per_failed_check(spark):
