@@ -20,13 +20,17 @@ Semantics:
 
 * Logical partition = ``bucket = pmod(xxhash64(key), num_buckets)`` —
   stable across runs/cluster layouts (rules/base.py).
-* A rule is **bucket-aligned** when its violations for bucket b depend
-  only on rows whose key hashes to b (schema, row-invariant, uniqueness
-  on the bucket key, referential on the bucket key). Aligned rules
-  resume at bucket grain: completed buckets are skipped, incomplete
-  ones recomputed on a bucket-filtered input.
+* A rule is **bucket-aligned** when ``rule.bucket_aligned(ctx)``: its
+  violations for bucket b depend only on rows whose key hashes to b
+  (schema, row-invariant, gate, header, key rules bucketed by the run
+  key, audio/video on their id column). Aligned rules resume at bucket
+  grain: completed buckets are skipped, incomplete ones recomputed on a
+  bucket-filtered input.
 * Global rules (drift, stats sketches, uniqueness on other keys) are a
   single unit (bucket -1): rerun whole if not complete.
+* One executor: each group of rules sharing a bucket filter is ONE
+  ``RuleSet.run`` — the pass ``RuleSet`` users and streaming run —
+  written once per output kind. A fresh run is one group.
 * Idempotence: results are written with dynamic partition overwrite
   keyed by (run_id, rule, bucket) — re-running a completed partition
   replaces rather than double-counts. The manifest is append-only;
@@ -37,12 +41,15 @@ from __future__ import annotations
 
 import dataclasses
 import time
+from functools import reduce
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .rules.base import Rule, RuleContext, path_missing
+from .rules import (AudioInvariantRule, HeaderConsistencyRule, RowInvariantRule,
+                    VideoInvariantRule)
+from .rules.base import Rule, RuleContext, RuleSet, path_missing, sql_lit
 
 MANIFEST_SCHEMA = (
     "run_id string, rule string, bucket long, status string, "
@@ -56,6 +63,11 @@ MANIFEST_SCHEMA = (
 # XOR, two identical rows do NOT cancel), and overflow-free under ANSI
 # (10^12 rows x 2^63 < 10^38).
 FINGERPRINT_SCHEMA = "bucket long, side string, n_rows long, fp string"
+
+# Rules whose verdicts depend on the payload bytes: metadata-only
+# fingerprints (fingerprint_bytes=False) cannot see their input change.
+PAYLOAD_RULES = (RowInvariantRule, HeaderConsistencyRule, AudioInvariantRule,
+                 VideoInvariantRule)
 
 
 def bucket_fingerprints(
@@ -137,32 +149,6 @@ def bucket_fingerprints(
     for p in parts[1:]:
         out = out.unionAll(p)
     return out.unionAll(meta)
-
-ALIGNED_RULE_PREFIXES = (
-    "schema", "row_invariant", "referential", "gate", "header",
-)
-
-# Per-row modality rules that bucket their violations by a fixed key
-# column of their table (rules/audio.py, rules/video.py use
-# pmod(xxhash64(<id>), num_buckets) exactly like RuleContext.bucket_of).
-# They are bucket-aligned whenever the run's key_col IS that column —
-# then a resume re-decodes only the missing buckets instead of the
-# whole clips/videos table.
-FIXED_KEY_ALIGNED = {"audio_invariant": "clip_id", "video_invariant": "video_id"}
-
-
-def rule_is_bucket_aligned(rule: Rule, ctx: RuleContext) -> bool:
-    name = rule.name
-    if name.startswith(ALIGNED_RULE_PREFIXES):
-        return True
-    for prefix, key in FIXED_KEY_ALIGNED.items():
-        if name.startswith(prefix):
-            return ctx.key_col == key
-    if name.startswith("uniqueness("):
-        keys = name[len("uniqueness(") : -1].split(",")
-        return keys == [ctx.key_col]
-    return False
-
 
 class ValidationRun:
     """Resumable rule-set execution over an images(+captions) table."""
@@ -266,12 +252,24 @@ class ValidationRun:
         record_fingerprints: bool = False,
         fingerprint_bytes: bool = True,
     ) -> dict:
-        """Execute the rule set (resumable). With ``sample_buckets=k``
-        this is a CANARY run: bucket-aligned rules run only on buckets
-        ``[0, k)`` and global rules are deferred entirely — a 1/(N/k)
-        cost pre-flight that catches systematic problems (schema break,
-        bad encoder deploy, caption pipeline desync) before committing
-        to a full 10^12-row pass. Canary manifest rows are ordinary
+        """Execute the rule set (resumable). The rules with work left
+        are grouped by the buckets they must compute: an aligned rule by
+        its todo-bucket set, a global rule (and an aligned rule with every
+        bucket to do) in the unfiltered group. Each group is ONE
+        ``RuleSet.run`` on its bucket-filtered input, written once per
+        output kind and published as one manifest batch (the verdict
+        unit: an aligned rule per bucket, a global rule as bucket -1).
+        Trade-offs of the shared pass: a crash mid-group redoes the
+        whole group, not one rule; manifest rows stay per (rule, bucket)
+        but ``wall_sec`` is the group's wall time. Metrics come from the
+        group's input; only global rules define them today, and those
+        always run unfiltered, so metrics are whole-table.
+
+        With ``sample_buckets=k`` this is a CANARY run: bucket-aligned
+        rules run only on buckets ``[0, k)`` and global rules are
+        deferred entirely — a 1/(N/k) cost pre-flight that catches
+        systematic problems (schema break, bad encoder deploy, caption
+        pipeline desync) before committing to a full 10^12-row pass. Canary manifest rows are ordinary
         ``done`` rows, so the follow-up FULL run under the same run_id
         resumes past the canary's buckets instead of redoing them
         (bucket-aligned rules depend only on their own bucket's rows,
@@ -357,8 +355,7 @@ class ValidationRun:
             ).collect()
             if not fingerprint_bytes:
                 byte_rules = [
-                    r.name for r in self.rules
-                    if r.name.startswith(("row_invariant", "header"))
+                    r.name for r in self.rules if isinstance(r, PAYLOAD_RULES)
                 ]
                 if byte_rules:
                     # r6 (ADVICE): metadata-only fingerprints cannot see
@@ -389,16 +386,16 @@ class ValidationRun:
                     r: done[r] - pre.get(r, set()) for r in done
                 }
 
+        # one RuleSet.run per bucket filter: aligned rules group by their
+        # todo-bucket set; global rules and aligned rules with every
+        # bucket to do share the unfiltered group (a fresh run is one)
+        all_buckets = set(range(self.num_buckets))
+        target = (set(range(sample_buckets)) if sample_buckets is not None
+                  else all_buckets)
+        groups: dict[frozenset, list[Rule]] = {}
         for rule in self.rules:
-            aligned = rule_is_bucket_aligned(rule, ctx)
             done_buckets = done.get(rule.name, set())
-            if aligned:
-                all_buckets = set(range(self.num_buckets))
-                target = (
-                    set(range(sample_buckets))
-                    if sample_buckets is not None
-                    else all_buckets
-                )
+            if rule.bucket_aligned(ctx):
                 todo = target - done_buckets
                 # r6 (ADVICE): buckets inherited THIS invocation are
                 # reported under buckets_inherited only — counting them
@@ -411,93 +408,22 @@ class ValidationRun:
                 if not todo:
                     summary["rules_skipped"] += 1
                     continue
-                rule_ctx = self._filtered_ctx(
-                    ctx, None if todo == all_buckets else todo
-                )
+            elif sample_buckets is not None:
+                # global rules (drift, cross-bucket stats) see a biased
+                # sample under a bucket filter — defer them to the full
+                # run rather than record a misleading whole-table verdict
+                # from 1/(N/k) of the data
+                summary["rules_deferred"] += 1
+                continue
+            elif done_buckets:
+                summary["rules_skipped"] += 1
+                continue
             else:
-                if sample_buckets is not None:
-                    # global rules (drift, cross-bucket stats) see a
-                    # biased sample under a bucket filter — defer them
-                    # to the full run rather than record a misleading
-                    # whole-table verdict from 1/(N/k) of the data
-                    summary["rules_deferred"] += 1
-                    continue
-                if done_buckets:
-                    summary["rules_skipped"] += 1
-                    continue
-                rule_ctx = ctx
-
-            t0 = time.time()
-            vio = rule.violations(rule_ctx).persist()
-            self._write_partitioned(vio, rule.name)
-            verd = self._verdicts(rule_ctx, rule, vio, aligned)
-            self._write_partitioned(verd, rule.name, kind="verdicts")
-            # north_rule: the checkpoint layout carries stats metrics.
-            # Metrics describe the WHOLE table, so they are computed on
-            # the unfiltered ctx even for a bucket-filtered resume, and
-            # written with overwrite — recomputing them is idempotent.
-            # (A crash before the manifest append reruns the rule and
-            # simply overwrites identical metrics.) Canary runs are the
-            # exception: scanning the whole table for metrics would
-            # defeat the 1/(N/k) cost point, so they use the sampled
-            # ctx — the follow-up full run overwrites with whole-table
-            # metrics.
-            m = rule.metrics(ctx if sample_buckets is None else rule_ctx)
-            if m is not None:
-                m.select("metric", "column", F.col("value").cast("double")).write.mode(
-                    "overwrite"
-                ).parquet(f"{self.out}/metrics/run_id={self.run_id}/rule={rule.name}")
-            # r6: collect the manifest rows from the verdicts parquet
-            # that was JUST written, not from the verd plan — verd is
-            # not persisted, so a plan-side collect would re-execute
-            # the whole verdict subtree (the per-bucket images scan +
-            # the violation aggregate) a second time per rule. The
-            # written table is a handful of rows; reading it back is a
-            # metadata-cheap job and provably the same data.
-            # ONLY the read may fail as "no verdicts" (an empty
-            # partitioned write leaves no files); a schema or plan error
-            # in the select must surface, not record zero done buckets
-            try:
-                verd_tbl = self.spark.read.parquet(
-                    f"{self.out}/verdicts/run_id={self.run_id}"
-                    f"/rule={rule.name}"
-                )
-            except AnalysisException:
-                verd_rows = []
-            else:
-                if aligned:
-                    # the dir may already hold buckets _inherit wrote
-                    # earlier this invocation (dynamic partition
-                    # overwrite merges) — the manifest 'done' rows must
-                    # cover exactly the buckets COMPUTED here
-                    verd_tbl = verd_tbl.where(
-                        F.col("bucket").isin([int(b) for b in todo])
-                    )
-                verd_rows = verd_tbl.select(
-                    "bucket", "rows_scanned", "violation_count"
-                ).collect()
-            rows = [
-                (
-                    self.run_id,
-                    rule.name,
-                    int(r["bucket"]),
-                    "done",
-                    int(r["rows_scanned"]),
-                    int(r["violation_count"]),
-                    float(time.time() - t0),
-                    seq,
-                )
-                for r in verd_rows
-            ]
-            if not aligned:
-                # global rules record a single unit even with no verdicts
-                rows = rows or [
-                    (self.run_id, rule.name, -1, "done", 0, 0,
-                     float(time.time() - t0), seq)
-                ]
-            self._append_manifest(rows)
-            vio.unpersist()
-            summary["rules_run"] += 1
+                todo = all_buckets
+            groups.setdefault(frozenset(todo), []).append(rule)
+        for todo, group in groups.items():
+            self._run_group(ctx, group, set(todo), seq)
+            summary["rules_run"] += len(group)
         if fp_rows is not None:
             # recorded LAST: a crash mid-run leaves no fingerprint
             # table, so a later incremental_from this run finds nothing
@@ -581,7 +507,7 @@ class ValidationRun:
         all_buckets = set(range(self.num_buckets))
         manifest_rows: list[tuple] = []
         for rule in self.rules:
-            aligned = rule_is_bucket_aligned(rule, ctx)
+            aligned = rule.bucket_aligned(ctx)
             bdone = base_done.get(rule.name, set())
             if aligned:
                 inh = sorted(
@@ -649,10 +575,10 @@ class ValidationRun:
                 # leave split()/quarantine blind to known-bad rows
                 continue
             if vio_df is not None:
-                self._write_partitioned(vio_df, rule.name)
-            self._write_partitioned(
-                verd.where(F.col("bucket").isin(inh)),
-                rule.name, kind="verdicts",
+                self._write(vio_df.withColumn("rule", F.lit(rule.name)), "violations")
+            self._write(
+                verd.where(F.col("bucket").isin(inh)).withColumn("rule", F.lit(rule.name)),
+                "verdicts",
             )
             # metrics describe the whole table: valid whenever the rule
             # is inheritable at all; the main loop overwrites them if
@@ -707,38 +633,88 @@ class ValidationRun:
         # manifest marked incomplete.
         return dataclasses.replace(ctx, images=f_img, captions=f_cap)
 
-    def _verdicts(
-        self, ctx: RuleContext, rule: Rule, vio: DataFrame, aligned: bool
-    ) -> DataFrame:
-        rows_per_bucket = (
-            ctx.with_bucket(ctx.images.select(ctx.key_col))
-            .groupBy("bucket")
-            .agg(F.count("*").alias("rows_scanned"))
-        )
-        vio_counts = vio.groupBy(
-            F.coalesce("bucket", F.lit(-1)).alias("bucket")
-        ).agg(F.count("*").alias("violation_count"))
-        if not aligned:
-            # global rule: the run-level unit is recorded as bucket -1
-            total = ctx.images.count()
-            n_vio = vio.count()
-            return self.spark.createDataFrame(
-                [(-1, total, n_vio)],
-                "bucket long, rows_scanned long, violation_count long",
-            )
-        verd = rows_per_bucket.join(vio_counts, "bucket", "left_outer")
-        return verd.select(
-            "bucket",
-            "rows_scanned",
-            F.coalesce("violation_count", F.lit(0)).alias("violation_count"),
-        )
+    def _run_group(
+        self, ctx: RuleContext, rules: list[Rule], todo: set[int], seq: int
+    ) -> None:
+        """ONE ``RuleSet.run`` of ``rules`` on the buckets ``todo``; its
+        violations, verdicts and metrics are written once each and one
+        manifest batch publishes the computed (rule, bucket) units.
 
-    def _write_partitioned(self, df: DataFrame, rule: str, kind: str = "violations") -> None:
-        path = f"{self.out}/{kind}/run_id={self.run_id}/rule={rule}"
-        out = df.withColumn("bucket", F.coalesce("bucket", F.lit(-1)))
-        if "rule" in out.columns:
-            out = out.drop("rule")
-        out.write.mode("overwrite").partitionBy("bucket").parquet(path)
+        A crash before the publish redoes the whole group on resume
+        (dynamic partition overwrite replaces what it had written), and
+        every row of the batch records the group's wall time."""
+        t0 = time.time()
+        whole = todo == set(range(self.num_buckets))
+        out = RuleSet(rules).run(self._filtered_ctx(ctx, None if whole else todo))
+        try:
+            self._write(out["violations"].selectExpr(
+                "rule", "key", "`column`", "detail", "coalesce(bucket, -1) AS bucket"), "violations")
+            self._write(self._group_verdicts(ctx, rules, out), "verdicts")
+            if out["metrics"] is not None:
+                self._write(out["metrics"].drop("run_id"), "metrics", ("rule",))
+        finally:
+            out["violations"].unpersist()
+        # r6: the manifest rows come from the verdicts parquet JUST
+        # written, not from the verdict plan, which is not persisted: a
+        # plan-side collect would re-execute the images scan and the
+        # violation aggregate. ONLY the read may fail as "no verdicts"
+        # (an empty partitioned write leaves no files); a schema or plan
+        # error in the select must surface, not record zero done buckets
+        try:
+            verd = self.spark.read.parquet(f"{self.out}/verdicts/run_id={self.run_id}")
+        except AnalysisException:
+            verd_rows = []
+        else:
+            # the dir also holds other rules and the buckets _inherit
+            # wrote (dynamic partition overwrite merges): the manifest
+            # 'done' rows must cover exactly the units COMPUTED here
+            aligned = [r.name for r in rules if r.bucket_aligned(ctx)]
+            verd_rows = verd.where(
+                (F.col("rule").isin(aligned) & F.col("bucket").isin(sorted(todo)))
+                | F.col("rule").isin([r.name for r in rules if r.name not in aligned])
+            ).select("rule", "bucket", "rows_scanned", "violation_count").collect()
+        wall = float(time.time() - t0)
+        rows = [(self.run_id, r["rule"], int(r["bucket"]), "done", int(r["rows_scanned"]),
+                 int(r["violation_count"]), wall, seq) for r in verd_rows]
+        if rows:
+            self._append_manifest(rows)
+
+    def _group_verdicts(
+        self, ctx: RuleContext, rules: list[Rule], out: dict[str, DataFrame]
+    ) -> DataFrame:
+        """The verdicts a group writes, reshaped from ``RuleSet.run``'s
+        per-(rule, bucket) rows. An aligned rule keeps its buckets >= 0.
+        A global rule is one bucket -1 unit: ``rows_scanned`` is the
+        table's row count (every image row is in exactly one of its
+        verdict rows) and ``violation_count`` counts all its violations,
+        also those in buckets without image rows; a seed row keeps the
+        unit when there are neither."""
+        cols = ["rule", "bucket", "rows_scanned", "violation_count"]
+        aligned = ", ".join(sql_lit(r.name) for r in rules if r.bucket_aligned(ctx))
+        glob = ", ".join(sql_lit(r.name) for r in rules if not r.bucket_aligned(ctx))
+        parts = []
+        if aligned:
+            parts.append(out["verdicts"].where(f"rule IN ({aligned}) AND bucket >= 0").select(*cols))
+        if glob:
+            parts.append(
+                out["verdicts"].where(f"rule IN ({glob})").selectExpr("rule", "rows_scanned", "0L AS n")
+                .unionByName(out["violations"].where(f"rule IN ({glob})")
+                             .selectExpr("rule", "0L AS rows_scanned", "1L AS n"))
+                .unionByName(self.spark.sql(
+                    f"SELECT explode(array({glob})) AS rule, 0L AS rows_scanned, 0L AS n"))
+                .groupBy("rule")
+                .agg(F.expr("sum(rows_scanned) AS rows_scanned"), F.expr("sum(n) AS violation_count"))
+                .selectExpr("rule", "-1L AS bucket", "rows_scanned", "violation_count")
+            )
+        return reduce(DataFrame.unionByName, parts)
+
+    def _write(self, df: DataFrame, kind: str, by: tuple = ("rule", "bucket")) -> None:
+        """Dynamic-overwrite ``df`` into ``<kind>/run_id=<id>/`` by ``by``:
+        only the partitions ``df`` holds are replaced, whatever the
+        session's overwrite mode (a static overwrite would wipe the
+        run's other rules)."""
+        df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            *by).parquet(f"{self.out}/{kind}/run_id={self.run_id}")
 
     def split(self, images: DataFrame) -> str:
         """Write the clean/quarantine split for this run's violations.

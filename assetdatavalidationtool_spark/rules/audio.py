@@ -80,6 +80,9 @@ class AudioInvariantRule(Rule):
     max_clip_frac: float = DEFAULT_MAX_CLIP_FRAC
     name: str = "audio_invariant"
 
+    def bucket_aligned(self, ctx: RuleContext) -> bool:
+        return ctx.key_col == "clip_id"
+
     def checks(self, ctx: RuleContext) -> DataFrame:
         cols = ["clip_id", "bytes", "sample_rate", "n_samples"]
         return ctx.images.select(*cols).mapInPandas(

@@ -161,7 +161,19 @@ class Rule:
         raise NotImplementedError
 
     def metrics(self, ctx: RuleContext) -> DataFrame | None:
+        """Measurements of the rows ``ctx`` holds. ``ValidationRun``
+        runs global rules on the whole table, so the metrics of the rules
+        that define them today (stats, drift) are whole-table; an aligned
+        rule's would cover only the buckets its run computed."""
         return None
+
+    def bucket_aligned(self, ctx: RuleContext) -> bool:
+        """True when the violations in bucket b depend only on the rows
+        whose ``ctx.key_col`` hashes to b, and carry that bucket. Then a
+        bucket-filtered run computes exactly those buckets, and
+        ``ValidationRun`` resumes, canaries and inherits the rule per
+        bucket. False (the default) makes the rule one global unit."""
+        return False
 
 
 class KeyRule(Rule):
@@ -190,6 +202,9 @@ class KeyRule(Rule):
 
     def violations(self, ctx: RuleContext) -> DataFrame:
         return key_violations(ctx, [self])
+
+    def bucket_aligned(self, ctx: RuleContext) -> bool:
+        return self.bucket_key(ctx) == sql_name(ctx.key_col)
 
 
 def key_violations(ctx: RuleContext, rules: list[KeyRule]) -> DataFrame:

@@ -14,8 +14,8 @@ Scale: a pure Column CASE over the metadata columns — the binary
 ``bytes`` column never enters the plan (the payload gate reads a
 pre-recorded ``n_bytes`` column and silently disables itself when the
 table lacks one). Per-row and keyed by the run's key column, so the
-rule is bucket-aligned: a bucket-grain resume re-scans only missing
-buckets (manifest.ALIGNED_RULE_PREFIXES includes "gate").
+rule is bucket-aligned (``bucket_aligned`` is True): a bucket-grain
+resume re-scans only missing buckets.
 """
 
 from __future__ import annotations
@@ -53,6 +53,9 @@ class MetadataGateRule(Rule):
     # (truncation / decoder-bomb detection); None = off
     milli_bpp_bounds: tuple | None = None
     name: str = field(default="gate", init=False)
+
+    def bucket_aligned(self, ctx: RuleContext) -> bool:
+        return True
 
     def violations(self, ctx: RuleContext) -> DataFrame:
         cols = [ctx.key_col, "w", "h", "fmt"]

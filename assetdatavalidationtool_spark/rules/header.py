@@ -15,8 +15,8 @@ Scale: substring/hex/conv inside whole-stage codegen, scan-stage only —
 the payload column is read but only its first 24 and last 12 bytes are
 transformed; no zlib, no Python, no shuffle. Per-row and keyed by the
 run's key column, so the rule is bucket-aligned
-(manifest.ALIGNED_RULE_PREFIXES includes "header"): a bucket-grain
-resume re-scans only missing buckets.
+(``bucket_aligned`` is True): a bucket-grain resume re-scans only
+missing buckets.
 """
 
 from __future__ import annotations
@@ -43,6 +43,9 @@ class HeaderConsistencyRule(Rule):
     bytes_col: str = "bytes"
     check_truncation: bool = True
     name: str = field(default="header_consistency", init=False)
+
+    def bucket_aligned(self, ctx: RuleContext) -> bool:
+        return True
 
     def violations(self, ctx: RuleContext) -> DataFrame:
         checked = header_consistency(

@@ -91,6 +91,9 @@ _check_batches = row_batches(_check_row, _fault_row, CHECK_SCHEMA)
 class RowInvariantRule(Rule):
     name: str = "row_invariant"
 
+    def bucket_aligned(self, ctx: RuleContext) -> bool:
+        return True
+
     def checks(self, ctx: RuleContext) -> DataFrame:
         cols = ["image_id", "bytes", "fmt", "caption"]
         return ctx.images.select(*cols).mapInPandas(_check_batches, CHECK_SCHEMA)

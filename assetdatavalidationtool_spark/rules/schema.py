@@ -30,6 +30,9 @@ class SchemaRule(Rule):
     columns: list[ColumnSpec] = field(default_factory=list)
     name: str = "schema"
 
+    def bucket_aligned(self, ctx: RuleContext) -> bool:
+        return True
+
     def violations(self, ctx: RuleContext) -> DataFrame:
         df = ctx.images
         actual = {f.name: f.dataType.simpleString() for f in df.schema.fields}

@@ -89,6 +89,9 @@ class VideoInvariantRule(Rule):
     check_every_n: int = 4
     name: str = "video_invariant"
 
+    def bucket_aligned(self, ctx: RuleContext) -> bool:
+        return ctx.key_col == "video_id"
+
     def checks(self, ctx: RuleContext) -> DataFrame:
         cols = ["video_id", "bytes", "n_frames", "fps"]
         return ctx.images.select(*cols).mapInPandas(

@@ -1,9 +1,13 @@
 """Incremental validation over a file stream of image rows.
 
 Shape: ``readStream`` (file source, schema pinned — no inference race)
-→ ``foreachBatch`` running the *same* Rule objects as the batch engine
-on each micro-batch → violations/verdicts parquet partitioned by
-batch_id. foreachBatch itself is at-least-once (a crash between the
+→ ``foreachBatch`` running the rules through the batch engine's
+``RuleSet.run`` on each micro-batch → violations/verdicts parquet
+partitioned by batch_id. A verdict row is ``RuleSet``'s unit, one per
+(rule, bucket) of the batch: ``(rule, bucket, rows_scanned,
+violation_count, pass, batch_id)``, so each rule's ``rows_scanned``
+sums to the batch's row count and a table-level violation counts in
+bucket -1. foreachBatch itself is at-least-once (a crash between the
 sink write and the checkpoint commit replays the batch on restart);
 end-to-end effectively-once comes from making the batch write
 IDEMPOTENT: each batch dynamically overwrites ONLY its own
@@ -23,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import IMAGES_SCHEMA
-from ..rules.base import Rule, RuleContext, path_missing
+from ..rules.base import Rule, RuleContext, RuleSet, path_missing
 
 
 def stream_validate(
@@ -44,6 +48,8 @@ def stream_validate(
     stream = reader.parquet(input_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not rules:
+            return
         ctx = RuleContext(
             spark=spark,
             images=batch_df,
@@ -51,46 +57,19 @@ def stream_validate(
             num_buckets=num_buckets,
             run_id=f"stream_batch_{batch_id}",
         )
-        vio = None
-        for rule in rules:
-            v = rule.violations(ctx)
-            vio = v if vio is None else vio.unionByName(v)
-        if vio is None:
-            return
-        vio = vio.withColumn("batch_id", F.lit(batch_id)).persist()
-        # idempotent replay: overwrite exactly this batch's partition
-        (
-            vio.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/violations")
-        )
-        verd = (
-            ctx.with_bucket(batch_df.select(ctx.key_col))
-            .groupBy("bucket")
-            .agg(F.count("*").alias("rows_scanned"))
-            .join(
-                vio.groupBy(F.coalesce("bucket", F.lit(-1)).alias("bucket")).agg(
-                    F.count("*").alias("violation_count")
-                ),
-                "bucket",
-                "left_outer",
-            )
-            .select(
-                F.lit(batch_id).alias("batch_id"),
-                "bucket",
-                "rows_scanned",
-                F.coalesce("violation_count", F.lit(0)).alias("violation_count"),
-                (F.coalesce("violation_count", F.lit(0)) == 0).alias("pass"),
-            )
-        )
-        (
-            verd.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/verdicts")
-        )
-        vio.unpersist()
+        out = RuleSet(rules).run(ctx)
+        try:
+            for kind, df in (("violations", out["violations"]),
+                             ("verdicts", out["verdicts"].drop("run_id"))):
+                # idempotent replay: overwrite exactly this batch's partition
+                (
+                    df.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("batch_id")
+                    .parquet(f"{output_dir}/{kind}")
+                )
+        finally:
+            out["violations"].unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

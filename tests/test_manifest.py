@@ -3,7 +3,9 @@
 
 from __future__ import annotations
 
+import glob
 import shutil
+from dataclasses import dataclass
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +18,7 @@ from assetdatavalidationtool_spark.rules import (
     RowInvariantRule,
     UniquenessRule,
 )
+from assetdatavalidationtool_spark.rules.base import Rule
 
 N, DUPS, BAD, DROPPED = 120, 2, 3, 4
 
@@ -52,6 +55,8 @@ def test_full_run_then_noop_resume(spark, data, tmp_path_factory):
     run = ValidationRun(spark, out, make_rules(), num_buckets=8, run_id="r1")
     s1 = run.run(images, captions)
     assert s1["rules_run"] == 4
+    # the four rules ran as ONE RuleSet pass: one manifest batch
+    assert len(glob.glob(f"{out}/manifest/batch-*.parquet")) == 1
     full = _vio_set(run)
     # distinct (rule,key,detail): DUPS uniqueness + BAD pixel keys
     # (duplicate re-emits collapse in the set) + DROPPED referential
@@ -119,7 +124,6 @@ def test_crash_before_manifest_append_resumes_without_double_count(
     names). The resume must recompute that rule and, because results are
     keyed by (run_id, rule, bucket) with dynamic partition overwrite,
     end with exactly the fresh-run violations — no double-count."""
-    import glob
     import os
 
     out = str(tmp_path_factory.mktemp("run_crash"))
@@ -165,8 +169,8 @@ def test_verdict_readback_schema_error_raises(spark, data, tmp_path_factory):
     images, captions = data
 
     class Renamed(ValidationRun):
-        def _verdicts(self, ctx, rule, vio, aligned):
-            return super()._verdicts(ctx, rule, vio, aligned).withColumnRenamed(
+        def _group_verdicts(self, ctx, rules, out):
+            return super()._group_verdicts(ctx, rules, out).withColumnRenamed(
                 "rows_scanned", "rows"
             )
 
@@ -203,7 +207,6 @@ def test_audio_video_rules_are_bucket_aligned():
     """ADVICE r03: audio/video invariant rules bucket by their fixed id
     column, so they resume at bucket grain iff the run's key_col is that
     column (otherwise the bucket filter would not align)."""
-    from assetdatavalidationtool_spark.manifest import rule_is_bucket_aligned
     from assetdatavalidationtool_spark.rules import (
         AudioInvariantRule,
         RuleContext,
@@ -213,10 +216,113 @@ def test_audio_video_rules_are_bucket_aligned():
     def ctx(key):
         return RuleContext(spark=None, images=None, key_col=key)
 
-    assert rule_is_bucket_aligned(AudioInvariantRule(), ctx("clip_id"))
-    assert rule_is_bucket_aligned(VideoInvariantRule(), ctx("video_id"))
-    assert not rule_is_bucket_aligned(AudioInvariantRule(), ctx("image_id"))
-    assert not rule_is_bucket_aligned(VideoInvariantRule(), ctx("clip_id"))
+    assert AudioInvariantRule().bucket_aligned(ctx("clip_id"))
+    assert VideoInvariantRule().bucket_aligned(ctx("video_id"))
+    assert not AudioInvariantRule().bucket_aligned(ctx("image_id"))
+    assert not VideoInvariantRule().bucket_aligned(ctx("clip_id"))
+
+
+def test_key_rule_alignment_follows_its_bucket_key():
+    """A key rule is aligned iff it buckets by the run key — whatever it
+    is named; referential on another key is global."""
+    from assetdatavalidationtool_spark.rules import RuleContext
+
+    ctx = RuleContext(spark=None, images=None, key_col="image_id")
+    assert UniquenessRule(["image_id"]).bucket_aligned(ctx)
+    assert not UniquenessRule(["phash"]).bucket_aligned(ctx)
+    assert not UniquenessRule(["image_id", "w"]).bucket_aligned(ctx)
+    assert ReferentialRule().bucket_aligned(ctx)
+    assert not ReferentialRule(key="caption_ref").bucket_aligned(ctx)
+    ref_ctx = RuleContext(spark=None, images=None, key_col="caption_ref")
+    assert ReferentialRule(key="caption_ref").bucket_aligned(ref_ctx)
+
+
+def test_renamed_aligned_rule_resumes_per_bucket(spark, data, tmp_path_factory):
+    """Alignment is a rule property, not a name prefix: a pixel rule
+    named "pixels" runs on the canary's buckets (not deferred), the full
+    run resumes past them, and the result equals a fresh run."""
+    images, captions = data
+
+    def rules():
+        return [RowInvariantRule(name="pixels")]
+
+    run = ValidationRun(spark, str(tmp_path_factory.mktemp("renamed")), rules(),
+                        num_buckets=8, run_id="px")
+    s1 = run.run(images, captions, sample_buckets=2)
+    assert s1["rules_run"] == 1 and s1["rules_deferred"] == 0
+    assert run.completed() == {"pixels": {0, 1}}
+    s2 = run.run(images, captions)
+    assert s2["rules_run"] == 1 and s2["buckets_skipped"] == 2
+
+    fresh = ValidationRun(spark, str(tmp_path_factory.mktemp("renamed_fresh")),
+                          rules(), num_buckets=8, run_id="px")
+    fresh.run(images, captions)
+    assert _vio_set(run) == _vio_set(fresh)
+    assert _verd_set(run) == _verd_set(fresh)
+
+
+@dataclass
+class MinRowsRule(Rule):
+    """A user global rule whose name starts like an aligned one: one
+    table-level violation when the table has fewer than ``min_rows``."""
+    min_rows: int = 1000
+    name: str = "schema_min_rows"
+
+    def violations(self, ctx):
+        return ctx.images.selectExpr("count(1) AS n").where(f"n < {self.min_rows}").selectExpr(
+            f"'{self.name}' AS rule", "CAST(NULL AS STRING) AS key",
+            "CAST(NULL AS STRING) AS `column`", "concat('rows=', n) AS detail",
+            "CAST(NULL AS BIGINT) AS bucket")
+
+
+def test_global_rules_deferred_whatever_their_name(spark, data, tmp_path_factory):
+    """A global rule named "schema_min_rows" and referential on a key
+    other than the run key are deferred by a canary, then run whole as
+    one bucket -1 unit, equal to a fresh run."""
+    images, captions = data
+    images = images.withColumn("caption_ref", F.col("image_id"))
+    captions = captions.withColumn("caption_ref", F.col("image_id"))
+
+    def rules():
+        return [MinRowsRule(), ReferentialRule(key="caption_ref")]
+
+    run = ValidationRun(spark, str(tmp_path_factory.mktemp("global_named")), rules(),
+                        num_buckets=8, run_id="gn")
+    s1 = run.run(images, captions, sample_buckets=2)
+    assert s1["rules_run"] == 0 and s1["rules_deferred"] == 2
+    assert run.completed() == {}
+    s2 = run.run(images, captions)
+    assert s2["rules_run"] == 2 and s2["rules_deferred"] == 0
+    assert run.completed() == {"schema_min_rows": {-1}, "referential": {-1}}
+    n = images.count()
+    assert _verd_set(run) == {("schema_min_rows", -1, n, 1), ("referential", -1, n, DROPPED)}
+
+    fresh = ValidationRun(spark, str(tmp_path_factory.mktemp("global_named_fresh")),
+                          rules(), num_buckets=8, run_id="gn")
+    fresh.run(images, captions)
+    assert _vio_set(run) == _vio_set(fresh)
+    assert _verd_set(run) == _verd_set(fresh)
+
+
+@pytest.mark.parametrize("kind", ["pixels", "audio", "video"])
+def test_metadata_fingerprints_warn_for_payload_rules(spark, data, tmp_path_factory, kind):
+    """fingerprint_bytes=False warns for every rule that reads the
+    payload, chosen by class: a renamed pixel rule, audio and video."""
+    from assetdatavalidationtool_spark.datagen import generate_clips, generate_videos
+    from assetdatavalidationtool_spark.rules import AudioInvariantRule, VideoInvariantRule
+
+    if kind == "pixels":
+        rule, table, key = RowInvariantRule(name="pixels"), data[0], "image_id"
+    elif kind == "audio":
+        rule, key = AudioInvariantRule(), "clip_id"
+        table = generate_clips(spark, 4, partitions=1, n_samples=500)
+    else:
+        rule, key = VideoInvariantRule(), "video_id"
+        table = generate_videos(spark, 3, partitions=1, n_frames=4, w=16, h=12)
+    run = ValidationRun(spark, str(tmp_path_factory.mktemp(f"warn_{kind}")), [rule],
+                        num_buckets=4, run_id="w", key_col=key)
+    with pytest.warns(UserWarning, match=rf"byte-reading rules \['{rule.name}'\]"):
+        run.run(table, record_fingerprints=True, fingerprint_bytes=False)
 
 
 def test_metrics_persisted_in_run_layout(spark, data, tmp_path_factory):

@@ -631,11 +631,10 @@ def test_neardup_rule_ignores_exact_dup_reemits(spark):
 def test_neardup_rule_not_bucket_aligned(spark):
     """Cross-bucket pairs mean a bucket-grain resume must re-run the
     whole rule — the manifest must classify it global."""
-    from assetdatavalidationtool_spark.manifest import rule_is_bucket_aligned
     from assetdatavalidationtool_spark.rules import NearDuplicateRule, RuleContext
 
     ctx = RuleContext(spark=spark, images=None, captions=None)
-    assert not rule_is_bucket_aligned(NearDuplicateRule(), ctx)
+    assert not NearDuplicateRule().bucket_aligned(ctx)
 
 
 def test_metadata_gate_rule_flags_and_maps_columns(spark):
@@ -674,11 +673,10 @@ def test_metadata_gate_rule_payload_gate_needs_column(spark):
 
 
 def test_metadata_gate_rule_is_bucket_aligned(spark):
-    from assetdatavalidationtool_spark.manifest import rule_is_bucket_aligned
     from assetdatavalidationtool_spark.rules import MetadataGateRule, RuleContext
 
     ctx = RuleContext(spark=spark, images=None, captions=None)
-    assert rule_is_bucket_aligned(MetadataGateRule(), ctx)
+    assert MetadataGateRule().bucket_aligned(ctx)
 
 
 def test_metadata_gate_rule_compression_bounds(spark):
@@ -785,7 +783,6 @@ def test_header_consistency_rule_flags_and_maps_columns(spark):
     column; clean rows stay silent; the rule is bucket-aligned so a
     resume re-scans only missing buckets."""
     from assetdatavalidationtool_spark.datagen import generate_images
-    from assetdatavalidationtool_spark.manifest import rule_is_bucket_aligned
     from assetdatavalidationtool_spark.rules import RuleContext
     from assetdatavalidationtool_spark.rules.header import HeaderConsistencyRule
 
@@ -801,7 +798,7 @@ def test_header_consistency_rule_flags_and_maps_columns(spark):
     )
     ctx = RuleContext(spark=spark, images=tampered, captions=None, num_buckets=8)
     rule = HeaderConsistencyRule()
-    assert rule_is_bucket_aligned(rule, ctx)
+    assert rule.bucket_aligned(ctx)
     got = {r["key"]: r for r in rule.violations(ctx).collect()}
     expected_dims = {f"img_{i:012d}" for i in range(40) if i % 7 == 3 and i % 11 != 4}
     expected_fmt = {f"img_{i:012d}" for i in range(40) if i % 11 == 4}

@@ -47,6 +47,26 @@ def test_stream_validate_incremental(spark, tmp_path_factory):
     assert rows == N1 + N2
 
 
+def test_stream_validate_verdicts_per_rule(spark, tmp_path_factory):
+    """Streaming runs its rules through RuleSet.run: one verdict row per
+    (rule, bucket), so each rule's rows_scanned sums to the input rows."""
+    base = tmp_path_factory.mktemp("stream_rules")
+    inp, out = str(base / "in"), str(base / "out")
+    generate_images(spark, N2, partitions=2, dup_ids=3, bad_pixel_ids=BAD).write.mode(
+        "append"
+    ).parquet(inp)
+    n = spark.read.parquet(inp).count()
+    stream_validate(spark, inp, out, [RowInvariantRule(), UniquenessRule(["image_id"])],
+                    str(base / "ckpt"), num_buckets=8)
+    verd = spark.read.parquet(f"{out}/verdicts")
+    assert "rule" in verd.columns
+    got = {r["rule"]: (r["rows"], r["vio"]) for r in verd.groupBy("rule").agg(
+        F.sum("rows_scanned").alias("rows"), F.sum("violation_count").alias("vio")).collect()}
+    vio = spark.read.parquet(f"{out}/violations").groupBy("rule").count().collect()
+    assert got == {r["rule"]: (n, r["count"]) for r in vio}
+    assert set(got) == {"row_invariant", "uniqueness(image_id)"}
+
+
 def test_windowed_event_counts_batch_parity(spark):
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     got = windowed_event_counts(ev, window="1 hour")
