@@ -35,6 +35,15 @@ Semantics:
   keyed by (run_id, rule, bucket) — re-running a completed partition
   replaces rather than double-counts. The manifest is append-only;
   the LATEST status row per (run_id, rule, bucket) wins.
+* One reader: every result read goes through :func:`read_results`
+  with the kind's fixed schema (``RESULT_COLUMNS``). A run that wrote
+  nothing of a kind — no dir, or a dir without data files, as a clean
+  run's violations are — reads as an empty frame; any other read
+  failure surfaces.
+* Incremental runs inherit the base run's results for unchanged
+  buckets as one batch: one verdict read, one grouped count of the
+  base violation rows, one write per output kind and one manifest
+  batch, whatever the number of rules.
 """
 
 from __future__ import annotations
@@ -50,6 +59,47 @@ from pyspark.sql import functions as F
 from .rules import (AudioInvariantRule, HeaderConsistencyRule, RowInvariantRule,
                     VideoInvariantRule)
 from .rules.base import Rule, RuleContext, RuleSet, path_missing, sql_lit
+
+# Each result kind's columns as read back: the file columns, then the
+# partition columns in path order (<kind>/run_id=<id>/rule=<r>[/bucket=<b>]).
+# Writes project onto the same columns minus run_id.
+RESULT_COLUMNS = {
+    "violations": (("key", "string"), ("column", "string"), ("detail", "string"),
+                   ("run_id", "string"), ("rule", "string"), ("bucket", "int")),
+    "verdicts": (("rows_scanned", "bigint"), ("violation_count", "bigint"),
+                 ("run_id", "string"), ("rule", "string"), ("bucket", "int")),
+    "metrics": (("metric", "string"), ("column", "string"), ("value", "double"),
+                ("run_id", "string"), ("rule", "string")),
+}
+
+
+def read_results(spark: SparkSession, root: str, kind: str, run_id: str) -> DataFrame:
+    """One run's ``kind`` results (violations, verdicts or metrics) from
+    the layout under ``root``, with ``run_id``, ``rule`` (and ``bucket``)
+    as columns. The fixed schema skips parquet footer inference and
+    reads a run dir without data files as an empty frame; a missing
+    path reads as the same empty frame. Any other failure (corrupt
+    files, permissions) raises."""
+    cols = RESULT_COLUMNS[kind]
+    try:
+        return spark.read.schema(", ".join(f"`{n}` {t}" for n, t in cols)).option(
+            "basePath", f"{root}/{kind}").parquet(f"{root}/{kind}/run_id={run_id}")
+    except AnalysisException as e:
+        if not path_missing(e):
+            raise
+        return spark.sql("SELECT " + ", ".join(f"CAST(NULL AS {t}) AS `{n}`" for n, t in cols)
+                         + " WHERE false")
+
+
+def _units_sql(units: dict[str, list[int] | None]) -> str:
+    """SQL predicate over a result kind's partition columns selecting
+    each rule's listed buckets, or all of its rows when the list is
+    None; reads filtered by it prune to the selected dirs."""
+    return " OR ".join(
+        f"(rule = {sql_lit(r)}"
+        + ("" if bs is None else f" AND bucket IN ({', '.join(map(str, bs))})") + ")"
+        for r, bs in units.items()) or "false"
+
 
 MANIFEST_SCHEMA = (
     "run_id string, rule string, bucket long, status string, "
@@ -379,12 +429,10 @@ class ValidationRun:
         if incremental_from is not None:
             unchanged = self._unchanged_buckets(fp_rows, incremental_from)
             if unchanged:
-                pre = {r: set(b) for r, b in done.items()}
-                self._inherit(ctx, incremental_from, unchanged, done,
-                              seq, summary)
-                inherited_now = {
-                    r: done[r] - pre.get(r, set()) for r in done
-                }
+                inherited_now = self._inherit(ctx, incremental_from, unchanged, done, seq)
+            for rule, buckets in inherited_now.items():
+                done.setdefault(rule, set()).update(buckets)
+                summary["buckets_inherited"] += len(buckets)
 
         # one RuleSet.run per bucket filter: aligned rules group by their
         # todo-bucket set; global rules and aligned rules with every
@@ -486,125 +534,76 @@ class ValidationRun:
         unchanged: set[int],
         done: dict[str, set[int]],
         seq: int,
-        summary: dict,
-    ) -> None:
+    ) -> dict[str, set[int]]:
         """Copy the base run's materialized results for unchanged
-        buckets into this run and mark them ``inherited`` in the
-        manifest. Mutates ``done`` so the main rule loop skips them.
+        buckets into this run, mark them ``inherited`` in the manifest
+        and return them ({rule: buckets}) for the main rule loop to skip.
 
-        Copies move only RESULT rows (violations + tiny verdicts) —
-        never input data — so the cost is proportional to the base
-        run's violation count, not the table. Missing base artifacts
-        narrow safely: no verdicts for a rule → that rule recomputes;
-        no violations dir → the rule was clean, nothing to copy."""
-        def _missing(e: AnalysisException) -> bool:
-            # UNABLE_TO_INFER_SCHEMA = the dir exists but holds no data
-            # files — how an empty partitioned write (a CLEAN rule's
-            # violations) materializes
-            return path_missing(e) or "UNABLE_TO_INFER_SCHEMA" in str(e)
-
+        The (rule, bucket) units are decided on the driver; then,
+        whatever the number of rules, one verdict read, one grouped
+        count of the base violation rows, one write per output kind and
+        one manifest batch. Copies move only RESULT rows, never input
+        data. A unit is inherited only when the base holds its verdict
+        and exactly ``violation_count`` violation rows for it (a global
+        rule: all its rows); results expired or partly deleted since
+        recompute instead of vouching for rows that are gone."""
         base_done = self.completed(base_run_id)
         all_buckets = set(range(self.num_buckets))
-        manifest_rows: list[tuple] = []
-        for rule in self.rules:
-            aligned = rule.bucket_aligned(ctx)
-            bdone = base_done.get(rule.name, set())
-            if aligned:
-                inh = sorted(
-                    (unchanged & bdone) - done.get(rule.name, set())
-                )
+        aligned = {r.name: r.bucket_aligned(ctx) for r in self.rules}
+        units: dict[str, list[int]] = {}
+        for name, is_aligned in aligned.items():
+            bdone = base_done.get(name, set())
+            if is_aligned:
+                inh = (unchanged & bdone) - done.get(name, set())
             else:
                 # a global rule's verdict depends on every row: inherit
                 # only when the ENTIRE input is unchanged
-                inh = (
-                    [-1]
-                    if unchanged == all_buckets and -1 in bdone
-                    and not done.get(rule.name)
-                    else []
-                )
-            if not inh:
+                inh = ({-1} if unchanged == all_buckets and -1 in bdone
+                       and not done.get(name) else set())
+            if inh:
+                units[name] = sorted(inh)
+        if not units:
+            return {}
+
+        def base(kind: str) -> DataFrame:
+            return read_results(self.spark, self.out, kind, base_run_id)
+
+        verdicts = base("verdicts").where(_units_sql(units)).collect()
+        # a global rule's violations carry real bucket values (e.g.
+        # salted uniqueness buckets by its own key) though its unit is -1
+        counts: dict[tuple, int] = {}
+        for r in base("violations").where(_units_sql(
+                {n: bs if aligned[n] else None for n, bs in units.items()})
+        ).groupBy("rule", "bucket").count().collect():
+            unit = (r["rule"], r["bucket"] if aligned[r["rule"]] else -1)
+            counts[unit] = counts.get(unit, 0) + r["count"]
+        kept: dict[str, list[int]] = {}
+        manifest_rows = []
+        for v in verdicts:
+            if counts.get((v["rule"], v["bucket"]), 0) != v["violation_count"]:
                 continue
-            try:
-                verd = self.spark.read.parquet(
-                    f"{self.out}/verdicts/run_id={base_run_id}/rule={rule.name}"
-                ).where(F.col("bucket").isin(inh))
-                vrows = verd.collect()
-            except AnalysisException as e:
-                if _missing(e):
-                    continue  # base verdicts gone (expired?) — recompute
-                raise
-            have = {int(r["bucket"]) for r in vrows}
-            inh = [b for b in inh if b in have]
-            if not inh:
-                continue
-            # Which violation rows travel with these verdicts?
-            # * global rule: ALL of them — its violations carry real
-            #   bucket values (e.g. salted uniqueness buckets by its own
-            #   key) even though the verdict unit is -1, and it only
-            #   inherits when the whole input is unchanged.
-            # * aligned rule: the inherited buckets, PLUS the bucket=-1
-            #   partition (table-level rows like SchemaRule's
-            #   'unexpected column', which have no per-bucket verdict)
-            #   when inheritance covers the rule entirely — a partial
-            #   inherit leaves -1 to the recompute leg, which re-derives
-            #   table-level checks from the (unchanged) schema; copying
-            #   it there could go stale if day-2 fixed the schema.
-            vio_filter = None
-            if aligned:
-                full = (done.get(rule.name, set()) | set(inh)) >= all_buckets
-                vio_filter = F.col("bucket").isin(
-                    list(inh) + ([-1] if full else [])
-                )
-            vio_df = None
-            try:
-                vio_df = self.spark.read.parquet(
-                    f"{self.out}/violations/run_id={base_run_id}/rule={rule.name}"
-                )
-                if vio_filter is not None:
-                    vio_df = vio_df.where(vio_filter)
-            except AnalysisException as e:
-                if not _missing(e):
-                    raise  # unreadable ≠ clean: do not drop violations
-            total_v = sum(
-                int(r["violation_count"]) for r in vrows
-                if int(r["bucket"]) in set(inh)
-            )
-            if vio_df is None and total_v > 0:
-                # the verdicts vouch for violations whose rows are gone
-                # (partial cleanup / expiry race) — inheriting would
-                # leave split()/quarantine blind to known-bad rows
-                continue
-            if vio_df is not None:
-                self._write(vio_df.withColumn("rule", F.lit(rule.name)), "violations")
-            self._write(
-                verd.where(F.col("bucket").isin(inh)).withColumn("rule", F.lit(rule.name)),
-                "verdicts",
-            )
-            # metrics describe the whole table: valid whenever the rule
-            # is inheritable at all; the main loop overwrites them if
-            # the rule still runs on changed buckets
-            try:
-                mdf = self.spark.read.parquet(
-                    f"{self.out}/metrics/run_id={base_run_id}/rule={rule.name}"
-                )
-                mdf.write.mode("overwrite").parquet(
-                    f"{self.out}/metrics/run_id={self.run_id}/rule={rule.name}"
-                )
-            except AnalysisException as e:
-                if not _missing(e):
-                    raise
-            for r in vrows:
-                if int(r["bucket"]) not in set(inh):
-                    continue
-                manifest_rows.append((
-                    self.run_id, rule.name, int(r["bucket"]), "inherited",
-                    int(r["rows_scanned"]), int(r["violation_count"]),
-                    0.0, seq,
-                ))
-            done.setdefault(rule.name, set()).update(inh)
-            summary["buckets_inherited"] += len(inh)
-        if manifest_rows:
-            self._append_manifest(manifest_rows)
+            kept.setdefault(v["rule"], []).append(v["bucket"])
+            manifest_rows.append((self.run_id, v["rule"], v["bucket"], "inherited",
+                                  v["rows_scanned"], v["violation_count"], 0.0, seq))
+        if not kept:
+            return {}
+        # An aligned rule's table-level rows (bucket -1, e.g. SchemaRule's
+        # 'unexpected column') have no per-bucket verdict: they travel
+        # only when inheritance covers the rule entirely. A partial
+        # inherit leaves -1 to the recompute leg, which re-derives it from
+        # the (unchanged) schema; a copy could go stale if day 2 fixed it.
+        vio_units = {
+            n: (bs + [-1] if set(bs) | done.get(n, set()) >= all_buckets else bs)
+            if aligned[n] else None
+            for n, bs in kept.items()}
+        self._write(base("violations").where(_units_sql(vio_units)), "violations")
+        self._write(base("verdicts").where(_units_sql(kept)), "verdicts")
+        # metrics describe the whole table: valid whenever the rule is
+        # inheritable at all; a rule still run on changed buckets
+        # overwrites them
+        self._write(base("metrics").where(_units_sql(dict.fromkeys(kept))), "metrics")
+        self._append_manifest(manifest_rows)
+        return {n: set(bs) for n, bs in kept.items()}
 
     def _filtered_ctx(self, ctx: RuleContext, todo: set[int] | None) -> RuleContext:
         if todo is None:
@@ -647,35 +646,25 @@ class ValidationRun:
         whole = todo == set(range(self.num_buckets))
         out = RuleSet(rules).run(self._filtered_ctx(ctx, None if whole else todo))
         try:
-            self._write(out["violations"].selectExpr(
-                "rule", "key", "`column`", "detail", "coalesce(bucket, -1) AS bucket"), "violations")
+            self._write(out["violations"].withColumn(
+                "bucket", F.expr("coalesce(bucket, -1)")), "violations")
             self._write(self._group_verdicts(ctx, rules, out), "verdicts")
             if out["metrics"] is not None:
-                self._write(out["metrics"].drop("run_id"), "metrics", ("rule",))
+                self._write(out["metrics"], "metrics")
         finally:
             out["violations"].unpersist()
         # r6: the manifest rows come from the verdicts parquet JUST
         # written, not from the verdict plan, which is not persisted: a
         # plan-side collect would re-execute the images scan and the
-        # violation aggregate. ONLY the read may fail as "no verdicts"
-        # (an empty partitioned write leaves no files); a schema or plan
-        # error in the select must surface, not record zero done buckets
-        try:
-            verd = self.spark.read.parquet(f"{self.out}/verdicts/run_id={self.run_id}")
-        except AnalysisException:
-            verd_rows = []
-        else:
-            # the dir also holds other rules and the buckets _inherit
-            # wrote (dynamic partition overwrite merges): the manifest
-            # 'done' rows must cover exactly the units COMPUTED here
-            aligned = [r.name for r in rules if r.bucket_aligned(ctx)]
-            verd_rows = verd.where(
-                (F.col("rule").isin(aligned) & F.col("bucket").isin(sorted(todo)))
-                | F.col("rule").isin([r.name for r in rules if r.name not in aligned])
-            ).select("rule", "bucket", "rows_scanned", "violation_count").collect()
+        # violation aggregate. The dir also holds other rules and the
+        # buckets _inherit wrote (dynamic partition overwrite merges):
+        # the manifest 'done' rows must cover exactly the units COMPUTED here
+        verd_rows = read_results(self.spark, self.out, "verdicts", self.run_id).where(
+            _units_sql({r.name: sorted(todo) if r.bucket_aligned(ctx) else None
+                        for r in rules})).collect()
         wall = float(time.time() - t0)
-        rows = [(self.run_id, r["rule"], int(r["bucket"]), "done", int(r["rows_scanned"]),
-                 int(r["violation_count"]), wall, seq) for r in verd_rows]
+        rows = [(self.run_id, r["rule"], r["bucket"], "done", r["rows_scanned"],
+                 r["violation_count"], wall, seq) for r in verd_rows]
         if rows:
             self._append_manifest(rows)
 
@@ -708,13 +697,18 @@ class ValidationRun:
             )
         return reduce(DataFrame.unionByName, parts)
 
-    def _write(self, df: DataFrame, kind: str, by: tuple = ("rule", "bucket")) -> None:
-        """Dynamic-overwrite ``df`` into ``<kind>/run_id=<id>/`` by ``by``:
+    def _write(self, df: DataFrame, kind: str) -> None:
+        """Dynamic-overwrite ``df``, projected onto the ``kind``'s
+        columns, into ``<kind>/run_id=<id>/`` by its partition columns:
         only the partitions ``df`` holds are replaced, whatever the
         session's overwrite mode (a static overwrite would wipe the
-        run's other rules)."""
-        df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-            *by).parquet(f"{self.out}/{kind}/run_id={self.run_id}")
+        run's other rules). A frame missing a column raises here, before
+        anything is written."""
+        names = [n for n, _ in RESULT_COLUMNS[kind]]
+        by = names[names.index("run_id") + 1:]
+        df.select(*[n for n in names if n != "run_id"]).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic").partitionBy(*by).parquet(
+            f"{self.out}/{kind}/run_id={self.run_id}")
 
     def split(self, images: DataFrame) -> str:
         """Write the clean/quarantine split for this run's violations.
@@ -736,40 +730,25 @@ class ValidationRun:
             key_col=self.key_col,
             bucket_expr=self.bucket_expr,
         )
-        try:
-            vio = self.violations()
-        except AnalysisException as e:
-            # ONLY a missing path means "fully-clean run wrote no
-            # violation files" — any other read failure (permissions,
-            # corrupt files, mistyped --output) must abort, not tag
-            # every known-bad row status=clean (same narrowing as
-            # streaming stream_dedup_exact's ledger read).
-            if not path_missing(e):
-                raise
-            vio = ctx.empty_violations()
-        parts = split_violations(ctx, vio)
+        # a clean run reads as no violations; an unreadable violations
+        # dir raises rather than tag every known-bad row status=clean
+        parts = split_violations(ctx, self.violations())
         path = f"{self.out}/split/run_id={self.run_id}"
         write_split(parts["tagged"], path)
         return path
 
-    # -- readers -----------------------------------------------------------
+    # -- readers (see read_results) ----------------------------------------
     def violations(self) -> DataFrame:
-        return self.spark.read.option("basePath", f"{self.out}/violations").parquet(
-            f"{self.out}/violations/run_id={self.run_id}"
-        )
+        return read_results(self.spark, self.out, "violations", self.run_id)
 
     def verdicts(self) -> DataFrame:
-        return self.spark.read.option("basePath", f"{self.out}/verdicts").parquet(
-            f"{self.out}/verdicts/run_id={self.run_id}"
-        )
+        return read_results(self.spark, self.out, "verdicts", self.run_id)
 
     def metrics(self) -> DataFrame:
-        """(rule, metric, column, value) for rules that emit metrics
-        (stats sketches, drift scores); empty-pattern read raises if no
+        """(metric, column, value, run_id, rule) for rules that emit
+        metrics (stats sketches, drift scores); an empty frame when no
         rule in the run produced metrics."""
-        return self.spark.read.option("basePath", f"{self.out}/metrics").parquet(
-            f"{self.out}/metrics/run_id={self.run_id}"
-        )
+        return read_results(self.spark, self.out, "metrics", self.run_id)
 
 
 def _publish_manifest_batch(
@@ -988,14 +967,8 @@ def compare_runs(
     (see :func:`verdict_regression`). ``run_a`` is the baseline (last
     known-good), ``run_b`` the run under test."""
     root = output_dir.rstrip("/")
-
-    def _verdicts(rid: str) -> DataFrame:
-        return (
-            spark.read.option("basePath", f"{root}/verdicts")
-            .parquet(f"{root}/verdicts/run_id={rid}")
-        )
-
-    return verdict_regression(_verdicts(run_a), _verdicts(run_b))
+    return verdict_regression(read_results(spark, root, "verdicts", run_a),
+                              read_results(spark, root, "verdicts", run_b))
 
 
 def _sweep_ghost_run_dirs(root: str, ghosts: set[str]) -> list[str]:

@@ -36,8 +36,9 @@ class StatsRule(Rule):
             n = sql_name(c)
             stats = [
                 ("count", f"count({n})"),
-                # CAST: a bare 1.0 is DECIMAL in SQL
-                ("null_frac", f"CAST(1.0 AS DOUBLE) - count({n}) / count(1)"),
+                # CAST: a bare 1.0 is DECIMAL in SQL; try_divide: NULL,
+                # not DIVIDE_BY_ZERO under ANSI, on an empty table
+                ("null_frac", f"CAST(1.0 AS DOUBLE) - try_divide(count({n}), count(1))"),
                 ("approx_distinct", f"approx_count_distinct({n})"),
             ]
             if self._numeric(ctx, c):

@@ -160,8 +160,7 @@ def test_crash_before_manifest_append_resumes_without_double_count(
 
 
 def test_verdict_readback_schema_error_raises(spark, data, tmp_path_factory):
-    """ADVICE r6: only the verdicts READ may count as "no verdicts". A
-    column-resolution error in the read-back (here a renamed
+    """ADVICE r6: a verdict frame missing a column (here a renamed
     rows_scanned) must raise, not append zero manifest rows that leave
     every bucket undone and silently rerun the rule on each resume."""
     from pyspark.errors import AnalysisException
@@ -507,6 +506,27 @@ def test_split_aborts_on_unreadable_violations(spark, data, tmp_path_factory):
     path = run2.split(images)
     quar = spark.read.parquet(path).where("status = 'quarantine'")
     assert quar.count() == 0
+
+
+def test_clean_run_reads_empty_and_splits_clean(spark, tmp_path_factory):
+    """A run with no violations leaves a violations dir without data
+    files: violations() reads it as an empty frame of the fixed schema
+    and split() tags every row clean."""
+    import os
+
+    images = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], "image_id string, w int")
+    out = str(tmp_path_factory.mktemp("clean_run"))
+    run = ValidationRun(spark, out, [UniquenessRule(["image_id"])], num_buckets=8,
+                        run_id="ok")
+    run.run(images)
+    assert os.path.isdir(f"{out}/violations/run_id=ok")
+    vio = run.violations()
+    assert vio.dtypes == [("key", "string"), ("column", "string"), ("detail", "string"),
+                          ("run_id", "string"), ("rule", "string"), ("bucket", "int")]
+    assert vio.count() == 0
+    split = spark.read.parquet(run.split(images))
+    assert {r["status"] for r in split.collect()} == {"clean"}
+    assert split.count() == images.count()
 
 
 def test_expire_runs_keep_last(spark, data, tmp_path_factory):
@@ -925,6 +945,52 @@ def test_incremental_inherits_table_level_and_guards(spark, data, tmp_path_facto
     # the damaged global rule recomputed; everything else inherited
     assert s4["rules_run"] == 1
     assert _vio_set(r4) == want
+
+
+def test_incremental_partial_cleanup_recomputes_the_gap(spark, data, tmp_path_factory):
+    """One aligned bucket's violation rows deleted from the base run:
+    that bucket's verdict vouches for rows that are gone, so only that
+    unit recomputes and day 2 still holds every base violation."""
+    import os
+
+    out = str(tmp_path_factory.mktemp("run_incr_gap"))
+    images, captions = data
+    base = ValidationRun(spark, out, make_rules(), num_buckets=8, run_id="c1")
+    base.run(images, captions, record_fingerprints=True)
+    want = _vio_set(base)
+    rdir = f"{out}/violations/run_id=c1/rule=referential"
+    victim = sorted(d for d in os.listdir(rdir) if d.startswith("bucket=") and d != "bucket=-1")[0]
+    shutil.rmtree(f"{rdir}/{victim}")
+
+    r2 = ValidationRun(spark, out, make_rules(), num_buckets=8, run_id="c2")
+    s2 = r2.run(images, captions, incremental_from="c1")
+    assert s2["rules_run"] == 1
+    assert s2["buckets_inherited"] == 3 * 8 - 1 + 1  # aligned x buckets - gap + drift
+    assert _vio_set(r2) == want
+
+
+def test_inherit_jobs_do_not_grow_with_rules(spark, data, tmp_path_factory):
+    """Inheritance is one batch: inheriting 2 or 4 rules starts the
+    same number of Spark jobs."""
+    from assetdatavalidationtool_spark.rules import RuleContext
+
+    out = str(tmp_path_factory.mktemp("run_incr_jobs"))
+    images, captions = data
+    ValidationRun(spark, out, make_rules(), num_buckets=8, run_id="j0").run(images, captions)
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (2, 4):
+        run = ValidationRun(spark, out, make_rules()[:n], num_buckets=8, run_id=f"j{n}")
+        ctx = RuleContext(spark=spark, images=images, captions=captions, num_buckets=8,
+                          run_id=run.run_id)
+        sc.setJobGroup(f"inherit{n}", f"inherit {n} rules")
+        try:
+            got = run._inherit(ctx, "j0", set(range(8)), {}, seq=1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert set(got) == {r.name for r in run.rules}
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(f"inherit{n}"))
+    assert 0 < jobs[2] == jobs[4], jobs
 
 
 def test_fingerprint_null_swap_detected(spark):

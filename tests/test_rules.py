@@ -229,6 +229,17 @@ def test_ruleset_empty_images_no_bucket_verdicts(spark, tiny):
     assert rows == [("schema", -1, 0, 2, False)]
 
 
+def test_stats_on_empty_table(spark, tiny):
+    """An empty table has no null fraction: NULL, not DIVIDE_BY_ZERO."""
+    empty = RuleContext(spark=spark, images=tiny.images.limit(0), num_buckets=8,
+                        bucket_expr=tiny.bucket_expr)
+    out = RuleSet([StatsRule(columns=["image_id", "w"])]).run(empty)
+    m = {(r["column"], r["metric"]): r["value"] for r in out["metrics"].collect()}
+    out["violations"].unpersist()
+    assert m[("w", "count")] == 0 and m[("image_id", "count")] == 0
+    assert m[("w", "null_frac")] is None and m[("image_id", "null_frac")] is None
+
+
 def test_ruleset_persist_false_same_verdicts(tiny):
     rules = [_tiny_schema(), UniquenessRule(["image_id"]), ReferentialRule()]
     assert _verdict_rows(tiny, rules, persist=False) == _verdict_rows(tiny, rules)
