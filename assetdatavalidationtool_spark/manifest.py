@@ -35,11 +35,12 @@ Semantics:
   keyed by (run_id, rule, bucket) — re-running a completed partition
   replaces rather than double-counts. The manifest is append-only;
   the LATEST status row per (run_id, rule, bucket) wins.
-* One reader: every result read goes through :func:`read_results`
-  with the kind's fixed schema (``RESULT_COLUMNS``). A run that wrote
-  nothing of a kind — no dir, or a dir without data files, as a clean
-  run's violations are — reads as an empty frame; any other read
-  failure surfaces.
+* One reader: every read-back goes through ``rules.base.read_table``
+  with a pinned schema — results through :func:`read_results` (the
+  kind's ``RESULT_COLUMNS``), the manifest and fingerprints with their
+  own. A run that wrote nothing of a kind — no dir, or a dir without
+  data files, as a clean run's violations are — reads as an empty
+  frame; any other read failure surfaces at the first action.
 * Incremental runs inherit the base run's results for unchanged
   buckets as one batch: one verdict read, one grouped count of the
   base violation rows, one write per output kind and one manifest
@@ -52,13 +53,12 @@ import dataclasses
 import time
 from functools import reduce
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .rules import (AudioInvariantRule, HeaderConsistencyRule, RowInvariantRule,
                     VideoInvariantRule)
-from .rules.base import Rule, RuleContext, RuleSet, path_missing, sql_lit
+from .rules.base import Rule, RuleContext, RuleSet, path_exists, read_table, sql_lit
 
 # Each result kind's columns as read back: the file columns, then the
 # partition columns in path order (<kind>/run_id=<id>/rule=<r>[/bucket=<b>]).
@@ -76,19 +76,12 @@ RESULT_COLUMNS = {
 def read_results(spark: SparkSession, root: str, kind: str, run_id: str) -> DataFrame:
     """One run's ``kind`` results (violations, verdicts or metrics) from
     the layout under ``root``, with ``run_id``, ``rule`` (and ``bucket``)
-    as columns. The fixed schema skips parquet footer inference and
-    reads a run dir without data files as an empty frame; a missing
-    path reads as the same empty frame. Any other failure (corrupt
-    files, permissions) raises."""
-    cols = RESULT_COLUMNS[kind]
-    try:
-        return spark.read.schema(", ".join(f"`{n}` {t}" for n, t in cols)).option(
-            "basePath", f"{root}/{kind}").parquet(f"{root}/{kind}/run_id={run_id}")
-    except AnalysisException as e:
-        if not path_missing(e):
-            raise
-        return spark.sql("SELECT " + ", ".join(f"CAST(NULL AS {t}) AS `{n}`" for n, t in cols)
-                         + " WHERE false")
+    as columns, through :func:`read_table` with the kind's fixed schema:
+    a missing path or a run dir without data files reads as an empty
+    frame; any other failure (corrupt files, permissions) raises."""
+    return read_table(spark, f"{root}/{kind}/run_id={run_id}",
+                      ", ".join(f"`{n}` {t}" for n, t in RESULT_COLUMNS[kind]),
+                      basePath=f"{root}/{kind}")
 
 
 def _units_sql(units: dict[str, list[int] | None]) -> str:
@@ -248,12 +241,13 @@ class ValidationRun:
         return f"{self.out}/fingerprints/run_id={run_id or self.run_id}"
 
     def read_manifest(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self._manifest_path())
-        except AnalysisException as e:
-            if not path_missing(e):  # unreadable ≠ no manifest yet
-                raise
+        """The manifest, or None before the layout's first batch. The
+        read is lazy: an unreadable manifest raises at the first action
+        (``completed``), never as "no manifest yet"."""
+        path = self._manifest_path()
+        if not path_exists(self.spark, path):
             return None
+        return read_table(self.spark, path, MANIFEST_SCHEMA)
 
     def completed(self, run_id: str | None = None) -> dict[str, set[int]]:
         """{rule: {buckets done}} for a run_id (latest status wins).
@@ -492,13 +486,9 @@ class ValidationRun:
         "_meta" compatibility row differs (num_buckets / key_col /
         bucket_expr / fingerprint mode), or when the side sets differ
         (e.g. the base run had no captions table)."""
-        try:
-            base_rows = self.spark.read.parquet(
-                self._fingerprints_path(base_run_id)
-            ).collect()
-        except AnalysisException as e:
-            if not path_missing(e):  # unreadable ≠ no fingerprints
-                raise
+        base_rows = read_table(self.spark, self._fingerprints_path(base_run_id),
+                               FINGERPRINT_SCHEMA).collect()
+        if not base_rows:
             return set()
         cur = {(r["side"], r["bucket"]): (r["n_rows"], r["fp"])
                for r in fp_rows}
@@ -843,7 +833,7 @@ def expire_runs(
         if output_dir.startswith("file://")
         else output_dir
     )
-    m = spark.read.parquet(f"{root}/manifest")
+    m = spark.read.schema(MANIFEST_SCHEMA).parquet(f"{root}/manifest")
     # Latest status per (run, rule, bucket); only LIVE ('done')
     # partitions define a run's existence and recency — tombstones
     # carry high seqs by design and must not make an expired run look

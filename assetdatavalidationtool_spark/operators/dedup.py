@@ -407,7 +407,7 @@ def connected_components(
     def _checkpoint(df: DataFrame, name: str) -> DataFrame:
         path = f"{root}/{name}"
         df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return spark.read.schema(df.schema).parquet(path)
 
     def _driver_finish() -> DataFrame:
         """Bounded driver finish: ONE Arrow ``toPandas`` plus a

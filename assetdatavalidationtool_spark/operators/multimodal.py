@@ -79,7 +79,7 @@ def row_batches(fn: Callable, fault: tuple | Callable, schema: T.StructType):
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
-        T.StructField("image_id", T.StringType(), False),
+        T.StructField("image_id", T.StringType(), True),
         T.StructField("decoded_w", T.IntegerType(), True),
         T.StructField("decoded_h", T.IntegerType(), True),
         T.StructField("mean_r", T.DoubleType(), True),
@@ -114,7 +114,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     plugs into the same per-row function."""
     schema = T.StructType(
         [
-            T.StructField("image_id", T.StringType(), False),
+            T.StructField("image_id", T.StringType(), True),
             T.StructField("bytes", T.BinaryType(), True),
             T.StructField("fmt", T.StringType(), True),
         ]
@@ -137,7 +137,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
     [
-        T.StructField("clip_id", T.StringType(), False),
+        T.StructField("clip_id", T.StringType(), True),
         T.StructField("sample_rate", T.IntegerType(), True),
         T.StructField("n_samples", T.LongType(), True),
         T.StructField("duration_sec", T.DoubleType(), True),
@@ -184,7 +184,7 @@ def audio_features(clips: DataFrame, id_col: str = "clip_id", bytes_col: str = "
 
 VIDEO_FRAMES_SCHEMA = T.StructType(
     [
-        T.StructField("video_id", T.StringType(), False),
+        T.StructField("video_id", T.StringType(), True),
         T.StructField("frame_idx", T.IntegerType(), False),
         T.StructField("frame_bytes", T.BinaryType(), True),
         T.StructField("n_frames", T.IntegerType(), True),

@@ -45,7 +45,7 @@ from .base import Rule, RuleContext, check_violations, sql_lit
 
 AUDIO_CHECK_SCHEMA = T.StructType(
     [
-        T.StructField("clip_id", T.StringType(), False),
+        T.StructField("clip_id", T.StringType(), True),
         T.StructField("decode_ok", T.BooleanType(), False),
         T.StructField("meta_ok", T.BooleanType(), True),
         T.StructField("ref_ok", T.BooleanType(), True),

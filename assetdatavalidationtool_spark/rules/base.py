@@ -47,11 +47,31 @@ def violation_rows(spark: SparkSession, rows: list[tuple] | tuple = ()) -> DataF
     return spark.sql(f"SELECT {cols} FROM VALUES {values}", args=args)
 
 
-def path_missing(e: Exception) -> bool:
-    """True when a read failed only because its path does not exist —
-    the one read failure that means "nothing written yet". Any other
-    failure (corrupt files, permissions) must surface."""
-    return "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e)
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the session's Hadoop
+    ``FileSystem`` for the path's scheme (local, HDFS, object stores)."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath)
+
+
+def read_table(spark: SparkSession, path: str, schema: str | T.StructType,
+               **options) -> DataFrame:
+    """The parquet table at ``path`` read with a pinned ``schema`` — the
+    one reader of every table the package writes and reads back.
+
+    A path the session's Hadoop ``FileSystem`` does not find means
+    "nothing written yet" and reads as zero rows of ``schema`` (an
+    inline relation Catalyst folds at plan time). An existing path is
+    read lazily: nothing is inferred, so no job starts before an
+    action, and any failure (corrupt files, permissions) surfaces there."""
+    if path_exists(spark, path):
+        return spark.read.options(**options).schema(schema).parquet(path)
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.sql("SELECT " + ", ".join(
+        f"CAST(NULL AS {f.dataType.simpleString()}) AS {sql_name(f.name)}" for f in schema)
+        + " WHERE false")
 
 
 @dataclass

@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import Rule, RuleContext, path_missing, violation_rows
+from .base import Rule, RuleContext, sql_lit, violation_rows
 
 
 def histogram(df: DataFrame, col: str, kind: str, lo: float = 0.0, hi: float = 1024.0,
@@ -162,42 +162,27 @@ def persist_snapshot(
     return path
 
 
-def _snapshot_path(output_dir: str, run_id: str, column: str) -> str:
-    return f"{output_dir.rstrip('/')}/metrics/run_id={run_id}/rule=snapshot({column})"
-
-
 def _read_snapshot(spark, output_dir: str, run_id: str, column: str):
-    """Read snapshot rows with a usable error: a missing path reports
-    which snapshot columns the run DID record (or that it recorded
-    none) instead of a raw parquet path-not-found."""
-    import glob as _glob
+    """Read snapshot rows with a usable error: a column without a
+    snapshot reports which snapshot columns the run DID record (or that
+    it recorded none) instead of a raw parquet path-not-found."""
+    from ..manifest import read_results
 
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(
-            _snapshot_path(output_dir, run_id, column)
-        ).collect()
-    except AnalysisException as exc:
-        # ONLY a missing path means "no snapshot recorded" — a corrupt
-        # or unreadable snapshot must surface as-is, not as a
-        # self-contradictory "run recorded no snapshot" hint (same
-        # narrowing as ValidationRun.split / stream_dedup_exact)
-        if not path_missing(exc):
-            raise
-        run_dir = f"{output_dir.rstrip('/')}/metrics/run_id={run_id}"
-        recorded = sorted(
-            p.split("rule=snapshot(")[1].rstrip(")")
-            for p in _glob.glob(f"{run_dir}/rule=snapshot(*)")
-        )
-        hint = (
-            f"it recorded snapshots for columns {recorded}"
-            if recorded
-            else "it recorded no snapshots (run it with --snapshot COL:KIND)"
-        )
-        raise FileNotFoundError(
-            f"run {run_id!r} has no snapshot for column {column!r}: {hint}"
-        ) from exc
+    snaps = read_results(spark, output_dir.rstrip("/"), "metrics", run_id).where(
+        "rule LIKE 'snapshot(%'")
+    rows = snaps.where(f"rule = {sql_lit(f'snapshot({column})')}").collect()
+    if rows:
+        return rows
+    recorded = sorted(r["rule"][len("snapshot("):-1]
+                      for r in snaps.select("rule").distinct().collect())
+    hint = (
+        f"it recorded snapshots for columns {recorded}"
+        if recorded
+        else "it recorded no snapshots (run it with --snapshot COL:KIND)"
+    )
+    raise FileNotFoundError(
+        f"run {run_id!r} has no snapshot for column {column!r}: {hint}"
+    )
 
 
 def load_snapshot(spark, output_dir: str, run_id: str, column: str) -> dict[str, float]:

@@ -43,7 +43,7 @@ from .base import Rule, RuleContext, check_violations
 
 CHECK_SCHEMA = T.StructType(
     [
-        T.StructField("image_id", T.StringType(), False),
+        T.StructField("image_id", T.StringType(), True),
         T.StructField("psnr_db", T.DoubleType(), True),
         T.StructField("pixel_ok", T.BooleanType(), True),
         T.StructField("caption_ok", T.BooleanType(), True),

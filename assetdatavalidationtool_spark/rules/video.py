@@ -43,7 +43,7 @@ from .base import Rule, RuleContext, check_violations
 
 VIDEO_CHECK_SCHEMA = T.StructType(
     [
-        T.StructField("video_id", T.StringType(), False),
+        T.StructField("video_id", T.StringType(), True),
         T.StructField("decode_ok", T.BooleanType(), False),
         T.StructField("meta_ok", T.BooleanType(), True),
         T.StructField("frames_ok", T.BooleanType(), True),

@@ -30,7 +30,7 @@ def write_report_tables(
     counts: dict[str, int] = {}
     for name, df in tables.items():
         df.write.mode("overwrite").format(fmt).save(f"{out}/{name}")
-        counts[name] = spark.read.format(fmt).load(f"{out}/{name}").count()
+        counts[name] = spark.read.format(fmt).schema(df.schema).load(f"{out}/{name}").count()
         # bounded, sorted preview — the reference's Take(100) per source
         # (ReportGenerator.cs:467) with deterministic order
         first_col = df.columns[0]

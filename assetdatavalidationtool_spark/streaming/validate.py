@@ -27,7 +27,40 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import IMAGES_SCHEMA
-from ..rules.base import Rule, RuleContext, RuleSet, path_missing
+from ..rules.base import Rule, RuleContext, RuleSet, read_table
+
+
+def _run_stream(spark: SparkSession, schema, input_dir: str, checkpoint_dir: str,
+                process_batch, max_files_per_trigger: int | None, available_now: bool):
+    """Run ``process_batch(batch_df, batch_id)`` on each micro-batch of
+    the parquet files landing in ``input_dir`` (read with ``schema``).
+    With ``available_now`` the stream drains what is there and returns
+    the finished query; otherwise the running query is returned."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    writer = (
+        reader.parquet(input_dir).writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if not available_now:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
+def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Idempotent replay: dynamic-overwrite exactly this batch's
+    ``batch_id=N`` partition of ``path``, so a replayed batch rewrites
+    its rows instead of appending duplicates."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
 
 
 def stream_validate(
@@ -42,10 +75,6 @@ def stream_validate(
 ):
     """Start (and by default drain) a validation stream over parquet
     files landing in ``input_dir``. Returns the StreamingQuery."""
-    reader = spark.readStream.schema(IMAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not rules:
@@ -59,28 +88,13 @@ def stream_validate(
         )
         out = RuleSet(rules).run(ctx)
         try:
-            for kind, df in (("violations", out["violations"]),
-                             ("verdicts", out["verdicts"].drop("run_id"))):
-                # idempotent replay: overwrite exactly this batch's partition
-                (
-                    df.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(f"{output_dir}/{kind}")
-                )
+            _write_batch(out["violations"], batch_id, f"{output_dir}/violations")
+            _write_batch(out["verdicts"].drop("run_id"), batch_id, f"{output_dir}/verdicts")
         finally:
             out["violations"].unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _run_stream(spark, IMAGES_SCHEMA, input_dir, checkpoint_dir, process_batch,
+                       max_files_per_trigger, available_now)
 
 
 def windowed_event_counts(
@@ -269,10 +283,6 @@ def stream_drift_monitor(
     """
     from ..rules.drift import histogram, ks_psi
 
-    reader = spark.readStream.schema(spark.read.parquet(input_dir).schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
     monitor_dir = f"{output_dir}/drift_monitor"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -289,29 +299,12 @@ def stream_drift_monitor(
                 else "pass"
             )
             row = (column, n, float(ks), float(psi), status)
-        (
-            spark.createDataFrame(
-                [row],
-                "column string, n_rows long, ks double, psi double, "
-                "status string",
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(monitor_dir)
-        )
+        _write_batch(spark.createDataFrame(
+            [row], "column string, n_rows long, ks double, psi double, status string"),
+            batch_id, monitor_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _run_stream(spark, spark.read.parquet(input_dir).schema, input_dir,
+                       checkpoint_dir, process_batch, max_files_per_trigger, available_now)
 
 
 def stream_dedup_exact(
@@ -344,19 +337,11 @@ def stream_dedup_exact(
     Within a batch, the kept copy is the min-id row per digest — the
     same canonical policy as the batch ``exact_duplicates`` operator.
     """
-    reader = spark.readStream.schema(
-        spark.read.parquet(input_dir).schema
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
     ledger_dir = f"{output_dir}/digest_ledger"
     kept_dir = f"{output_dir}/kept"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
-
-        from pyspark.errors import AnalysisException
 
         w = Window.partitionBy("digest").orderBy(id_col)
         digested = batch_df.withColumn("digest", F.md5(F.col(bytes_col)))
@@ -371,46 +356,15 @@ def stream_dedup_exact(
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        try:
-            seen = spark.read.parquet(ledger_dir).where(
-                F.col("batch_id") < batch_id
-            ).select("digest")
-        except AnalysisException as e:
-            # ONLY a missing ledger means "first batch". Any other read
-            # failure (corrupt file, transient IO) must abort the batch:
-            # swallowing it would skip the anti-join and let previously
-            # seen digests back in, permanently breaking the ledger's
-            # one-row-per-digest invariant.
-            if not path_missing(e):
-                raise
-            seen = None
-        kept = batch if seen is None else batch.join(
-            seen, "digest", "left_anti"
-        )
-        kept = kept.unionByName(null_rows)
-        kept = kept.withColumn("batch_id", F.lit(batch_id)).persist()
-        (
-            kept.drop(bytes_col).write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(kept_dir)
-        )
-        (
-            kept.where(F.col("digest").isNotNull())
-            .select("digest", "batch_id").write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(ledger_dir)
-        )
+        # a missing ledger (first batch) anti-joins against no rows; any
+        # other read failure (corrupt file, transient IO) aborts the batch
+        # rather than let previously seen digests back in
+        seen = read_table(spark, ledger_dir, "digest string, batch_id int").where(
+            f"batch_id < {batch_id}").select("digest")
+        kept = batch.join(seen, "digest", "left_anti").unionByName(null_rows).persist()
+        _write_batch(kept.drop(bytes_col), batch_id, kept_dir)
+        _write_batch(kept.where("digest IS NOT NULL").select("digest"), batch_id, ledger_dir)
         kept.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _run_stream(spark, spark.read.parquet(input_dir).schema, input_dir,
+                       checkpoint_dir, process_batch, max_files_per_trigger, available_now)

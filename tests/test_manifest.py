@@ -196,10 +196,55 @@ def test_unreadable_manifest_or_fingerprints_raise(spark, tmp_path_factory):
         os.makedirs(d)
         with open(f"{d}/part-0.parquet", "wb") as f:
             f.write(b"not parquet at all")
+    # the manifest read is lazy: completed(), its consumer, must raise
     with pytest.raises(Exception, match="not a Parquet file"):
-        run.read_manifest()
+        run.completed()
     with pytest.raises(Exception, match="not a Parquet file"):
         run._unchanged_buckets([], "b0")
+
+
+def test_read_table_pins_schema_and_starts_no_job(spark, tmp_path_factory):
+    """``read_table``: a missing path is an empty frame of exactly the
+    pinned schema and starts no job; an existing table starts none until
+    an action (an inferred read starts one to read a footer); a dir
+    holding a non-parquet file raises at the first action."""
+    import os
+
+    from assetdatavalidationtool_spark.manifest import MANIFEST_SCHEMA
+    from assetdatavalidationtool_spark.rules.base import read_table
+
+    sc = spark.sparkContext
+    out = str(tmp_path_factory.mktemp("read_table"))
+
+    def jobs(group, fn):
+        """``fn()`` and the number of jobs it started."""
+        sc.setJobGroup(group, group)
+        try:
+            res = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    empty = read_table(spark, f"{out}/nothing", MANIFEST_SCHEMA)
+    assert empty.schema.simpleString() == (
+        "struct<run_id:string,rule:string,bucket:bigint,status:string,"
+        "rows_scanned:bigint,violation_count:bigint,wall_sec:double,seq:bigint>")
+    assert jobs("rt_missing", empty.collect) == ([], 0)
+
+    spark.createDataFrame([("r", "x", 0, "done", 1, 0, 0.0, 1)], MANIFEST_SCHEMA) \
+        .write.parquet(f"{out}/m")
+    df, n = jobs("rt_pinned", lambda: read_table(spark, f"{out}/m", MANIFEST_SCHEMA))
+    assert n == 0
+    assert [r["rule"] for r in df.collect()] == ["x"]
+    _, n = jobs("rt_inferred", lambda: spark.read.parquet(f"{out}/m"))
+    assert n == 1
+
+    os.makedirs(f"{out}/bad")
+    with open(f"{out}/bad/part-0.parquet", "wb") as f:
+        f.write(b"not parquet at all")
+    bad = read_table(spark, f"{out}/bad", MANIFEST_SCHEMA)
+    with pytest.raises(Exception, match="not a Parquet file"):
+        bad.collect()
 
 
 def test_audio_video_rules_are_bucket_aligned():

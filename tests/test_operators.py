@@ -206,6 +206,22 @@ def test_multimodal_image_features_and_resize(spark):
     assert all(not r["decode_ok"] for r in got)
 
 
+def test_image_features_null_key_yields_fault_row(spark):
+    """A null image_id is a fault row (decode_ok False), not a failed
+    task: the output key field is nullable like the input's."""
+    from pyspark.sql import types as T
+
+    from assetdatavalidationtool_spark.datagen import IMAGES_SCHEMA, make_row
+    from assetdatavalidationtool_spark.operators.multimodal import image_features
+
+    rows = [make_row(1), make_row(2)]
+    rows[1]["image_id"] = None
+    schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in IMAGES_SCHEMA])
+    got = {r["image_id"]: r["decode_ok"]
+           for r in image_features(spark.createDataFrame(rows, schema)).collect()}
+    assert got == {rows[0]["image_id"]: True, None: False}
+
+
 def test_video_frame_sampling_y4m(spark):
     """Real end-to-end video path: synthesize Y4M clips, sample every
     n-th frame in the Arrow batch UDF, verify the PLANTED moving-square

@@ -410,6 +410,25 @@ def test_row_invariant_undecodable_bytes_keep_caption_check(spark):
     ]
 
 
+def test_row_invariant_null_key_yields_fault_row(spark):
+    """A null image_id is the harness's fault row (error 'null
+    image_id') and a bytes violation; the action completes."""
+    from pyspark.sql import types as T
+
+    from assetdatavalidationtool_spark.datagen import IMAGES_SCHEMA, make_row
+
+    rows = [make_row(1), make_row(2)]
+    rows[1]["image_id"] = None
+    schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in IMAGES_SCHEMA])
+    ctx = RuleContext(spark=spark, images=spark.createDataFrame(rows, schema),
+                      captions=None, num_buckets=8)
+    rule = RowInvariantRule()
+    assert [(r["image_id"], r["error"]) for r in rule.checks(ctx).collect()
+            if r["error"]] == [(None, "null image_id")]
+    assert (None, "bytes", "pixel decode failed: null image_id") in {
+        (r["key"], r["column"], r["detail"]) for r in rule.violations(ctx).collect()}
+
+
 def _media_batch(kind):
     """(batch function, codec it calls, fault flag column, one clean
     input row as a pandas frame) for each per-row media rule."""

@@ -9,11 +9,15 @@ fixtures (120 images, 8 buckets) and dumps, per scenario, each
 ``run()`` summary plus sorted rows of ``violations()``, ``verdicts()``,
 ``metrics()``, the split and the manifest (minus ``wall_sec`` and
 ``seq``). A reader or run that raises is recorded as ``ERR <class>``.
+Each scenario runs in its own Spark job group; the number of jobs it
+started (``statusTracker``) is recorded under its ``jobs`` key.
 Extra arguments pick scenarios by name. One process per checkout takes
 about 4 min on 4 cores.
 
-``diff`` prints every path whose value differs between two dumps; no
-output means identical.
+``diff`` prints every output path whose value differs between two
+dumps, then each scenario's job count delta (``JOBS name: a -> b``) on
+its own lines. It exits non-zero only on an output difference; no
+``DIFF`` line means identical outputs.
 
 The bug-fix scenarios carry their own check: ``partial_cleanup``
 (one bucket dir of a base run's violations deleted before an
@@ -188,6 +192,7 @@ def run(checkout: str, out_json: str, only: list[str]) -> None:
                                           run_id="e").run(empty, captions))
         return {"summary": s, **dump(out, "e", empty, num_buckets=8)}
 
+    sc = spark.sparkContext
     results = {}
     for fn in (fresh, canary, partial, incremental, custom_bucket, schema_table_level,
                global_uniqueness, empty_images, partial_cleanup, empty_stats):
@@ -195,10 +200,13 @@ def run(checkout: str, out_json: str, only: list[str]) -> None:
         if only and name not in only:
             continue
         out = tempfile.mkdtemp(prefix=f"parity_{name}_")
+        sc.setJobGroup(name, name)
         try:
             results[name] = fn(out)
         finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
             shutil.rmtree(out, ignore_errors=True)
+        results[name]["jobs"] = len(sc.statusTracker().getJobIdsForGroup(name))
         print(name, "done", flush=True)
     with open(out_json, "w") as f:
         json.dump(results, f, indent=1, sort_keys=True, default=str)
@@ -228,8 +236,13 @@ def diff(a_json: str, b_json: str) -> int:
             print("  a:", str(x)[:300])
             print("  b:", str(y)[:300])
 
-    for k in sorted(set(a) & set(b)):
-        walk(a[k], b[k], [k])
+    common = sorted(set(a) & set(b))
+    for k in common:
+        walk({**a[k], "jobs": None}, {**b[k], "jobs": None}, [k])
+    for k in common:
+        ja, jb = a[k].get("jobs"), b[k].get("jobs")
+        if ja != jb:
+            print(f"JOBS {k}: {ja} -> {jb}")
     return n
 
 
