@@ -782,7 +782,10 @@ _LSH_PAIRS_SELECT = """
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mega-bucket guard ON (and mirrored in the oracle): buckets above 50
     # docs are near-certain boilerplate clusters that would emit O(n²)
-    # candidate pairs — the 100 TB scale hazard for banded LSH.
+    # candidate pairs — the 100 TB scale hazard for banded LSH. Spark
+    # counts buckets with a window on the pair join's exchange
+    # (dedup.drop_hot_groups); the oracle's `hot` anti-join keeps the
+    # same rows.
     return minhash_lsh_candidates(
         _t(spark, sf_dir, "documents"), "doc_id", "text",
         n=3, num_hashes=8, bands=4, max_bucket_size=50,
@@ -992,9 +995,9 @@ def q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Bucket-local ANN top-k (operators/similarity.py::lsh_ann_topk):
 # bounded query block (vec_id < 20), candidates only from the query's
-# own sign bucket, hot-bucket guard wired (anti-join in the plan; cap
-# above test-SF bucket sizes so values are bucket-exact — the pytest
-# plants a hot bucket to prove the drop).
+# own sign bucket, hot-bucket guard wired (a window count filter in the
+# plan, dedup.drop_hot_groups; cap above test-SF bucket sizes so values
+# are bucket-exact — the pytest plants a hot bucket to prove the drop).
 _LSH_BUCKET_CAP = 10000
 _LSH_BUCKET_EXPR = " + ".join(
     f"(CASE WHEN list_dot_product(v, {_PLANE_LITS[i]}) > 0 THEN {2**i} ELSE 0 END)"
@@ -1612,9 +1615,10 @@ def q_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Multi-probe IVF ANN top-k (operators/similarity.py::ivf_topk): bounded
 # query block (vec_id < 20), each query probes its 2 nearest cells,
-# candidates only from probed cells; mega-cell guard wired (anti-join in
-# the plan; cap chosen above the test-SF cell sizes so values are
-# quantizer-exact — the pytest plants a hot cell to prove the drop).
+# candidates only from probed cells; mega-cell guard wired (a window
+# count filter in the plan, dedup.drop_hot_groups; cap chosen above the
+# test-SF cell sizes so values are quantizer-exact — the pytest plants a
+# hot cell to prove the drop).
 # ---------------------------------------------------------------------------
 from .operators.similarity import ivf_topk  # noqa: E402
 

@@ -34,11 +34,12 @@ Scale design (what matters at 10^12 rows):
   cards share hashes; our synthetic table clusters the top byte by
   fmt/size on purpose). A bucket of b rows emits b² candidate pairs, so
   buckets above ``max_bucket_size`` are dropped via a broadcast
-  anti-join BEFORE the pair join — the same mega-bucket guard as
-  MinHash LSH (`dedup.py::minhash_lsh_candidates`). Dropped buckets are
-  near-certain exact-duplicate clusters; route those through the O(n)
-  exact uniqueness rule (`rules/uniqueness.py`) instead of the O(b²)
-  pair join.
+  anti-join BEFORE the pair join — the same cap as MinHash LSH's
+  mega-bucket guard (`dedup.py::drop_hot_groups`, a window count
+  there; here the per-band hot flags reuse the hot list). Dropped
+  buckets are near-certain exact-duplicate clusters; route those
+  through the O(n) exact uniqueness rule (`rules/uniqueness.py`)
+  instead of the O(b²) pair join.
 * Everything is built-in Column expressions (shift/mask/xor/bit_count)
   — JVM codegen, no Python, no UDFs.
 """

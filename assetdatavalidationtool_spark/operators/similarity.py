@@ -16,6 +16,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .dedup import drop_hot_groups
+
 
 def _dvec(a: F.Column) -> F.Column:
     """float[] → double[] before any arithmetic: keeps accumulation in
@@ -122,23 +124,6 @@ def lsh_buckets(
     )
 
 
-def _drop_hot_groups(
-    df: DataFrame, group_cols: list[str], cap: int
-) -> DataFrame:
-    """Mega-bucket/mega-cell skew guard: drop rows whose group exceeds
-    ``cap`` members via a broadcast anti-join (same pattern as
-    dedup.minhash_lsh_candidates). A single hot group makes the pair
-    join Σ|group|² — the 100 TB scale-killer — and a group that hot is a
-    degenerate hash/quantizer region, not a useful candidate set."""
-    hot = (
-        df.groupBy(*group_cols)
-        .count()
-        .where(F.col("count") > cap)
-        .select(*group_cols)
-    )
-    return df.join(F.broadcast(hot), group_cols, "left_anti")
-
-
 def lsh_ann_topk(
     df: DataFrame,
     id_col: str,
@@ -153,8 +138,9 @@ def lsh_ann_topk(
     (bucket-local joins instead of a full cross product).
 
     ``max_bucket_size`` drops candidate vectors in buckets above the cap
-    before the pair join (broadcast anti-join — a near-duplicate cluster
-    or degenerate hyperplane cell would otherwise emit O(n²) pairs).
+    before the pair join (``dedup.drop_hot_groups``: a window count on
+    the join's own exchange — a near-duplicate cluster or degenerate
+    hyperplane cell would otherwise emit O(n²) pairs).
     ``query_ids`` restricts the query side to a bounded block (the
     corpus side still streams once)."""
     # per-vector norm staged once (r6) — see brute_force_cosine_topk
@@ -165,7 +151,7 @@ def lsh_ann_topk(
         _bucket_expr(vec_col, planes).alias("bucket"),
     )
     if max_bucket_size is not None:
-        with_b = _drop_hot_groups(with_b, ["bucket"], max_bucket_size)
+        with_b = drop_hot_groups(with_b, ["bucket"], max_bucket_size)
     a = with_b.select(
         F.col("_vid").alias("query_id"), F.col("_vec").alias("q"),
         F.col("_nrm").alias("nq"), "bucket"
@@ -390,7 +376,8 @@ def ivf_topk(
     * ``query_ids`` — bound the query block; the corpus (inverted file)
       still streams once.
     * ``max_cell_size`` — drop CANDIDATE vectors in cells above the cap
-      (broadcast anti-join). A mega-cell is a degenerate quantizer
+      (``dedup.drop_hot_groups``, a window count on the pair join's
+      exchange). A mega-cell is a degenerate quantizer
       region whose pair join is |cell|²; queries assigned there still
       probe their other n_probe−1 cells.
 
@@ -418,7 +405,7 @@ def ivf_topk(
             _cell_expr(vec_col, centroids).alias("cell"),
         )
     if max_cell_size is not None:
-        corpus = _drop_hot_groups(corpus, ["cell"], max_cell_size)
+        corpus = drop_hot_groups(corpus, ["cell"], max_cell_size)
 
     q = df
     if query_ids is not None:
@@ -471,7 +458,7 @@ def embedding_near_duplicates(
 
     Multi-table LSH (L independent hyperplane tables) fixes single-table
     recall: near-identical vectors only need to share a bucket in ONE
-    table. Dataflow: bucket per (table, vector) → hot-bucket anti-join
+    table. Dataflow: bucket per (table, vector) → hot-bucket window-count
     guard → bucket-local candidate pairs → DISTINCT pairs (so each pair's
     cosine is computed once, not once per agreeing table) → join the
     vectors back by id and refine with the exact cosine. At 10^12 rows
@@ -488,7 +475,7 @@ def embedding_near_duplicates(
         )
         banded = part if banded is None else banded.unionByName(part)
     if max_bucket_size is not None:
-        banded = _drop_hot_groups(banded, ["tbl", "bucket"], max_bucket_size)
+        banded = drop_hot_groups(banded, ["tbl", "bucket"], max_bucket_size)
 
     a = banded.alias("a")
     b = banded.alias("b")

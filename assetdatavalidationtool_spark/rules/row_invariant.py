@@ -22,7 +22,9 @@ Execution shape (the scale-critical part):
   is only ``(image_id, psnr_db, pixel_ok, caption_ok, error)`` — a few
   dozen bytes/row.
 * The caption is checked whenever the id names a reference row, also
-  when the bytes fail to decode.
+  when the bytes fail to decode. An id that names none (null, or no
+  ``<prefix>_<n>`` index) has nothing to compare the caption against:
+  its ``caption_ok`` is NULL and it yields only its ``bytes`` violation.
 * The reference rendering is *regenerated from image_id on the
   executor* (datagen.render_image is a pure function), never broadcast
   or shuffled — SURVEY.md §7.3.
@@ -61,8 +63,8 @@ def _expected(image_id: str | None) -> dict | None:
 
 def _check_row(image_id, data, fmt, caption):
     expected = _expected(image_id)
-    if expected is None:  # no reference rendering for this id
-        return np.nan, False, False
+    if expected is None:  # no reference: no pixels, no caption to compare
+        return np.nan, False, None
     ref = render_image(image_id, expected["w"], expected["h"])
     p = codecs.psnr(ref, codecs.decode_image(data, fmt))
     # +inf (exact match) → 999.0 display sentinel; -inf (shape mismatch)
@@ -81,7 +83,7 @@ def _check_row(image_id, data, fmt, caption):
 def _fault_row(image_id, data, fmt, caption):
     # the caption check needs only the id, not the bytes
     expected = _expected(image_id)
-    return np.nan, False, expected is not None and caption == expected["caption"]
+    return np.nan, False, None if expected is None else caption == expected["caption"]
 
 
 _check_batches = row_batches(_check_row, _fault_row, CHECK_SCHEMA)

@@ -84,6 +84,23 @@ def test_minhash_lsh_candidates_include_near_dups(docs):
     assert (3, 4) not in cands
 
 
+def test_drop_hot_groups_keeps_null_keys(spark):
+    """A group above ``cap`` is dropped; a null-key group is kept at any
+    size, as the anti-join it replaces kept it (a null matches no hot
+    group)."""
+    from assetdatavalidationtool_spark.operators.dedup import drop_hot_groups
+
+    cap = 3
+    rows = ([(i, None) for i in range(cap + 2)]       # null group > cap
+            + [(10 + i, "hot") for i in range(cap + 1)]
+            + [(20 + i, "ok") for i in range(cap)])
+    df = spark.createDataFrame(rows, "id int, k string")
+    kept = drop_hot_groups(df, ["k"], cap)
+    assert kept.columns == ["id", "k"]
+    assert sorted(r["id"] for r in kept.collect()) == (
+        list(range(cap + 2)) + [20 + i for i in range(cap)])
+
+
 def test_simhash_similarity_ordering(docs):
     sh = {r["doc_id"]: r["simhash"] for r in simhash(docs, "doc_id", "text").collect()}
     ham = lambda a, b: bin(a ^ b).count("1")
@@ -334,9 +351,9 @@ def test_ivf_hot_cell_guard_drops_mega_cell(vectors, spark):
     # the pair 0↔1 lives in a healthy cell and is still found
     top_for_0 = [r for r in rows if r["query_id"] == 0]
     assert top_for_0 and top_for_0[0]["neighbor_id"] == 1
-    # the guard is a broadcast anti-join in the plan
+    # the guard is a window count filter in the plan
     plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan
+    assert "_group_rows" in plan and "windowspecdefinition(cell" in plan
 
 
 def test_lsh_ann_hot_bucket_guard(vectors, spark):

@@ -18,6 +18,7 @@ from assetdatavalidationtool_spark.datagen import (
     generate_images,
     generate_videos,
 )
+from assetdatavalidationtool_spark.operators import minhash_lsh_candidates
 from assetdatavalidationtool_spark.rules import (
     AudioInvariantRule,
     ReferentialRule,
@@ -130,15 +131,55 @@ def test_normalize_values_stays_codegen(spark):
 def test_dedup_contract_plans_carry_skew_guards(spark):
     """The VERIFIED plans (what the driver correctness-checks and the
     bench times) must be the scale-safe variants: the stop-shingle /
-    mega-bucket caps appear as broadcast anti-joins in the physical
-    plan — not as optional parameters someone remembered to pass."""
-    for name in ("dedup_ngram_jaccard", "dedup_minhash_lsh", "similarity_ivf_topk",
-                 "dedup_embedding_neardup", "phash_neardup"):
+    mega-bucket caps appear in the physical plan — not as optional
+    parameters someone remembered to pass. Stop-shingle and pHash guards
+    are broadcast anti-joins; the pair-join guards are a window count
+    filtered on the join's own exchange (``dedup.drop_hot_groups``)."""
+    for name in ("dedup_ngram_jaccard", "phash_neardup"):
         p = plan(QUERIES[name].fn(spark, SF))
         assert "LeftAnti" in p, f"{name}: skew-guard anti-join missing from plan"
         assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p, (
             f"{name}: guard should broadcast the hot-group list"
         )
+    for name in ("dedup_minhash_lsh", "similarity_ivf_topk", "dedup_embedding_neardup"):
+        p = plan(QUERIES[name].fn(spark, SF))
+        assert re.search(r"count\(1\) windowspecdefinition\(.*AS _group_rows", p), (
+            f"{name}: skew-guard window count missing from plan"
+        )
+        assert re.search(r"Condition : .*_group_rows#\d+L <= \d+", p), (
+            f"{name}: guard should filter on the group count"
+        )
+
+
+def _completed_multi_task_stages(spark, group, action):
+    """Sorted task counts of the stages ``action`` completed with more
+    than one task, read from the status tracker of its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = (st.getStageInfo(s) for j in st.getJobIdsForGroup(group)
+              for s in st.getJobInfo(j).stageIds)
+    return sorted(i.numCompletedTasks for i in stages
+                  if i is not None and i.numCompletedTasks > 1)
+
+
+def test_minhash_lsh_guard_runs_shingling_once(spark):
+    """The mega-bucket guard adds no stage: with the guard on, the scan,
+    shingle and MinHash stages run once each, as they do without it (a
+    separate count branch ran all of them a second time)."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+
+    def run(cap):
+        return lambda: minhash_lsh_candidates(
+            docs, "doc_id", "text", max_bucket_size=cap).count()
+
+    guarded = _completed_multi_task_stages(spark, "lsh_guard_on", run(50))
+    plain = _completed_multi_task_stages(spark, "lsh_guard_off", run(None))
+    assert guarded and guarded == plain
 
 
 def test_jaccard_self_join_reuses_shuffle(spark):

@@ -429,6 +429,27 @@ def test_row_invariant_null_key_yields_fault_row(spark):
         (r["key"], r["column"], r["detail"]) for r in rule.violations(ctx).collect()}
 
 
+def test_row_invariant_unreferenced_id_skips_caption_check(spark):
+    """An id naming no reference (null, or no trailing index) has no
+    caption to compare: ``caption_ok`` is NULL and the row yields only
+    its bytes violation, never a ``caption mismatch``."""
+    from pyspark.sql import types as T
+
+    from assetdatavalidationtool_spark.datagen import IMAGES_SCHEMA, make_row
+
+    rows = [make_row(1), make_row(2), make_row(3)]
+    rows[1]["image_id"] = None
+    rows[2]["image_id"] = "img_x"
+    schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in IMAGES_SCHEMA])
+    ctx = RuleContext(spark=spark, images=spark.createDataFrame(rows, schema),
+                      captions=None, num_buckets=8)
+    rule = RowInvariantRule()
+    caption_ok = {r["image_id"]: r["caption_ok"] for r in rule.checks(ctx).collect()}
+    assert caption_ok == {rows[0]["image_id"]: True, None: None, "img_x": None}
+    assert sorted(((r["key"] or ""), r["column"]) for r in rule.violations(ctx).collect()) == [
+        ("", "bytes"), ("img_x", "bytes")]
+
+
 def _media_batch(kind):
     """(batch function, codec it calls, fault flag column, one clean
     input row as a pandas frame) for each per-row media rule."""
