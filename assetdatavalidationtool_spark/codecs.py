@@ -25,7 +25,6 @@ any other exception is an engine fault.
 
 from __future__ import annotations
 
-import os
 import struct
 import zlib
 
@@ -35,37 +34,6 @@ import numpy as np
 # data — the per-row media harness turns exactly these into row faults
 DATA_ERRORS = (ValueError, zlib.error, struct.error)
 
-
-def _try_import_c_png_decoder():
-    """C-backed PNG decode seam: when Pillow (libpng/zlib-C) is
-    importable, PNG decode — the hottest kernel in the image validation
-    pass — routes through it (~10x on this kernel, BENCH/BASELINE.md).
-    Pixel output is bit-identical by construction: PNG is lossless, so
-    any spec-compliant decoder yields the same (h, w, 3) uint8 array as
-    the pure-Python path. Returns None when Pillow is absent (this
-    container) — the pure path below is the tested fallback.
-    Set SPARK_GRAFT_NO_C_CODEC=1 to force the pure path with Pillow
-    installed (e.g. to audit bit-identity in production)."""
-    try:
-        import io
-
-        from PIL import Image
-
-        def dec(data: bytes) -> np.ndarray:
-            try:
-                img = Image.open(io.BytesIO(data))
-                if img.mode != "RGB":
-                    img = img.convert("RGB")
-                return np.asarray(img, dtype=np.uint8)
-            except OSError as e:  # Pillow's corrupt-payload error
-                raise ValueError(f"bad PNG: {e}") from e
-
-        return dec
-    except ImportError:
-        return None
-
-
-_c_png_decoder = _try_import_c_png_decoder()
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 STUB_MAGIC = {"jpeg": b"QJPG", "webp": b"QWBP"}
@@ -132,13 +100,9 @@ def _unfilter(raw: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
 
 def decode_png(data: bytes) -> np.ndarray:
     """Decode an RGB8 PNG produced by ``encode_png`` (or any 8-bit RGB,
-    non-interlaced PNG) into an (h, w, 3) uint8 array. Prefers the
-    C-backed decoder (Pillow) when importable; see
-    ``_try_import_c_png_decoder``."""
+    non-interlaced PNG) into an (h, w, 3) uint8 array."""
     if data[:8] != PNG_SIG:
         raise ValueError("not a PNG")
-    if _c_png_decoder is not None and os.environ.get("SPARK_GRAFT_NO_C_CODEC") != "1":
-        return _c_png_decoder(data)
     pos, w = 8, 0
     h = 0
     idat = b""

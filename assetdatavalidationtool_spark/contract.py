@@ -646,7 +646,7 @@ from .operators.text import (  # noqa: E402
 )
 
 # shared SQL CTE: normalized text + tokens + 3-gram shingles (mirrors
-# dedup._norm_text / dedup.shingle exactly)
+# dedup.norm_text / dedup.shingle exactly)
 _SH_CTE = """
     toks AS (
       SELECT doc_id,
@@ -1669,7 +1669,7 @@ _IVF_TOPK_SQL = f"""
 # Trained-quantizer IVF: spherical k-means (Lloyd) with a FIXED, small
 # n_iters IS SQL-expressible by unrolling each iteration as a CTE layer:
 # assign = argmin via row_number over per-cell dot products (ties →
-# lower cell, matching `_cell_expr`'s first-WHEN-wins), update = one
+# lower cell, matching `similarity.attach_cell`), update = one
 # AVG per (cell, pos) + L2 renormalize. Portability hinges on
 # train_ivf_centroids ROUNDING each trained centroid component to 6
 # decimals (operators/similarity.py): that absorbs the cross-engine

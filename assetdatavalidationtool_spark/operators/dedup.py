@@ -81,9 +81,6 @@ def norm_text(c: F.Column) -> F.Column:
     return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
 
 
-_norm_text = norm_text  # internal alias kept for existing callers
-
-
 def _tokenize(c: F.Column) -> F.Column:
     """lowercase + split on non-alphanumerics, empties dropped. NOTE: no
     whitespace-collapse pass — the ``[^a-z0-9]+`` split subsumes it
@@ -169,7 +166,7 @@ def drop_hot_groups(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
 
 
 def fingerprint_col(c: F.Column) -> F.Column:
-    return F.md5(_norm_text(c))
+    return F.md5(norm_text(c))
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

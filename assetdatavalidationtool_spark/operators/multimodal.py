@@ -42,13 +42,14 @@ def row_batches(fn: Callable, fault: tuple | Callable, schema: T.StructType):
     Input batches hold ``(key, payload, *extra)`` columns; each is pulled
     out of the batch once, and ``fn(key, payload, *extra)`` returns the
     output values after the key — a tuple, or a list of tuples for a
-    one-to-many map. A row whose key or payload is null, or whose ``fn``
-    raises one of ``codecs.DATA_ERRORS`` (a corrupt payload, an id with
-    no reference), gets ``fault`` instead: a tuple, or a function of the
-    input row for the values that need no payload. Any other exception
-    is an engine fault and fails the Spark task. When ``schema`` ends in
-    an ``error`` column it records why a row faulted (``null bytes``,
-    ``ValueError``, ``zlib.error``, ...) and is null otherwise.
+    one-to-many map. A row whose key or payload is null, whose ``fn``
+    raises one of ``codecs.DATA_ERRORS`` (a corrupt payload), or whose
+    ``fn`` returns None (its key names no reference to compare against)
+    gets ``fault`` instead: a tuple, or a function of the input row for
+    the values that need no payload. Any other exception is an engine
+    fault and fails the Spark task. When ``schema`` ends in an ``error``
+    column it records why a row faulted (``null bytes``, ``ValueError``,
+    ``zlib.error``, ``no reference``, ...) and is null otherwise.
 
     Callable on plain pandas frames — no Spark session needed.
     """
@@ -66,6 +67,8 @@ def row_batches(fn: Callable, fault: tuple | Callable, schema: T.StructType):
                 else:
                     try:
                         vals = fn(*row)
+                        if vals is None:
+                            err = "no reference"
                     except codecs.DATA_ERRORS as e:
                         err = _error_name(e)
                 if err is not None:

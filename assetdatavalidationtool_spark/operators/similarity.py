@@ -2,16 +2,21 @@
 
 Brute-force cosine top-k is the exact baseline: dot products via
 ``aggregate``/``zip_with`` (JVM-side, no UDF), a broadcast of the query
-block, and a per-query top-k window. The scale path is LSH bucketing:
-deterministic random-hyperplane signs → candidates only within a
-bucket, turning the O(N·Q) scan into a bucket-local join.
+block, and a per-query top-k window. The scale paths bucket first, so
+the O(N·Q) scan becomes a bucket-local join: LSH buckets by
+deterministic random-hyperplane signs, IVF by the nearest coarse
+centroid. IVF centroids are data in one broadcast row at every
+quantizer size, so the plan stays O(1) in n_cells × dim.
 
 At 10^12 rows brute force is only for a bounded query block (the
 corpus side streams once per query block, queries broadcast); the
-LSH/IVF variant is the default. Both avoid Python entirely.
+LSH/IVF variant is the default. All three top-k functions share one
+ranking tail (`_rank_topk`) and avoid Python entirely.
 """
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
@@ -36,6 +41,25 @@ def _dot(a: F.Column, b: F.Column) -> F.Column:
 
 def _norm(a: F.Column) -> F.Column:
     return F.sqrt(F.aggregate(_dvec(a), F.lit(0.0), lambda acc, v: acc + v * v))
+
+
+def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The ranking tail every top-k shares. ``pairs`` holds candidate
+    (query_id, q, nq) × (neighbor_id, v, nv) rows with each vector's
+    norm staged once; self pairs are dropped and the k best neighbours
+    by (cosine desc, neighbor_id asc) kept →
+    (query_id, neighbor_id, cosine, rank)."""
+    sims = pairs.where(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id",
+        "neighbor_id",
+        (_dot(F.col("q"), F.col("v")) / (F.col("nq") * F.col("nv"))).alias("_cos"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
+    return (
+        sims.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.round("_cos", 4).alias("cosine"), "rank")
+    )
 
 
 def embedding_norms(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -72,23 +96,7 @@ def brute_force_cosine_topk(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q"),
         _norm(F.col(vec_col)).alias("nq"),
     )
-    sims = (
-        corpus.crossJoin(F.broadcast(queries))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("q"), F.col("v")) / (F.col("nq") * F.col("nv"))).alias(
-                "_cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("_cos", 4).alias("cosine"), "rank")
-    )
+    return _rank_topk(corpus.crossJoin(F.broadcast(queries)), k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -162,23 +170,7 @@ def lsh_ann_topk(
         F.col("_vid").alias("neighbor_id"), F.col("_vec").alias("v"),
         F.col("_nrm").alias("nv"), "bucket"
     )
-    sims = (
-        a.join(b, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("q"), F.col("v")) / (F.col("nq") * F.col("nv"))).alias(
-                "_cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("_cos", 4).alias("cosine"), "rank")
-    )
+    return _rank_topk(a.join(b, "bucket"), k)
 
 
 def ivf_centroids(dim: int, n_cells: int, seed: int = 42) -> list[list[float]]:
@@ -191,168 +183,94 @@ def ivf_centroids(dim: int, n_cells: int, seed: int = 42) -> list[list[float]]:
     return [[round(float(x), 6) for x in c] for c in cents]
 
 
+def _centroid_row(spark, centroids: list[list[float]]) -> DataFrame:
+    """The quantizer as ONE row: ``_cents`` = array<struct<cell, cv>>
+    in cell order. The centroids are one JSON string parameter that the
+    analyzer parses once into a ``LocalRelation``, so the plan holds
+    them as one data row — O(1) expression nodes in n_cells × dim (as
+    per-row expression literals a thousand-cell quantizer is minutes of
+    analysis and codegen, and a quantizer that changes every k-means
+    iteration is a new plan to compile every iteration) — and their
+    broadcast launches no Spark job. JSON carries each double exactly
+    (``repr`` round-trips)."""
+    cents = json.dumps(
+        [{"cell": i, "cv": [float(x) for x in c]} for i, c in enumerate(centroids)]
+    )
+    return spark.sql(
+        "SELECT * FROM VALUES (from_json(:cents, "
+        "'array<struct<cell: int, cv: array<double>>>')) AS t(_cents)",
+        args={"cents": cents},
+    )
+
+
+def _attach(df: DataFrame, cents: DataFrame, **cols: F.Column) -> DataFrame:
+    """All columns of ``df`` plus ``cols``, which read the attached
+    ``_cents`` row. With a one-row build side Catalyst plans
+    ``BroadcastNestedLoopJoin BuildRight``: for one build row that IS
+    the broadcast hash-attach (an equi-join on a constant key folds to
+    exactly this). The vector side is never shuffled, and the argmax
+    is a ``transform`` over the array — per-row work O(n_cells × dim),
+    plan size O(1)."""
+    return df.crossJoin(F.broadcast(cents)).withColumns(cols).drop("_cents")
+
+
+def _cell_dots(vec_col: str) -> F.Column:
+    """(nd = −dot, cell) per centroid of the attached ``_cents`` row,
+    NULL dots dropped. A null, empty or wrong-dimension vector has a
+    NULL dot with every centroid, so its array is empty: it gets no
+    cell, like the oracle's ``CASE WHEN d_i = greatest(...)``. In
+    ascending order the nearest cell comes first, ties to the lower
+    cell."""
+    return F.filter(
+        F.transform(
+            F.col("_cents"),
+            lambda s: F.struct(
+                (-_dot(F.col(vec_col), s["cv"])).alias("nd"), s["cell"].alias("cell")
+            ),
+        ),
+        lambda s: s["nd"].isNotNull(),
+    )
+
+
+def _nearest_cell(vec_col: str) -> F.Column:
+    return F.array_min(_cell_dots(vec_col))["cell"]
+
+
+def _probe_cells(vec_col: str, n_probe: int) -> F.Column:
+    picked = F.slice(F.array_sort(_cell_dots(vec_col)), 1, n_probe)
+    return F.transform(picked, lambda s: s["cell"])
+
+
+def attach_cell(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
+    """All input columns + ``cell``: the nearest centroid by dot
+    product (ties → lowest cell; NULL for a malformed vector)."""
+    cents = _centroid_row(df.sparkSession, centroids)
+    return _attach(df, cents, cell=_nearest_cell(vec_col))
+
+
+def attach_probe_cells(
+    df: DataFrame, vec_col: str, centroids: list[list[float]], n_probe: int
+) -> DataFrame:
+    """All input columns + ``probe_cells``: array<int> of the n_probe
+    nearest cells by dot product (ties → lower cell; empty for a
+    malformed vector). n_probe=1 selects exactly `attach_cell`'s cell."""
+    cents = _centroid_row(df.sparkSession, centroids)
+    return _attach(df, cents, probe_cells=_probe_cells(vec_col, n_probe))
+
+
 def ivf_assign(
     df: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
 ) -> DataFrame:
     """(vec_id, cell) — assign each vector to its nearest centroid by
-    cosine (argmax over dot products with unit centroids; norm of the
-    vector is constant across cells so plain dot suffices). Built-in
-    array ops only; a narrow scan-stage transformation.
-
-    Plan-size caveat: `_cell_expr` inlines every centroid as expression
-    literals — O(n_cells × dim) plan nodes. Fine for a small coarse
-    quantizer (≤ ~64 cells); a production inverted file with thousands
-    of cells must use :func:`ivf_assign_join`, where centroids are DATA
-    carried by a broadcast join and the plan stays O(1)."""
-    if len(centroids) > 64:
-        return ivf_assign_join(df, id_col, vec_col, centroids)
-    return df.select(
-        F.col(id_col).alias("vec_id"),
-        _cell_expr(vec_col, centroids).alias("cell"),
-    )
-
-
-def centroids_table(spark, centroids: list[list[float]]) -> DataFrame:
-    """Centroids as a small DataFrame (cell int, cv array<double>) — the
-    form a trained quantizer is stored/broadcast in at real scale."""
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cv array<double>",
-    )
-
-
-def ivf_assign_join(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: list[list[float]] | DataFrame,
-    extra_cols: list[str] | None = None,
-) -> DataFrame:
-    """(vec_id, cell) assignment with centroids as DATA, not plan
-    literals — the 10^12-row form of `ivf_assign` (reference analog:
-    the hand-rolled key-lookup inner loop, Validator.cs:94-106, done
-    the Spark way).
-
-    Physical shape: the centroid table (n_cells × dim doubles — a few
-    MB even at thousands of cells) is collapsed to ONE row holding
-    ``array<struct<cell,cv>>`` sorted by cell, broadcast, and attached
-    to every vector row. With a single-row build side Catalyst plans
-    this as ``BroadcastNestedLoopJoin BuildRight`` — for one build row
-    that IS the broadcast hash-attach (an equi-join on a constant key
-    folds to exactly this), with none of the N×M blowup that makes
-    BNLJ dangerous on real joins. The argmax is then a
-    constant-plan-size ``transform`` + ``array_max`` over the array
-    (ties → lowest cell, identical semantics to `_cell_expr`'s
-    first-WHEN-wins). Compared to the naive explode-per-centroid +
-    groupBy(vec_id) argmin, this never shuffles the vector side at all
-    and adds zero expression nodes per cell: runtime is data-driven
-    O(n_cells × dim) per row, plan size O(1)."""
-    return attach_cell(df, vec_col, centroids).select(
-        F.col(id_col).alias("vec_id"),
-        F.col("cell"),
-        *(extra_cols or []),
-    )
-
-
-def _centroids_one_row(spark, centroids: list[list[float]] | DataFrame) -> DataFrame:
-    """Centroid table collapsed to ONE broadcastable row holding
-    ``array<struct<cell,cv>>`` sorted by cell."""
-    cents_df = (
-        centroids
-        if isinstance(centroids, DataFrame)
-        else centroids_table(spark, centroids)
-    )
-    return cents_df.select(F.struct("cell", "cv").alias("s")).agg(
-        F.array_sort(F.collect_list("s")).alias("_cents")
-    )
-
-
-def attach_cell(
-    df: DataFrame, vec_col: str, centroids: list[list[float]] | DataFrame
-) -> DataFrame:
-    """All input columns + ``cell`` via the broadcast-join assignment
-    (see :func:`ivf_assign_join` for the physical-shape rationale)."""
-    one_row = _centroids_one_row(df.sparkSession, centroids)
-    # each dot computed exactly once (transform), then argmax via
-    # array_max over (d, -cell) structs: highest dot wins, ties go to
-    # the LOWEST cell — identical semantics to `_cell_expr`'s
-    # first-WHEN-wins on the literal path.
-    dots = F.transform(
-        F.col("_cents"),
-        lambda s: F.struct(
-            _dot(F.col(vec_col), s["cv"]).alias("d"),
-            (-s["cell"]).alias("nc"),
-        ),
-    )
-    best_cell = (-F.array_max(dots)["nc"]).cast("int")
-    return (
-        df.crossJoin(F.broadcast(one_row))
-        .withColumn("cell", best_cell)
-        .drop("_cents")
-    )
-
-
-def attach_probe_cells(
-    df: DataFrame,
-    vec_col: str,
-    centroids: list[list[float]] | DataFrame,
-    n_probe: int,
-) -> DataFrame:
-    """All input columns + ``probe_cells`` (array<int> of the n_probe
-    nearest cells by centroid dot product, ties → lower cell) via the
-    broadcast-data path — the O(1)-plan form of `_probe_cells_expr`
-    for quantizers too large to inline (same sort-of-(−dot, cell)
-    semantics, so n_probe=1 selects exactly `attach_cell`'s argmax)."""
-    one_row = _centroids_one_row(df.sparkSession, centroids)
-    cands = F.transform(
-        F.col("_cents"),
-        lambda s: F.struct(
-            (-_dot(F.col(vec_col), s["cv"])).alias("nd"),
-            s["cell"].alias("cell"),
-        ),
-    )
-    picked = F.slice(F.array_sort(cands), 1, n_probe)
-    return (
-        df.crossJoin(F.broadcast(one_row))
-        .withColumn("probe_cells", F.transform(picked, lambda s: s["cell"]))
-        .drop("_cents")
-    )
-
-
-def _cell_expr(vec_col: str, centroids: list[list[float]]) -> F.Column:
-    dots = [
-        _dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c]))
-        for c in centroids
-    ]
-    best = F.greatest(*dots)
-    # first cell achieving the max wins ties — explicit, SQL-mirrorable
-    expr = F.when(dots[0] == best, F.lit(0))
-    for i in range(1, len(centroids)):
-        expr = expr.when(dots[i] == best, F.lit(i))
-    return expr.cast("int")
-
-
-def _probe_cells_expr(
-    vec_col: str, centroids: list[list[float]], n_probe: int
-) -> F.Column:
-    """array<int> of the ``n_probe`` nearest cells by centroid dot
-    product (desc), ties to the lower cell index — computed NARROW via
-    array_sort on (−dot, cell) structs: no window, no shuffle, stays in
-    the scan stage. For n_probe=1 this selects exactly `_cell_expr`'s
-    argmax cell."""
-    cands = F.array(
-        *[
-            F.struct(
-                (-_dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c]))).alias(
-                    "nd"
-                ),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    picked = F.slice(F.array_sort(cands), 1, n_probe)
-    return F.transform(picked, lambda s: s["cell"])
+    cosine (argmax over dot products with unit centroids; the vector's
+    norm is constant across cells so plain dot suffices). Ties go to
+    the lowest cell; a null, empty or wrong-dimension vector gets cell
+    NULL. Centroids are broadcast data (see `_attach`); the vector side
+    stays in its scan stage (reference analog: the key-lookup inner
+    loop, Validator.cs:94-106, done the Spark way)."""
+    return attach_cell(
+        df.select(F.col(id_col).alias("vec_id"), vec_col), vec_col, centroids
+    ).select("vec_id", "cell")
 
 
 def ivf_topk(
@@ -381,68 +299,27 @@ def ivf_topk(
       region whose pair join is |cell|²; queries assigned there still
       probe their other n_probe−1 cells.
 
-    Quantizers over 64 cells route BOTH the corpus assignment and the
-    probe selection through the broadcast-data path (`attach_cell` /
-    `attach_probe_cells`) — plan size stays O(1) in n_cells; the
-    literal path below is for small coarse quantizers where the
-    inlined expressions codegen best."""
+    The corpus assignment and the probe selection both read one
+    broadcast centroid row (`_attach`). A malformed vector has no cell,
+    so it is never a neighbour, and as a query it probes nothing."""
+    cents = _centroid_row(df.sparkSession, centroids)
     # per-vector norm staged once (r6) — see brute_force_cosine_topk
-    as_data = len(centroids) > 64
-    if as_data:
-        corpus = attach_cell(
-            df.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v"),
-                _norm(F.col(vec_col)).alias("nv"),
-            ),
-            "v",
-            centroids,
-        )
-    else:
-        corpus = df.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("v"),
-            _norm(F.col(vec_col)).alias("nv"),
-            _cell_expr(vec_col, centroids).alias("cell"),
-        )
+    corpus = _attach(
+        df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v"),
+                  _norm(F.col(vec_col)).alias("nv")),
+        cents,
+        cell=_nearest_cell("v"),
+    )
     if max_cell_size is not None:
         corpus = drop_hot_groups(corpus, ["cell"], max_cell_size)
-
-    q = df
-    if query_ids is not None:
-        q = q.where(F.col(id_col).isin(query_ids))
-    if as_data:
-        probes = attach_probe_cells(
-            q.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q"),
-                     _norm(F.col(vec_col)).alias("nq")),
-            "q",
-            centroids,
-            n_probe,
-        ).withColumn("cell", F.explode("probe_cells")).drop("probe_cells")
-    else:
-        probes = q.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q"),
-            _norm(F.col(vec_col)).alias("nq"),
-            F.explode(_probe_cells_expr(vec_col, centroids, n_probe)).alias("cell"),
-        )
-
-    sims = (
-        probes.join(corpus, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("q"), F.col("v")) / (F.col("nq") * F.col("nv"))).alias(
-                "_cos"
-            ),
-        )
+    q = df if query_ids is None else df.where(F.col(id_col).isin(query_ids))
+    probes = _attach(
+        q.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q"),
+                 _norm(F.col(vec_col)).alias("nq")),
+        cents,
+        cell=F.explode(_probe_cells("q", n_probe)),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("_cos", 4).alias("cosine"), "rank")
-    )
+    return _rank_topk(probes.join(corpus, "cell"), k)
 
 
 def embedding_near_duplicates(
@@ -524,11 +401,12 @@ def train_ivf_centroids(
 ) -> list[list[float]]:
     """Spherical k-means (Lloyd) training of the coarse quantizer,
     fully distributed: each iteration is one scan (narrow cell
-    assignment via `_cell_expr`) + one hash aggregate whose output is
+    assignment via `attach_cell`) + one hash aggregate whose output is
     n_cells × dim rows (driver-tiny). Centroids are L2-normalized and
     rounded to 6 decimals so the result is a portable literal (usable in
-    oracle SQL). Empty cells keep their previous centroid. Deterministic
-    for a given (seed, data)."""
+    oracle SQL). Empty cells keep their previous centroid; a null, empty
+    or wrong-dimension vector has no cell and moves no centroid.
+    Deterministic for a given (seed, data)."""
     cents = ivf_centroids(dim, n_cells, seed)
     # expression-heavy per-row work (n_cells x dim dots + posexplode):
     # make sure a small single-row-group scan doesn't serialize it on
@@ -537,16 +415,14 @@ def train_ivf_centroids(
 
     df = spread_small_scan(df.select(vec_col))
     for _ in range(n_iters):
-        # assignment ALWAYS via the broadcast-data path here (even for
-        # small quantizers, where queries use the literal path): the
-        # centroids change every iteration, and as plan literals each
-        # iteration is a brand-new plan that Janino recompiles (~5 s of
-        # pure codegen per iteration, measured). As broadcast DATA the
-        # plan is bit-stable across iterations — compiled once, then
-        # ~1.5 s/iteration. Assignment semantics are identical
-        # (test_ivf_assign_join_matches_literal_path).
-        assigned = attach_cell(df, vec_col, cents).select(
-            "cell", F.posexplode(_dvec(F.col(vec_col))).alias("pos", "x")
+        # the centroids change every iteration; as broadcast DATA the
+        # plan stays the same across iterations, so it is compiled
+        # once (as plan literals every iteration was a new plan that
+        # Janino recompiled: ~5 s of codegen per iteration, measured)
+        assigned = (
+            attach_cell(df, vec_col, cents)
+            .where(F.col("cell").isNotNull())
+            .select("cell", F.posexplode(_dvec(F.col(vec_col))).alias("pos", "x"))
         )
         means = (
             assigned

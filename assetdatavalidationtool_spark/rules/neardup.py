@@ -12,8 +12,8 @@ near-duplicate relationship is flagged under its own bucket and the
 violation report reads per-image like every other rule.
 
 Resume semantics: a near-dup pair can straddle logical buckets, so this
-rule is intentionally NOT bucket-aligned (`manifest.rule_is_bucket_
-aligned` returns False for it) — a bucket-grain resume re-runs the
+rule is intentionally NOT bucket-aligned (`Rule.bucket_aligned`
+keeps its default False) — a bucket-grain resume re-runs the
 whole rule rather than missing cross-bucket pairs. At 10^12 rows the
 re-run is one (image_id, phash) scan — bytes never enter the plan.
 

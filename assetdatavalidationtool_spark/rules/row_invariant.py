@@ -23,8 +23,9 @@ Execution shape (the scale-critical part):
   dozen bytes/row.
 * The caption is checked whenever the id names a reference row, also
   when the bytes fail to decode. An id that names none (null, or no
-  ``<prefix>_<n>`` index) has nothing to compare the caption against:
-  its ``caption_ok`` is NULL and it yields only its ``bytes`` violation.
+  ``<prefix>_<n>`` index) has nothing to compare the pixels or the
+  caption against: its ``caption_ok`` is NULL and it yields only its
+  ``bytes`` violation, whose detail names the missing reference.
 * The reference rendering is *regenerated from image_id on the
   executor* (datagen.render_image is a pure function), never broadcast
   or shuffled — SURVEY.md §7.3.
@@ -63,8 +64,8 @@ def _expected(image_id: str | None) -> dict | None:
 
 def _check_row(image_id, data, fmt, caption):
     expected = _expected(image_id)
-    if expected is None:  # no reference: no pixels, no caption to compare
-        return np.nan, False, None
+    if expected is None:  # no reference: the harness's fault row
+        return None
     ref = render_image(image_id, expected["w"], expected["h"])
     p = codecs.psnr(ref, codecs.decode_image(data, fmt))
     # +inf (exact match) → 999.0 display sentinel; -inf (shape mismatch)
@@ -103,7 +104,8 @@ class RowInvariantRule(Rule):
     def violations(self, ctx: RuleContext) -> DataFrame:
         # one violation row PER failed check (a row failing both pixel
         # and caption emits two rows); ONE UDF pass
-        pixel_detail = ("CASE WHEN error IS NOT NULL THEN concat('pixel decode failed: ', error) "
+        pixel_detail = ("CASE WHEN error = 'no reference' THEN 'no reference image for image_id' "
+                        "WHEN error IS NOT NULL THEN concat('pixel decode failed: ', error) "
                         "ELSE concat('pixel mismatch psnr=', CAST(round(psnr_db, 2) AS STRING)) END")
         return check_violations(ctx, self.checks(ctx), "image_id", [
             (self.name, "NOT pixel_ok", "bytes", pixel_detail),

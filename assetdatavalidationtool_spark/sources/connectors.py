@@ -184,11 +184,6 @@ class GraphConnector:
         return rows_to_df(spark, self.fetch_rows(), source)
 
 
-# Back-compat alias: the generic name earlier rounds exported. The
-# ServiceNow shape is the one the reference's generic REST path uses.
-RestConnector = ServiceNowConnector
-
-
 # search(base, filter, attributes, page_size, cookie)
 #   -> (entries: list[dict], next_cookie: bytes | None)
 LdapSearch = Callable[[str, str, list[str], int, bytes | None],

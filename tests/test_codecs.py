@@ -165,46 +165,6 @@ def test_decoders_raise_only_data_errors_on_corrupt_payloads():
                 pass
 
 
-def test_c_codec_seam_prefers_c_path_and_is_bit_identical(monkeypatch):
-    """PNG decode routes through the C-backed decoder (Pillow) when one
-    is importable and falls back to the pure-Python path otherwise —
-    with bit-identical pixels either way. Pillow is absent in this
-    container, so the C side is exercised through a recording fake that
-    delegates to the pure path (PNG is lossless: any spec-compliant
-    decoder is pixel-identical by construction; with Pillow installed
-    this test additionally proves it directly)."""
-    import numpy as np
-
-    from assetdatavalidationtool_spark import codecs
-
-    img = (np.arange(8 * 6 * 3, dtype=np.uint32) % 251).astype(np.uint8).reshape(8, 6, 3)
-    data = codecs.encode_png(img)
-    monkeypatch.setenv("SPARK_GRAFT_NO_C_CODEC", "1")
-    pure = codecs.decode_png(data)  # forced pure path
-    assert np.array_equal(pure, img)
-    monkeypatch.delenv("SPARK_GRAFT_NO_C_CODEC")
-
-    if codecs._c_png_decoder is not None:
-        # real Pillow present: direct bit-identity proof
-        assert np.array_equal(codecs.decode_png(data), pure)
-    else:
-        # no Pillow here: prove the ROUTING by installing a fake C
-        # decoder and checking decode_png prefers it
-        calls = []
-
-        def fake_c(d):
-            calls.append(1)
-            return pure
-
-        monkeypatch.setattr(codecs, "_c_png_decoder", fake_c)
-        out = codecs.decode_png(data)
-        assert calls and np.array_equal(out, pure)
-        # and the kill switch forces the pure path past an available C decoder
-        monkeypatch.setenv("SPARK_GRAFT_NO_C_CODEC", "1")
-        calls.clear()
-        assert np.array_equal(codecs.decode_png(data), pure) and not calls
-
-
 def test_psnr_fused_path_matches_float64_reference():
     """r6 guard: the uint8 fast path (equality short-circuit + fused
     einsum sum-of-squares) must equal the naive float64 formulation

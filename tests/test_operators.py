@@ -461,39 +461,41 @@ def test_embedding_near_duplicates(vectors, spark):
     assert none == []
 
 
-def test_ivf_assign_join_matches_literal_path(spark):
+def _dot_fold(v, c):
+    """Dot product in Spark's order: float32 inputs widened to double,
+    products summed left to right (``similarity._dot``)."""
+    acc = 0.0
+    for x, y in zip(np.float32(v).astype(np.float64), c):
+        acc += x * y
+    return acc
+
+
+def test_ivf_assign_matches_numpy_argmax(spark):
     """Centroids-as-data assignment (broadcast join + constant-size
-    fold): identical to the literal-expression path at a small
-    quantizer (exact tie semantics included), and correct vs numpy
-    argmax at 256 cells x dim 64 — a size where the literal path's
-    O(n_cells x dim) expression plan already takes minutes just to
-    analyze (the reason this path exists)."""
+    fold): equal to numpy argmax at a small quantizer (exact tie
+    semantics included) and at 256 cells x dim 64 — a size where
+    centroids as expression literals take minutes just to analyze."""
     import numpy as np
 
     from assetdatavalidationtool_spark.operators.similarity import (
         ivf_assign,
-        ivf_assign_join,
         ivf_centroids,
-        _cell_expr,
     )
 
-    # exact parity with the literal path (incl. tie-break) at 16 cells
+    # 16 cells: argmax over dots folded in Spark's summation order, so
+    # the planted tie is exact on both sides; np.argmax keeps the first
     dim = 8
     cents_s = ivf_centroids(dim, 16, seed=5)
     rng = np.random.RandomState(3)
     rows = [(i, [float(x) for x in rng.randn(dim)]) for i in range(80)]
     # planted exact tie: vec 80 is equidistant from two centroid copies
     cents_s[7] = list(cents_s[2])
-    small = spark.createDataFrame(
-        rows + [(80, [float(x) for x in cents_s[2]])],
-        "vec_id long, embedding array<float>",
-    ).cache()
+    rows.append((80, [float(x) for x in cents_s[2]]))
+    small = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
     joined_s = {r["vec_id"]: r["cell"]
-                for r in ivf_assign_join(small, "vec_id", "embedding", cents_s).collect()}
-    literal_s = {r["vec_id"]: r["cell"]
-                 for r in small.select(
-                     "vec_id", _cell_expr("embedding", cents_s).alias("cell")).collect()}
-    assert joined_s == literal_s and joined_s[80] == 2  # tie -> lowest cell
+                for r in ivf_assign(small, "vec_id", "embedding", cents_s).collect()}
+    expect_s = {i: int(np.argmax([_dot_fold(v, c) for c in cents_s])) for i, v in rows}
+    assert joined_s == expect_s and joined_s[80] == 2  # tie -> lowest cell
 
     # 256-cell quantizer: correct vs driver-side numpy argmax
     dim, n_cells, n_vecs = 64, 256, 300
@@ -505,32 +507,93 @@ def test_ivf_assign_join_matches_literal_path(spark):
     ).cache()
     expect = np.argmax(base @ np.array(cents).T, axis=1)
     joined = {r["vec_id"]: r["cell"]
-              for r in ivf_assign_join(df, "vec_id", "embedding", cents).collect()}
+              for r in ivf_assign(df, "vec_id", "embedding", cents).collect()}
     assert joined == {i: int(expect[i]) for i in range(n_vecs)}
     assert len(set(joined.values())) > 100  # spread over many cells
 
     # plan shape: the centroid attach is a broadcast (one-row build
     # side -> BroadcastNestedLoopJoin BuildRight, the broadcast
     # hash-attach degenerate case) and the VECTOR side is never
-    # shuffled — the only exchanges are the tiny centroid-side
-    # SinglePartition collect and its broadcast
-    out = ivf_assign_join(df, "vec_id", "embedding", cents)
+    # shuffled
+    out = ivf_assign(df, "vec_id", "embedding", cents)
     out.collect()
     final = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin BuildRight" in final
     assert "BroadcastExchange" in final
     assert "Exchange hashpartitioning" not in final
 
-    # ivf_assign auto-routes large quantizers to the join path
-    auto = {r["vec_id"]: r["cell"]
-            for r in ivf_assign(df, "vec_id", "embedding", cents).collect()}
-    assert auto == joined
+
+MALFORMED = [(901, None), (902, []), (903, [1.0, 2.0]), (904, [0.5, None, 0.5, 0.5])]
+
+
+def test_ivf_assign_malformed_vector_gets_no_cell(spark):
+    """A null, empty, short or null-holding vector has a NULL dot with
+    every centroid: it gets cell NULL (the oracle's ``CASE WHEN d_i =
+    greatest(...)`` matches no branch) and probes no cell, at a small
+    and at a large quantizer alike."""
+    from assetdatavalidationtool_spark.operators.similarity import (
+        attach_probe_cells,
+        ivf_assign,
+        ivf_centroids,
+    )
+
+    rng = np.random.RandomState(4)
+    good = [(i, [float(x) for x in rng.randn(4)]) for i in range(20)]
+    df = spark.createDataFrame(good + MALFORMED, "vec_id long, embedding array<float>")
+    for n_cells in (4, 96):
+        cents = ivf_centroids(4, n_cells, seed=6)
+        cells = {r["vec_id"]: r["cell"]
+                 for r in ivf_assign(df, "vec_id", "embedding", cents).collect()}
+        assert cells == {
+            **{i: int(np.argmax([_dot_fold(v, c) for c in cents])) for i, v in good},
+            **{i: None for i, _ in MALFORMED},
+        }
+        probes = {r["vec_id"]: list(r["probe_cells"])
+                  for r in attach_probe_cells(df, "embedding", cents, 2).collect()}
+        assert all(probes[i] == [] for i, _ in MALFORMED)
+        assert all(probes[i][0] == cells[i] for i, _ in good)
+
+
+def test_ivf_topk_never_returns_malformed_vector(spark):
+    """A malformed corpus vector has no cell, so it is never a
+    neighbour — not even when every query probes every cell — and a
+    malformed query finds nothing."""
+    from assetdatavalidationtool_spark.operators.similarity import (
+        ivf_centroids,
+        ivf_topk,
+    )
+
+    rng = np.random.RandomState(8)
+    good = [(i, [float(x) for x in rng.randn(4)]) for i in range(30)]
+    df = spark.createDataFrame(good + MALFORMED, "vec_id long, embedding array<float>")
+    bad = {i for i, _ in MALFORMED}
+    for n_cells in (4, 96):
+        cents = ivf_centroids(4, n_cells, seed=6)
+        got = ivf_topk(df, "vec_id", "embedding", cents, k=50, n_probe=n_cells).collect()
+        assert not any(r["neighbor_id"] in bad or r["query_id"] in bad for r in got)
+        assert all(r["cosine"] is not None for r in got)
+        # every probe covers every cell: each good query ranks all 29 others
+        assert len(got) == 30 * 29
+
+
+def test_train_ivf_centroids_ignores_malformed_vectors(spark):
+    """Training with malformed rows added yields exactly the centroids
+    trained without them: a vector with no cell moves no centroid."""
+    from assetdatavalidationtool_spark.operators.similarity import train_ivf_centroids
+
+    rng = np.random.RandomState(2)
+    good = [(i, [float(x) for x in rng.randn(4)]) for i in range(40)]
+    schema = "vec_id long, embedding array<float>"
+    clean = spark.createDataFrame(good, schema)
+    dirty = spark.createDataFrame(good + MALFORMED + [(905, [50.0, -50.0])], schema)
+    assert (train_ivf_centroids(dirty, "embedding", n_cells=4, dim=4, n_iters=2, seed=3)
+            == train_ivf_centroids(clean, "embedding", n_cells=4, dim=4, n_iters=2, seed=3))
 
 
 def test_train_ivf_large_quantizer_uses_join_path(spark):
-    """train_ivf_centroids at n_cells>64 routes assignment through the
-    broadcast-join path; result matches a driver-side numpy Lloyd
-    iteration (same assign/avg/renormalize/round-6 semantics)."""
+    """train_ivf_centroids at 80 cells (broadcast-join assignment)
+    matches a driver-side numpy Lloyd iteration (same
+    assign/avg/renormalize/round-6 semantics)."""
     import numpy as np
 
     from assetdatavalidationtool_spark.operators.similarity import (
@@ -586,11 +649,10 @@ def test_spread_small_scan_uses_plan_stats_not_rdd(spark, tmp_path):
 
 
 def test_ivf_topk_large_quantizer_join_path(spark):
-    """ivf_topk at n_cells>64 routes corpus assignment AND probe
-    selection through the broadcast-data path; probe_cells matches the
-    literal _probe_cells_expr semantics (verified via numpy: top-P
-    cells by dot desc, ties to lower cell), and the top-k result ranks
-    a planted near-duplicate first."""
+    """ivf_topk at 96 cells: corpus assignment AND probe selection go
+    through the broadcast-data path; probe_cells are the top-P cells by
+    dot desc, ties to lower cell (verified via numpy), and the top-k
+    result ranks a planted near-duplicate first."""
     import numpy as np
 
     from assetdatavalidationtool_spark.operators.similarity import (

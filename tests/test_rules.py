@@ -446,8 +446,30 @@ def test_row_invariant_unreferenced_id_skips_caption_check(spark):
     rule = RowInvariantRule()
     caption_ok = {r["image_id"]: r["caption_ok"] for r in rule.checks(ctx).collect()}
     assert caption_ok == {rows[0]["image_id"]: True, None: None, "img_x": None}
-    assert sorted(((r["key"] or ""), r["column"]) for r in rule.violations(ctx).collect()) == [
+    vio = rule.violations(ctx).collect()
+    assert sorted(((r["key"] or ""), r["column"]) for r in vio) == [
         ("", "bytes"), ("img_x", "bytes")]
+    assert [r["detail"] for r in vio if r["key"] == "img_x"] == [
+        "no reference image for image_id"]
+
+
+def test_row_invariant_unreferenced_id_is_fault_row():
+    """In-process, no Spark: an id with no reference is the harness's
+    fault row and its error names the missing reference (it was a
+    pixel mismatch with psnr NaN)."""
+    import pandas as pd
+
+    from assetdatavalidationtool_spark.datagen import make_row
+    from assetdatavalidationtool_spark.rules import row_invariant
+
+    row = make_row(1)
+    row["image_id"] = "img_x"
+    pdf = pd.DataFrame([row])[["image_id", "bytes", "fmt", "caption"]]
+    out = next(row_invariant._check_batches(iter([pdf])))
+    assert out["image_id"].tolist() == ["img_x"]
+    assert out["pixel_ok"].tolist() == [False]
+    assert out["caption_ok"].isna().all()
+    assert out["error"].tolist() == ["no reference"]
 
 
 def _media_batch(kind):
