@@ -46,18 +46,23 @@ def _norm(a: F.Column) -> F.Column:
 def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
     """The ranking tail every top-k shares. ``pairs`` holds candidate
     (query_id, q, nq) × (neighbor_id, v, nv) rows with each vector's
-    norm staged once; self pairs are dropped and the k best neighbours
-    by (cosine desc, neighbor_id asc) kept →
+    norm staged once; self pairs and pairs without a cosine (a null,
+    empty or wrong-dimension vector on either side) are dropped and the
+    k best neighbours by (cosine desc, neighbor_id asc) kept →
     (query_id, neighbor_id, cosine, rank)."""
     sims = pairs.where(F.col("query_id") != F.col("neighbor_id")).select(
         "query_id",
         "neighbor_id",
         (_dot(F.col("q"), F.col("v")) / (F.col("nq") * F.col("nv"))).alias("_cos"),
     )
+    # NULL cosines rank after every real one (DESC is NULLS LAST), so
+    # dropping them after the window leaves the real ranks unchanged; a
+    # filter before it is pushed below the projection and computes the
+    # dot product twice
     w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
     return (
         sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where((F.col("rank") <= k) & F.col("_cos").isNotNull())
         .select("query_id", "neighbor_id", F.round("_cos", 4).alias("cosine"), "rank")
     )
 
@@ -106,7 +111,18 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[round(float(x), 6) for x in rng.randn(dim)] for _ in range(n_planes)]
 
 
+def _well_formed(vec_col: str, dim: int) -> F.Column:
+    """``vec_col`` holds ``dim`` non-null elements: exactly the vectors
+    whose hyperplane dots are not NULL (a null, empty, wrong-dimension
+    or null-holding vector has no sign bits)."""
+    v = F.col(vec_col)
+    return (F.size(v) == dim) & ~F.exists(v, lambda x: x.isNull())
+
+
 def _bucket_expr(vec_col: str, planes: list[list[float]]) -> F.Column:
+    """Sign bits of a well-formed vector's hyperplane dots. Never NULL,
+    so a join on it infers no NOT NULL filter, which would be pushed
+    below the projection and compute every dot a second time."""
     bucket = None
     for p, plane in enumerate(planes):
         lit_plane = F.array(*[F.lit(float(x)) for x in plane])
@@ -126,9 +142,13 @@ def lsh_buckets(
     """Sign-bucket each vector: bucket = bits of sign(v · h_p) →
     (vec_id, bucket). Vectors in the same bucket are ANN candidates;
     a per-bucket brute-force pass (or a bucket equi-join) refines.
+    A malformed vector gets bucket NULL.
     All arithmetic is built-in array ops — no UDF, no shuffle here."""
     return df.select(
-        F.col(id_col).alias("vec_id"), _bucket_expr(vec_col, planes).alias("bucket")
+        F.col(id_col).alias("vec_id"),
+        F.when(
+            _well_formed(vec_col, len(planes[0])), _bucket_expr(vec_col, planes)
+        ).alias("bucket"),
     )
 
 
@@ -151,8 +171,9 @@ def lsh_ann_topk(
     hyperplane cell would otherwise emit O(n²) pairs).
     ``query_ids`` restricts the query side to a bounded block (the
     corpus side still streams once)."""
-    # per-vector norm staged once (r6) — see brute_force_cosine_topk
-    with_b = df.select(
+    # per-vector norm staged once (r6) — see brute_force_cosine_topk;
+    # a malformed vector has no bucket, so it takes no part
+    with_b = df.where(_well_formed(vec_col, len(planes[0]))).select(
         F.col(id_col).alias("_vid"),
         F.col(vec_col).alias("_vec"),
         _norm(F.col(vec_col)).alias("_nrm"),

@@ -42,14 +42,20 @@ def value_quantiles(
     distribution's). Values are cast to long; percents are integer
     percentages (p50 = median).
     """
-    melted = None
-    for c in cols:
-        part = df.where(F.col(c).isNotNull()).select(
-            F.lit(c).alias("col_name"), F.col(c).cast("long").alias("val")
-        )
-        melted = part if melted is None else melted.unionByName(part)
-    if melted is None:
+    cols = list(cols)
+    if not cols:
         raise ValueError("value_quantiles needs at least one column")
+    # one melt: inline of per-column (col_name, val) structs
+    melted = df.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(c).alias("col_name"), F.col(c).cast("long").alias("val"))
+                    for c in cols
+                ]
+            )
+        )
+    ).where(F.col("val").isNotNull())
     hist = melted.groupBy("col_name", "val").agg(F.count("*").alias("n"))
     w_cum = (
         Window.partitionBy("col_name")

@@ -14,7 +14,8 @@ violation rows at 10^12 scale is the reference's O(n log n) mistake.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..rules.base import sql_name
 
 
 def write_report_tables(
@@ -30,12 +31,15 @@ def write_report_tables(
     counts: dict[str, int] = {}
     for name, df in tables.items():
         df.write.mode("overwrite").format(fmt).save(f"{out}/{name}")
-        counts[name] = spark.read.format(fmt).schema(df.schema).load(f"{out}/{name}").count()
-        # bounded, sorted preview — the reference's Take(100) per source
-        # (ReportGenerator.cs:467) with deterministic order
-        first_col = df.columns[0]
+        # the count and the preview read the written table back, so the
+        # table's plan runs once
+        written = spark.read.format(fmt).schema(df.schema).load(f"{out}/{name}")
+        counts[name] = written.count()
+        # bounded preview — the reference's Take(100) per source
+        # (ReportGenerator.cs:467); ordered by every column, so ties on
+        # the first column cannot let task order pick the rows
         (
-            df.orderBy(F.col(first_col))
+            written.orderBy(*map(sql_name, df.columns))
             .limit(preview_limit)
             .write.mode("overwrite")
             .format(fmt)

@@ -117,51 +117,33 @@ def _cell_text(cell: ET.Element, sst: list[str]) -> str | None:
     return v.text if v is not None else None
 
 
-def read_headers(path: str) -> list[str]:
-    """First row of the first sheet as trimmed headers, trailing blanks
-    trimmed (ExcelReader.cs:17-85). Header cells append in element
-    order — sparse first rows compact left, as in the reference."""
-    try:
-        with zipfile.ZipFile(path) as zf:
-            sheet_xml = _first_sheet_xml(zf)
-            if sheet_xml is None:
-                return []
-            sst = _shared_strings(zf)
-            root = ET.fromstring(sheet_xml)
-            rows = root.iter(f"{_NS}row")
-            first = next(rows, None)
-            if first is None:
-                return []
-            headers = [
-                (_cell_text(c, sst) or "").strip()
-                for c in first.findall(f"{_NS}c")
-            ]
-            while headers and headers[-1] == "":
-                headers.pop()
-            return headers
-    except Exception:
-        return []
-
-
-def read_first_sheet(
-    path: str,
+def _parse_first_sheet(
+    path: str, with_rows: bool
 ) -> tuple[list[str], list[dict[str, str]]]:
-    """Headers + row dicts of the first worksheet (ExcelReader.cs:88-176).
-    Data rows honor cell references (sparse-row safe); missing header
-    cells back-fill ''."""
-    headers = read_headers(path)
+    """One parse of the first worksheet: headers, then (``with_rows``)
+    the data rows. Any error returns what was parsed so far, so an
+    unreadable workbook is ``([], [])`` (ExcelReader's catch-all)."""
+    headers: list[str] = []
     rows: list[dict[str, str]] = []
-    if not headers:
-        return headers, rows
     try:
         with zipfile.ZipFile(path) as zf:
             sheet_xml = _first_sheet_xml(zf)
             if sheet_xml is None:
                 return headers, rows
             sst = _shared_strings(zf)
-            root = ET.fromstring(sheet_xml)
-            row_iter = root.iter(f"{_NS}row")
-            next(row_iter, None)  # skip header row
+            row_iter = ET.fromstring(sheet_xml).iter(f"{_NS}row")
+            first = next(row_iter, None)
+            if first is None:
+                return headers, rows
+            # header cells append in element order (refs ignored)
+            headers = [
+                (_cell_text(c, sst) or "").strip()
+                for c in first.findall(f"{_NS}c")
+            ]
+            while headers and headers[-1] == "":
+                headers.pop()
+            if not (with_rows and headers):
+                return headers, rows
             for row in row_iter:
                 d: dict[str, str] = {}
                 col_index = 0
@@ -179,6 +161,22 @@ def read_first_sheet(
     except Exception:
         pass
     return headers, rows
+
+
+def read_headers(path: str) -> list[str]:
+    """First row of the first sheet as trimmed headers, trailing blanks
+    trimmed (ExcelReader.cs:17-85). Header cells append in element
+    order — sparse first rows compact left, as in the reference."""
+    return _parse_first_sheet(path, with_rows=False)[0]
+
+
+def read_first_sheet(
+    path: str,
+) -> tuple[list[str], list[dict[str, str]]]:
+    """Headers + row dicts of the first worksheet (ExcelReader.cs:88-176),
+    from one parse of the workbook. Data rows honor cell references
+    (sparse-row safe); missing header cells back-fill ''."""
+    return _parse_first_sheet(path, with_rows=True)
 
 
 def read_xlsx(spark: SparkSession, path: str) -> DataFrame:

@@ -14,20 +14,20 @@ Contract pinned from the reference:
 Output long form: (key, b_col, source, base_val, other_val) — one row
 per mismatched cell, the distributed analog of the Deltas sheet rows.
 
-Scale shape: one full-outer join per other-source on the normalized key
-(Catalyst/AQE picks the strategy; the deduped sides are
-key-partitioned), then narrow column-pair comparisons.
+Scale shape: the baseline is deduped and keyed once (one window
+shuffle on the normalized key, which the joins reuse); one full-outer
+join per other source on that key, then ONE narrow projection of each
+joined row that emits its mismatched cells.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..normalize import norm_key, norm_value
-from .conflicts import first_row_per_key
 from .mapping import field_mapping_scores, pick_mappings
 
 
@@ -54,6 +54,20 @@ def deltas_auto(
     return deltas(baseline, baseline_key, others, order_col, mappings)
 
 
+def _keyed(df: DataFrame, key_col: str, order_col: str, prefix: str) -> DataFrame:
+    """One side first-row-wins deduped (as ``first_row_per_key``) →
+    (key, <prefix>_<col> string, ...) over every column but ``order_col``.
+    The window partitions by the ``key`` column itself, so the join on
+    ``key`` reuses the window's shuffle instead of adding its own."""
+    keyed = df.select(
+        norm_key(F.col(key_col)).alias("key"),
+        F.col(order_col).alias("_ord"),
+        *[F.col(c).cast("string").alias(f"{prefix}_{c}") for c in df.columns if c != order_col],
+    ).where(F.col("key") != "")
+    w = Window.partitionBy("key").orderBy("_ord")
+    return keyed.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn", "_ord")
+
+
 def deltas(
     baseline: DataFrame,
     baseline_key: str,
@@ -66,52 +80,47 @@ def deltas(
     ``mappings``: per other-source {baseline_col -> other_col}; inferred
     via the 0.6 match-score heuristic when not given.
     """
+    if not others:
+        raise ValueError("deltas: no other source to compare the baseline against")
     b_cols = [c for c in baseline.columns if c != order_col]
-    b_dedup = first_row_per_key(baseline, baseline_key, order_col)
-    b_keyed = b_dedup.select(
-        norm_key(F.col(baseline_key)).alias("key"),
-        *[F.col(c).cast("string").alias(f"b_{c}") for c in b_cols],
-    )
+    b_keyed = _keyed(baseline, baseline_key, order_col, "b")
 
-    out = None
+    per_source = []
     for name, (other, other_key) in others.items():
-        o_cols = [c for c in other.columns if c != order_col]
         if mappings is not None:
             mapping = mappings[name]
         else:
             scores = field_mapping_scores(
                 baseline, baseline_key, other, other_key, order_col
             )
+            o_cols = [c for c in other.columns if c != order_col]
             mapping = pick_mappings(scores, b_cols, o_cols, greedy=False)
 
-        o_dedup = first_row_per_key(other, other_key, order_col)
-        o_keyed = o_dedup.select(
-            norm_key(F.col(other_key)).alias("key"),
-            *[F.col(c).cast("string").alias(f"o_{c}") for c in o_cols],
-        )
-        joined = b_keyed.join(o_keyed, "key", "full_outer")
-
-        per_col = []
+        joined = b_keyed.join(_keyed(other, other_key, order_col, "o"), "key", "full_outer")
+        cells = []  # one CASE per baseline column → NULL unless mismatched
         for b_col in b_cols:
             base_val = F.coalesce(F.col(f"b_{b_col}"), F.lit(""))
             o_col = mapping.get(b_col)
             other_val = (
                 F.coalesce(F.col(f"o_{o_col}"), F.lit("")) if o_col else F.lit("")
             )
-            nb, no = norm_value(base_val), norm_value(other_val)
-            mismatch = (nb != no) & ~((nb == "") & (no == ""))
-            per_col.append(
-                joined.where(mismatch).select(
-                    "key",
-                    F.lit(b_col).alias("b_col"),
-                    F.lit(name).alias("source"),
-                    base_val.alias("base_val"),
-                    other_val.alias("other_val"),
+            # differing normalized values are never both blank, so the
+            # "one side non-blank" test (ReportGenerator.cs:305-308) holds
+            cells.append(
+                F.when(
+                    norm_value(base_val) != norm_value(other_val),
+                    F.struct(
+                        F.lit(b_col).alias("b_col"),
+                        F.lit(name).alias("source"),
+                        base_val.alias("base_val"),
+                        other_val.alias("other_val"),
+                    ),
                 )
             )
-        src_out = reduce(DataFrame.unionByName, per_col)
-        out = src_out if out is None else out.unionByName(src_out)
-    return out
+        per_source.append(
+            joined.select("key", F.inline(F.array_compact(F.array(*cells))))
+        )
+    return reduce(DataFrame.unionByName, per_source)
 
 
 def deltas_summary(delta_rows: DataFrame) -> DataFrame:

@@ -120,23 +120,21 @@ def column_overlap(
     self-equi-join on value + ONE aggregate — a value-equality join, not
     the reference's O(S²·C²) set intersections.
     """
+    # one melt per table: inline of per-column (column, value) structs
     melted = []
     for name, df in tables.items():
-        per_col = []
-        for c in df.columns:
-            v = (
-                normalize_for_header(c, F.col(c).cast("string"))
-                if use_header_normalizer
-                else norm_value(F.col(c))
+        cells = [
+            F.struct(
+                F.lit(c).alias("column"),
+                (
+                    normalize_for_header(c, F.col(c).cast("string"))
+                    if use_header_normalizer
+                    else norm_value(F.col(c))
+                ).alias("value"),
             )
-            per_col.append(
-                df.select(
-                    F.lit(name).alias("source"),
-                    F.lit(c).alias("column"),
-                    v.alias("value"),
-                )
-            )
-        melted.append(reduce(DataFrame.unionByName, per_col))
+            for c in df.columns
+        ]
+        melted.append(df.select(F.lit(name).alias("source"), F.inline(F.array(*cells))))
     long_df = (
         reduce(DataFrame.unionByName, melted)
         .where(F.col("value").isNotNull() & (F.trim(F.col("value")) != ""))

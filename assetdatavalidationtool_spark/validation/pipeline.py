@@ -9,10 +9,13 @@ from CSV/XLSX readers, parquet scans, or the REST/LDAP connectors'
 ``rows_to_df`` output — runs KeyPresence / MatchesAll / MissingByFile /
 Conflicts, and persists the result tables through the report sink.
 
-Scale shape: presence/matches/missing share one union->aggregate shape
-(one shuffle each); conflicts is one melt->aggregate. No driver-side
-row loops — connector frames are dimension-sized by nature, file/table
-sources stream through the executors.
+Scale shape: KeyPresence, MatchesAll and MissingByFile are each one
+projection of the same shared presence aggregate (``present_in`` per
+key, one shuffle); conflicts is one melt->aggregate. The report sink
+counts and previews each table from its written copy, so each table's
+plan runs once. No driver-side row loops — connector frames are
+dimension-sized by nature, file/table sources stream through the
+executors.
 """
 
 from __future__ import annotations

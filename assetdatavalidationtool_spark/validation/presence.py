@@ -4,12 +4,13 @@ Sources are ``{display_name: (DataFrame, key_col)}``. Keys are
 normalized (trim + case-fold) and blanks dropped, mirroring the
 reference's OrdinalIgnoreCase HashSets (Validator.cs:59-64).
 
-Scale shape: each function is ONE shuffle on the normalized key.
-The presence matrix is union → groupBy(key).pivot(source) — the pivot
-value list is the (tiny, driver-known) source list, so no extra pass to
-discover pivot values. MatchesAll avoids a chain of N joins: it's the
-same single aggregate filtered to count == N. MissingByFile reuses the
-aggregate instead of N anti-joins.
+Scale shape: the three views share ONE aggregate, ``_presence``: the
+tagged key union grouped by key into ``present_in`` (the set of sources
+holding it). Each view is then one narrow projection of that aggregate:
+KeyPresence is ``array_contains`` per source, MatchesAll is
+``size(present_in) = N`` (no chain of N joins), MissingByFile explodes
+``array_except(all sources, present_in)`` (no N anti-joins). Each view
+scans every source once and shuffles once on the normalized key.
 """
 
 from __future__ import annotations
@@ -33,67 +34,48 @@ def source_keys(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def _tagged_union(sources: Sources) -> DataFrame:
-    """Non-distinct tagged key union: the downstream groupBy dedupes
-    with map-side partial aggregation, so a per-source ``.distinct()``
-    here would only add one extra exchange per source."""
-    parts = []
-    for name, (df, key) in sources.items():
-        parts.append(
-            df.select(norm_key(F.col(key)).alias("key"))
-            .where(F.col("key").isNotNull() & (F.col("key") != ""))
-            .withColumn("source", F.lit(name))
-        )
-    return reduce(DataFrame.unionByName, parts)
+def _presence(sources: Sources) -> DataFrame:
+    """(key, present_in): every normalized non-blank key with the set of
+    sources holding it. One ``collect_set`` aggregate over the tagged,
+    non-distinct key union — its map-side partial aggregate dedupes, so
+    a per-source ``distinct`` would only add one exchange per source."""
+    tagged = [
+        df.select(norm_key(F.col(key)).alias("key"), F.lit(name).alias("source"))
+        .where(F.col("key").isNotNull() & (F.col("key") != ""))
+        for name, (df, key) in sources.items()
+    ]
+    return (
+        reduce(DataFrame.unionByName, tagged)
+        .groupBy("key")
+        .agg(F.collect_set("source").alias("present_in"))
+    )
 
 
 def key_presence(sources: Sources) -> DataFrame:
     """One row per key in the union of key sets; boolean ``present_<src>``
     per source (KeyPresence, Validator.cs:67-79)."""
-    tagged = _tagged_union(sources)
-    names = list(sources)
-    pivoted = (
-        tagged.groupBy("key")
-        .pivot("source", names)
-        .agg(F.first(F.lit(True)))
-    )
-    return pivoted.select(
+    return _presence(sources).select(
         "key",
         *[
-            F.coalesce(F.col(n), F.lit(False)).alias(f"present_{n}")
-            for n in names
+            F.array_contains("present_in", name).alias(f"present_{name}")
+            for name in sources
         ],
     )
 
 
 def matches_all(sources: Sources) -> DataFrame:
-    """Keys present in every source (Validator.cs:81-84) — one aggregate,
-    not an N-way join chain."""
-    n = len(sources)
+    """Keys present in every source (Validator.cs:81-84)."""
     return (
-        _tagged_union(sources)
-        .groupBy("key")
-        .agg(F.countDistinct("source").alias("n_sources"))
-        .where(F.col("n_sources") == n)
+        _presence(sources)
+        .where(F.size("present_in") == len(sources))
         .select("key")
     )
 
 
 def missing_by_file(sources: Sources) -> DataFrame:
     """(source, key) pairs where the key exists elsewhere but not in
-    ``source`` (Validator.cs:86-91). Derived from the same single
-    aggregate as the presence matrix."""
-    names = list(sources)
-    per_key = (
-        _tagged_union(sources)
-        .groupBy("key")
-        .agg(F.collect_set("source").alias("present_in"))
-    )
-    all_names = F.array(*[F.lit(n) for n in names])
-    return (
-        per_key.select(
-            "key",
-            F.explode(F.array_except(all_names, F.col("present_in"))).alias("source"),
-        )
-        .select("source", "key")
+    ``source`` (Validator.cs:86-91)."""
+    all_names = F.array(*[F.lit(n) for n in sources])
+    return _presence(sources).select(
+        F.explode(F.array_except(all_names, "present_in")).alias("source"), "key"
     )

@@ -576,6 +576,26 @@ def test_ivf_topk_never_returns_malformed_vector(spark):
         assert len(got) == 30 * 29
 
 
+def test_brute_and_lsh_topk_never_return_malformed_vector(spark):
+    """A null, empty or wrong-dimension vector has no cosine with any
+    other vector: brute force and LSH never return it as a neighbour,
+    and LSH gives it no bucket, so malformed vectors do not pair with
+    each other either."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.9, 0.1, 0.0, 0.0]), (2, None), (3, []),
+         (4, [1.0, 2.0])],
+        "vec_id long, embedding array<float>",
+    )
+    brute = brute_force_cosine_topk(df, "vec_id", "embedding", [0], k=4).collect()
+    assert [(r["query_id"], r["neighbor_id"], r["rank"]) for r in brute] == [(0, 1, 1)]
+    planes = hyperplanes(4, 3, seed=1)
+    buckets = {r["vec_id"]: r["bucket"] for r in lsh_buckets(df, "vec_id", "embedding", planes).collect()}
+    assert buckets[2] is buckets[3] is buckets[4] is None
+    ann = lsh_ann_topk(df, "vec_id", "embedding", planes, k=4).collect()
+    assert all(r["cosine"] is not None for r in ann)
+    assert {(r["query_id"], r["neighbor_id"]) for r in ann} <= {(0, 1), (1, 0)}
+
+
 def test_train_ivf_centroids_ignores_malformed_vectors(spark):
     """Training with malformed rows added yields exactly the centroids
     trained without them: a vector with no cell moves no centroid."""

@@ -108,16 +108,28 @@ def test_top_customers_broadcasts_dimension(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_presence_single_shuffle(spark):
-    """Union → pivot-groupBy must be ONE logical shuffle (plus AQE
-    reads) — not per-source distincts."""
-    p = plan(QUERIES["presence_matrix"].fn(spark, SF))
-    # one Exchange for the groupBy; AQEShuffleRead lines excluded
-    n_exchange = sum(
+def _n_exchanges(p: str) -> int:
+    # node headers only; AQEShuffleRead lines excluded
+    return sum(
         1 for l in p.splitlines() if l.strip().startswith("(") and "Exchange" in l
         and "AQEShuffleRead" not in l
     )
-    assert n_exchange <= 2, p
+
+
+def test_presence_single_shuffle(spark):
+    """Union → collect_set groupBy must be ONE shuffle (plus AQE
+    reads) — not per-source distincts, not a two-aggregate pivot."""
+    p = plan(QUERIES["presence_matrix"].fn(spark, SF))
+    assert _n_exchanges(p) == 1, p
+
+
+def test_deltas_join_reuses_dedup_shuffle(spark):
+    """Each side's first-row-wins window shuffles on the normalized key
+    the full-outer join uses, so the join adds no exchange: one per
+    side, and one Generate for all cells instead of a union per column."""
+    p = plan(QUERIES["deltas_cell_mismatches"].fn(spark, SF))
+    assert _n_exchanges(p) == 2, p
+    assert "Union" not in p and "Generate" in p
 
 
 def test_normalize_values_stays_codegen(spark):

@@ -76,6 +76,16 @@ def test_report_sink_counts(spark, tmp_path_factory):
     assert summary == counts
     assert spark.read.parquet(f"{out}/_preview/KeyPresence").count() == 5
 
+    # a tied first column: the preview is the first rows of the written
+    # table in all-column order, not whichever tied rows a task gave first
+    tied = spark.range(0, 40, 1, 4).select(
+        (F.col("id") % 2).alias("source"), (F.col("id") * 7 % 40).alias("key")
+    )
+    write_report_tables(spark, out, {"MissingByFile": tied}, preview_limit=6)
+    written = sorted(tuple(r) for r in spark.read.parquet(f"{out}/MissingByFile").collect())
+    preview = [tuple(r) for r in spark.read.parquet(f"{out}/_preview/MissingByFile").collect()]
+    assert sorted(preview) == written[:6]
+
 
 def test_connector_scaffolds(spark):
     df = rows_to_df(

@@ -236,6 +236,18 @@ def test_select_baseline_and_deltas_auto(spark):
     assert keys == {"2"}
 
 
+def test_deltas_without_other_source_raises(spark):
+    """Nothing to diff against is a caller error at the call, not a
+    None that fails later in deltas_summary or collect."""
+    a = spark.createDataFrame([("1", "x", 1)], "k string, v string, _ord int")
+    with pytest.raises(ValueError, match="no other source"):
+        deltas(a, "k", {}, "_ord")
+    from assetdatavalidationtool_spark.validation.deltas import deltas_auto
+
+    with pytest.raises(ValueError, match="no other source"):
+        deltas_auto({"Baseline": (a, "k")}, "_ord")
+
+
 def test_pick_mappings_greedy_exclusion():
     from assetdatavalidationtool_spark.validation.mapping import pick_mappings_from_rows
 
