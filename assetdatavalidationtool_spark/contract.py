@@ -13,10 +13,13 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .normalize import norm_key, norm_value, normalize_ipv4, normalize_serial
+from .rules.base import local_rows, read_table
 from .validation import (
     column_overlap,
     conflicts,
@@ -30,7 +33,11 @@ from .validation.conflicts import first_row_per_key
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The contract table ``name``: one parquet file, read with the
+    schema of its footer (read on the driver), so no job infers it."""
+    path = f"{sf_dir}/{name}.parquet"
+    return read_table(spark, path,
+                      from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True))
 
 
 @dataclass
@@ -550,7 +557,7 @@ def q_field_mapping_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = [
         (b, o, round(rows[(b, o)], 4)) for b, o in mapping.items()
     ]
-    return spark.createDataFrame(out, "b_col string, o_col string, score double")
+    return local_rows(spark, out, "b_col string, o_col string, score double")
 
 
 @register("field_mapping_scores", _FIELD_MAPPING_SQL)
@@ -1991,7 +1998,7 @@ def q_ruleset_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdicts = res["verdicts"]
     rows = verdicts.collect()
     res["violations"].unpersist()
-    return spark.createDataFrame(rows, verdicts.schema)
+    return local_rows(spark, rows, verdicts.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2099,7 +2106,7 @@ def q_verdict_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = out.collect()
     res_a["violations"].unpersist()
     res_b["violations"].unpersist()
-    return spark.createDataFrame(rows, out.schema)
+    return local_rows(spark, rows, out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2166,7 +2173,7 @@ def q_ruleset_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = parts["quarantine"]
     rows = q.collect()
     res["violations"].unpersist()
-    return spark.createDataFrame(rows, q.schema)
+    return local_rows(spark, rows, q.schema)
 
 
 @register("ruleset_clean_count", _CLEAN_COUNT_SQL)
@@ -2184,7 +2191,7 @@ def q_ruleset_clean_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = cc.collect()
     res["violations"].unpersist()
-    return spark.createDataFrame(rows, cc.schema)
+    return local_rows(spark, rows, cc.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3484,7 +3491,7 @@ def q_incremental_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("violation_count") == 0).alias("pass"),
         )
         rows = verd.collect()
-        return spark.createDataFrame(rows, verd.schema)
+        return local_rows(spark, rows, verd.schema)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

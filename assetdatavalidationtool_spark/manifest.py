@@ -13,8 +13,10 @@ format-agnostic):
     verdicts/run_id=<run>/rule=<rule>/bucket=<b>/*.parquet
     metrics/run_id=<run>/rule=<rule>/*.parquet   (rule-level stats /
                           drift sketches: metric, column, value)
-    manifest/*.parquet   (append-only: run_id, rule, bucket, status,
-                          rows_scanned, violation_count, wall_sec)
+    manifest/batch-<uuid>.parquet   (append-only, one file per batch:
+                          run_id, rule, bucket, status, rows_scanned,
+                          violation_count, wall_sec, seq)
+    fingerprints/run_id=<run>/part-0.parquet   (see bucket_fingerprints)
 
 Semantics:
 
@@ -35,6 +37,12 @@ Semantics:
   keyed by (run_id, rule, bucket) — re-running a completed partition
   replaces rather than double-counts. The manifest is append-only;
   the LATEST status row per (run_id, rule, bucket) wins.
+* Atomic publish: manifest batches (``expire_runs``' tombstones too)
+  and the fingerprint table are written on the driver by
+  ``rules.base.publish_rows``, with no Spark job: pyarrow writes a
+  dot-prefixed temp file, ``os.rename`` moves it into place. A crash
+  in between leaves a dot-file every read skips; ``expire_runs``
+  removes the hour-old ones. A remote layout appends with Spark.
 * One reader: every read-back goes through ``rules.base.read_table``
   with a pinned schema — results through :func:`read_results` (the
   kind's ``RESULT_COLUMNS``), the manifest and fingerprints with their
@@ -58,7 +66,8 @@ from pyspark.sql import functions as F
 
 from .rules import (AudioInvariantRule, HeaderConsistencyRule, RowInvariantRule,
                     VideoInvariantRule)
-from .rules.base import Rule, RuleContext, RuleSet, path_exists, read_table, sql_lit
+from .rules.base import (Rule, RuleContext, RuleSet, local_rows, path_exists, publish_rows,
+                         read_table, sql_lit)
 
 # Each result kind's columns as read back: the file columns, then the
 # partition columns in path order (<kind>/run_id=<id>/rule=<r>[/bucket=<b>]).
@@ -176,7 +185,8 @@ def bucket_fingerprints(
                 "bucket", F.lit(side).alias("side"), "n_rows", "fp"
             )
         )
-    meta = ctx.spark.createDataFrame(
+    meta = local_rows(
+        ctx.spark,
         [(
             -1,
             "_meta",
@@ -188,10 +198,7 @@ def bucket_fingerprints(
         )],
         FINGERPRINT_SCHEMA,
     )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.unionAll(meta)
+    return reduce(DataFrame.unionAll, parts + [meta])
 
 class ValidationRun:
     """Resumable rule-set execution over an images(+captions) table."""
@@ -271,20 +278,14 @@ class ValidationRun:
         return done
 
     def _append_manifest(self, rows: list[tuple]) -> None:
-        """Atomically publish a manifest batch (Iceberg-snapshot-style).
-
-        A plain ``mode("append")`` job commit moves task files one by
-        one, so a crash mid-commit can leave a concurrent resume
-        reading a torn batch. Instead: write the batch as ONE parquet
-        file to a staging dir, then ``os.rename`` it into ``manifest/``
-        — rename is atomic on POSIX, so readers see the whole batch or
-        none of it. (On an object store this seam is where an Iceberg
-        snapshot commit swaps in; the layout and latest-seq-wins
-        semantics are unchanged.) If the manifest path is not a local
-        filesystem path, fall back to the plain append. Shared with
-        ``expire_runs`` via the module-level publisher below.
-        """
-        _publish_manifest_batch(self.spark, self._manifest_path(), rows)
+        """Atomically publish a manifest batch as ONE new file,
+        ``manifest/batch-<uuid>.parquet``. A Spark ``mode("append")``
+        commit moves task files one by one, so a crash mid-commit could
+        leave a resume reading a torn batch; :func:`rules.base.publish_rows`
+        writes a dot-prefixed temp file and renames it, so readers see
+        the whole batch or none of it. A remote manifest is a plain Spark
+        append (where an Iceberg snapshot commit would swap in)."""
+        publish_rows(self.spark, self._manifest_path(), rows, MANIFEST_SCHEMA, append=True)
 
     # -- execution ---------------------------------------------------------
     def run(
@@ -470,11 +471,7 @@ class ValidationRun:
             # recorded LAST: a crash mid-run leaves no fingerprint
             # table, so a later incremental_from this run finds nothing
             # to inherit from rather than trusting a half-finished run
-            self.spark.createDataFrame(
-                fp_rows, FINGERPRINT_SCHEMA
-            ).coalesce(1).write.mode("overwrite").parquet(
-                self._fingerprints_path()
-            )
+            publish_rows(self.spark, self._fingerprints_path(), fp_rows, FINGERPRINT_SCHEMA)
         return summary
 
     def _unchanged_buckets(
@@ -670,17 +667,17 @@ class ValidationRun:
         unit when there are neither."""
         cols = ["rule", "bucket", "rows_scanned", "violation_count"]
         aligned = ", ".join(sql_lit(r.name) for r in rules if r.bucket_aligned(ctx))
-        glob = ", ".join(sql_lit(r.name) for r in rules if not r.bucket_aligned(ctx))
+        whole = ", ".join(sql_lit(r.name) for r in rules if not r.bucket_aligned(ctx))
         parts = []
         if aligned:
             parts.append(out["verdicts"].where(f"rule IN ({aligned}) AND bucket >= 0").select(*cols))
-        if glob:
+        if whole:
             parts.append(
-                out["verdicts"].where(f"rule IN ({glob})").selectExpr("rule", "rows_scanned", "0L AS n")
-                .unionByName(out["violations"].where(f"rule IN ({glob})")
+                out["verdicts"].where(f"rule IN ({whole})").selectExpr("rule", "rows_scanned", "0L AS n")
+                .unionByName(out["violations"].where(f"rule IN ({whole})")
                              .selectExpr("rule", "0L AS rows_scanned", "1L AS n"))
                 .unionByName(self.spark.sql(
-                    f"SELECT explode(array({glob})) AS rule, 0L AS rows_scanned, 0L AS n"))
+                    f"SELECT explode(array({whole})) AS rule, 0L AS rows_scanned, 0L AS n"))
                 .groupBy("rule")
                 .agg(F.expr("sum(rows_scanned) AS rows_scanned"), F.expr("sum(n) AS violation_count"))
                 .selectExpr("rule", "-1L AS bucket", "rows_scanned", "violation_count")
@@ -741,54 +738,6 @@ class ValidationRun:
         return read_results(self.spark, self.out, "metrics", self.run_id)
 
 
-def _publish_manifest_batch(
-    spark: SparkSession, mpath: str, rows: list[tuple]
-) -> None:
-    """Write one manifest batch as ONE parquet file and os.rename it
-    into the manifest dir — atomic on POSIX, so concurrent readers see
-    the whole batch or none of it (see ValidationRun._append_manifest
-    for the full rationale). Non-local paths fall back to plain append.
-    """
-    import glob
-    import os
-    import shutil
-    import uuid
-
-    df = spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1)
-    if "://" in mpath and not mpath.startswith("file://"):
-        df.write.mode("append").parquet(mpath)
-        return
-    mdir = mpath[len("file://"):] if mpath.startswith("file://") else mpath
-    batch = uuid.uuid4().hex
-    staging_root = f"{os.path.dirname(mdir)}/.manifest_staging"
-    staging = f"{staging_root}/{batch}"
-    df.write.mode("overwrite").parquet(staging)
-    os.makedirs(mdir, exist_ok=True)
-    files = sorted(glob.glob(f"{staging}/*.parquet"))
-    if len(files) != 1:
-        # A real error, not assert: under python -O a silently-renamed
-        # files[0] would drop the rest of the batch — a torn batch,
-        # the exact failure the atomic rename exists to prevent.
-        raise RuntimeError(
-            f"expected exactly one staged manifest file, got {files}"
-        )
-    os.rename(files[0], f"{mdir}/batch-{batch}.parquet")
-    shutil.rmtree(staging, ignore_errors=True)
-    # GC: a crash between write and rename leaves orphan staging
-    # dirs. Sweep only entries older than an hour — a younger
-    # sibling may be a concurrent publisher mid-flight — then drop
-    # the parent if that left it empty.
-    try:
-        cutoff = time.time() - 3600
-        for stale in os.listdir(staging_root):
-            p = f"{staging_root}/{stale}"
-            if os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        os.rmdir(staging_root)
-    except OSError:
-        pass
-
-
 def expire_runs(
     spark: SparkSession,
     output_dir: str,
@@ -811,8 +760,13 @@ def expire_runs(
     orphan data dirs (harmless: re-running expire removes them); the
     reverse order could leave a manifest that vouches for vanished
     parquet. The manifest itself stays append-only — the audit trail
-    of expired runs survives their data.
+    of expired runs survives their data. Dot-prefixed files in
+    ``manifest/`` older than an hour — temp files of a publish that
+    crashed before its rename — are removed; a younger one may belong
+    to a publisher still writing.
     """
+    import contextlib
+    import os
     import shutil
 
     if keep_last is None and not keep_run_ids:
@@ -828,12 +782,15 @@ def expire_runs(
             "expire_runs deletes via the local filesystem; wire an "
             "object-store lister/deleter for remote layouts"
         )
-    root = (
-        output_dir[len("file://"):]
-        if output_dir.startswith("file://")
-        else output_dir
-    )
-    m = spark.read.schema(MANIFEST_SCHEMA).parquet(f"{root}/manifest")
+    root = output_dir.removeprefix("file://")
+    mdir = f"{root}/manifest"
+    cutoff = time.time() - 3600
+    for f in os.listdir(mdir):
+        # a young temp file may be renamed away under us: skip it
+        with contextlib.suppress(FileNotFoundError):
+            if f.startswith(".") and os.path.getmtime(f"{mdir}/{f}") < cutoff:
+                os.remove(f"{mdir}/{f}")
+    m = spark.read.schema(MANIFEST_SCHEMA).parquet(mdir)
     # Latest status per (run, rule, bucket); only LIVE ('done')
     # partitions define a run's existence and recency — tombstones
     # carry high seqs by design and must not make an expired run look
@@ -884,7 +841,7 @@ def expire_runs(
         for r in latest_done
     ]
     if rows:
-        _publish_manifest_batch(spark, f"{root}/manifest", rows)
+        publish_rows(spark, mdir, rows, MANIFEST_SCHEMA, append=True)
     for rid in expired:
         for kind in ("violations", "verdicts", "metrics", "split", "fingerprints"):
             shutil.rmtree(f"{root}/{kind}/run_id={rid}", ignore_errors=True)

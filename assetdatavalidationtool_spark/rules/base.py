@@ -14,12 +14,17 @@ partition-grain verdict.
 
 from __future__ import annotations
 
+import os
+import uuid
 from dataclasses import dataclass, field
 from functools import reduce
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 VIOLATIONS_SCHEMA = T.StructType(
     [
@@ -32,19 +37,36 @@ VIOLATIONS_SCHEMA = T.StructType(
 )
 
 
+def arrow_table(rows, schema: str | T.StructType) -> pa.Table:
+    """Driver-side ``rows`` (tuples or collected ``Row``s in ``schema``'s
+    column order) as a pyarrow table of ``schema`` (DDL string or
+    StructType). A NULL in a non-nullable column raises, as
+    ``createDataFrame`` of a row list does."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    cols = [list(c) for c in zip(*rows)] or [[] for _ in schema]
+    for f, c in zip(schema, cols):
+        if not f.nullable and None in c:
+            raise ValueError(f"NULL in non-nullable column {f.name!r}")
+    return pa.table(cols, schema=to_arrow_schema(schema))
+
+
+def local_rows(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """Driver-side ``rows`` as a DataFrame of ``schema`` (DDL string or
+    StructType) — the one way the package turns driver rows into a
+    table. The rows go through a pyarrow table, so the frame plans as a
+    ``LocalTableScan`` that starts no job (an empty one is pruned from
+    unions), where ``createDataFrame`` of a Python row list is an
+    RDD-backed ``Scan ExistingRDD`` that runs a Python task in every
+    action."""
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
 def violation_rows(spark: SparkSession, rows: list[tuple] | tuple = ()) -> DataFrame:
-    """Driver-side violation rows (VIOLATIONS_SCHEMA order) as an inline
-    ``VALUES`` table — a local relation Catalyst folds at plan time, not
-    an RDD-backed ``createDataFrame`` that runs a ``Scan ExistingRDD``
-    stage in every action, even when empty."""
-    cols = ", ".join(f"CAST(col{j + 1} AS {f.dataType.simpleString()}) AS `{f.name}`"
-                     for j, f in enumerate(VIOLATIONS_SCHEMA))
-    if not rows:  # typed dummy row, pruned at plan time
-        return spark.sql(f"SELECT {cols} FROM VALUES ('', NULL, NULL, NULL, NULL) WHERE false")
-    values = ", ".join("(" + ", ".join(f":v{i}_{j}" for j in range(len(r))) + ")"
-                       for i, r in enumerate(rows))
-    args = {f"v{i}_{j}": v for i, r in enumerate(rows) for j, v in enumerate(r)}
-    return spark.sql(f"SELECT {cols} FROM VALUES {values}", args=args)
+    """Driver-side violation rows (VIOLATIONS_SCHEMA order) as a
+    :func:`local_rows` table; with no rows, the empty seed that unions
+    prune."""
+    return local_rows(spark, rows, VIOLATIONS_SCHEMA)
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -61,17 +83,48 @@ def read_table(spark: SparkSession, path: str, schema: str | T.StructType,
     one reader of every table the package writes and reads back.
 
     A path the session's Hadoop ``FileSystem`` does not find means
-    "nothing written yet" and reads as zero rows of ``schema`` (an
-    inline relation Catalyst folds at plan time). An existing path is
-    read lazily: nothing is inferred, so no job starts before an
-    action, and any failure (corrupt files, permissions) surfaces there."""
+    "nothing written yet" and reads as zero rows of ``schema`` (a
+    :func:`local_rows` table). An existing path is read lazily: nothing
+    is inferred, so no job starts before an action, and any failure
+    (corrupt files, permissions) surfaces there."""
     if path_exists(spark, path):
         return spark.read.options(**options).schema(schema).parquet(path)
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    return spark.sql("SELECT " + ", ".join(
-        f"CAST(NULL AS {f.dataType.simpleString()}) AS {sql_name(f.name)}" for f in schema)
-        + " WHERE false")
+    return local_rows(spark, [], schema)
+
+
+def publish_rows(spark: SparkSession, path: str, rows, schema: str | T.StructType,
+                 append: bool = False) -> None:
+    """Publish driver-side ``rows`` as one parquet file of the table at
+    ``path``: the one writer of the small tables the package records
+    (manifest batches, fingerprints, drift snapshots).
+
+    A local path (plain or ``file://``) is written by pyarrow on the
+    driver, with no Spark job, to a dot-prefixed temp file in the dir,
+    which ``os.rename`` moves into place: atomic on POSIX, and Spark's
+    listing skips dot-files, so readers see the whole file or none of
+    it. A write or rename that raises unlinks the temp file. ``append``
+    adds a fresh ``batch-<uuid>.parquet``; otherwise the file replaces
+    the table (``part-0.parquet``, the dir's other data files removed).
+    Any other scheme is a Spark write of :func:`local_rows`."""
+    if "://" in path and not path.startswith("file://"):
+        local_rows(spark, rows, schema).coalesce(1).write.mode(
+            "append" if append else "overwrite").parquet(path)
+        return
+    d = path.removeprefix("file://")
+    name = f"batch-{uuid.uuid4().hex}.parquet" if append else "part-0.parquet"
+    tmp = f"{d}/.{name}.{uuid.uuid4().hex}"
+    os.makedirs(d, exist_ok=True)
+    try:
+        pq.write_table(arrow_table(rows, schema), tmp)
+        os.rename(tmp, f"{d}/{name}")
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+    if not append:
+        for f in os.listdir(d):
+            if f != name and not f.startswith(".") and os.path.isfile(f"{d}/{f}"):
+                os.remove(f"{d}/{f}")
 
 
 @dataclass

@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import Rule, RuleContext, sql_lit, violation_rows
+from .base import Rule, RuleContext, local_rows, publish_rows, sql_lit, violation_rows
 
 
 def histogram(df: DataFrame, col: str, kind: str, lo: float = 0.0, hi: float = 1024.0,
@@ -100,10 +100,9 @@ class DriftRule(Rule):
 
     def metrics(self, ctx: RuleContext) -> DataFrame:
         ks, psi = self._scores(ctx)
-        return ctx.spark.createDataFrame(
-            [("ks", self.column, float(ks)), ("psi", self.column, float(psi))],
-            "metric string, column string, value double",
-        )
+        return local_rows(ctx.spark,
+                          [("ks", self.column, float(ks)), ("psi", self.column, float(psi))],
+                          "metric string, column string, value double")
 
     def violations(self, ctx: RuleContext) -> DataFrame:
         ks, psi = self._scores(ctx)
@@ -146,8 +145,9 @@ def persist_snapshot(
     validate-against-last-known-good workflow a 100 TB pipeline runs
     nightly. Binning metadata (kind/lo/hi/bins) is stored alongside as
     ``meta_*`` rows so the consuming run bins IDENTICALLY without the
-    operator re-specifying the spec. Tiny data (num_bins rows):
-    written as one file."""
+    operator re-specifying the spec. Tiny data (num_bins rows): written
+    as one file from the driver (:func:`publish_rows`); a re-record
+    replaces it."""
     path = f"{output_dir.rstrip('/')}/metrics/run_id={run_id}/rule=snapshot({column})"
     rows = [("frac", b, float(f)) for b, f in sorted(snapshot.items())]
     rows += [
@@ -156,9 +156,7 @@ def persist_snapshot(
         ("meta_hi", "", float(hi)),
         ("meta_bins", "", float(bins)),
     ]
-    spark.createDataFrame(
-        rows, "metric string, column string, value double"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    publish_rows(spark, path, rows, "metric string, column string, value double")
     return path
 
 

@@ -43,6 +43,8 @@ from urllib.parse import urlencode
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..rules.base import local_rows
+
 Transport = Callable[[str, dict], dict]
 
 
@@ -80,7 +82,7 @@ def rows_to_df(spark: SparkSession, rows: list[dict], source: str) -> DataFrame:
         + (source, i)
         for i, r in enumerate(rows)
     ]
-    return spark.createDataFrame(data, schema)
+    return local_rows(spark, data, schema)
 
 
 @dataclass

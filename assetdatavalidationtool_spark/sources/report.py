@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..rules.base import sql_name
+from ..rules.base import local_rows, sql_name
 
 
 def write_report_tables(
@@ -45,8 +45,6 @@ def write_report_tables(
             .format(fmt)
             .save(f"{out}/_preview/{name}")
         )
-    summary = spark.createDataFrame(
-        [(k, v) for k, v in counts.items()], "table string, row_count long"
-    )
+    summary = local_rows(spark, list(counts.items()), "table string, row_count long")
     summary.write.mode("overwrite").format(fmt).save(f"{out}/Summary")
     return counts

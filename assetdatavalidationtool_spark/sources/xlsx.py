@@ -33,6 +33,8 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..rules.base import local_rows
+
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL_NS = "{http://schemas.openxmlformats.org/package/2006/relationships}"
 _RID = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}id"
@@ -187,9 +189,9 @@ def read_xlsx(spark: SparkSession, path: str) -> DataFrame:
     if not headers:
         # unreadable/empty workbook → zero-column, zero-row frame (the
         # reference's (empty headers, empty rows) analog)
-        return spark.createDataFrame([], "_empty string").drop("_empty")
+        return local_rows(spark, [], "_empty string").drop("_empty")
     # sanitize duplicate headers positionally like a dict would (last wins
     # in the reference's dict too); keep original order
     schema = ", ".join(f"`{re.sub('`', '', h)}` string" for h in dict.fromkeys(headers))
     data = [tuple(r[h] for h in dict.fromkeys(headers)) for r in rows]
-    return spark.createDataFrame(data, schema)
+    return local_rows(spark, data, schema)

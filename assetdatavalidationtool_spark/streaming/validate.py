@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import IMAGES_SCHEMA
-from ..rules.base import Rule, RuleContext, RuleSet, read_table
+from ..rules.base import Rule, RuleContext, RuleSet, local_rows, read_table
 
 
 def _run_stream(spark: SparkSession, schema, input_dir: str, checkpoint_dir: str,
@@ -299,8 +299,8 @@ def stream_drift_monitor(
                 else "pass"
             )
             row = (column, n, float(ks), float(psi), status)
-        _write_batch(spark.createDataFrame(
-            [row], "column string, n_rows long, ks double, psi double, status string"),
+        _write_batch(local_rows(
+            spark, [row], "column string, n_rows long, ks double, psi double, status string"),
             batch_id, monitor_dir)
 
     return _run_stream(spark, spark.read.parquet(input_dir).schema, input_dir,

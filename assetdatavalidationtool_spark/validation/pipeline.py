@@ -10,8 +10,9 @@ from CSV/XLSX readers, parquet scans, or the REST/LDAP connectors'
 Conflicts, and persists the result tables through the report sink.
 
 Scale shape: KeyPresence, MatchesAll and MissingByFile are each one
-projection of the same shared presence aggregate (``present_in`` per
-key, one shuffle); conflicts is one melt->aggregate. The report sink
+projection of ONE presence aggregate (``present_in`` per key), persisted
+for the three writes, so the sources are scanned and shuffled once;
+conflicts is one melt->aggregate. The report sink
 counts and previews each table from its written copy, so each table's
 plan runs once. No driver-side row loops — connector frames are
 dimension-sized by nature, file/table sources stream through the
@@ -24,7 +25,7 @@ from pyspark.sql import SparkSession
 
 from ..sources.report import write_report_tables
 from .conflicts import Sources, common_columns, conflicts
-from .presence import key_presence, matches_all, missing_by_file
+from .presence import _presence, presence_views
 
 
 def validate_sources(
@@ -42,12 +43,12 @@ def validate_sources(
     Engine-internal columns (``_``-prefixed) never participate in the
     conflict column intersection.
     """
-    tables = {
-        "KeyPresence": key_presence(sources),
-        "MatchesAll": matches_all(sources),
-        "MissingByFile": missing_by_file(sources),
-    }
-    cols = [c for c in common_columns(sources) if not c.startswith("_")]
-    if cols:
-        tables["Conflicts"] = conflicts(sources, order_col, columns=cols)
-    return write_report_tables(spark, out_dir, tables, preview_limit=preview_limit)
+    presence = _presence(sources).persist()
+    try:
+        tables = presence_views(sources, presence)
+        cols = [c for c in common_columns(sources) if not c.startswith("_")]
+        if cols:
+            tables["Conflicts"] = conflicts(sources, order_col, columns=cols)
+        return write_report_tables(spark, out_dir, tables, preview_limit=preview_limit)
+    finally:
+        presence.unpersist()

@@ -10,7 +10,8 @@ holding it). Each view is then one narrow projection of that aggregate:
 KeyPresence is ``array_contains`` per source, MatchesAll is
 ``size(present_in) = N`` (no chain of N joins), MissingByFile explodes
 ``array_except(all sources, present_in)`` (no N anti-joins). Each view
-scans every source once and shuffles once on the normalized key.
+alone scans every source once and shuffles once on the normalized key;
+``validate_sources`` persists one ``_presence`` for all three.
 """
 
 from __future__ import annotations
@@ -51,31 +52,34 @@ def _presence(sources: Sources) -> DataFrame:
     )
 
 
+def presence_views(sources: Sources, presence: DataFrame) -> dict[str, DataFrame]:
+    """KeyPresence, MatchesAll and MissingByFile as projections of one
+    ``presence`` frame (:func:`_presence` of ``sources``); persisting it
+    makes the three share one aggregate."""
+    all_names = F.array(*[F.lit(n) for n in sources])
+    return {
+        "KeyPresence": presence.select(
+            "key",
+            *[F.array_contains("present_in", n).alias(f"present_{n}") for n in sources],
+        ),
+        "MatchesAll": presence.where(F.size("present_in") == len(sources)).select("key"),
+        "MissingByFile": presence.select(
+            F.explode(F.array_except(all_names, "present_in")).alias("source"), "key"),
+    }
+
+
 def key_presence(sources: Sources) -> DataFrame:
     """One row per key in the union of key sets; boolean ``present_<src>``
     per source (KeyPresence, Validator.cs:67-79)."""
-    return _presence(sources).select(
-        "key",
-        *[
-            F.array_contains("present_in", name).alias(f"present_{name}")
-            for name in sources
-        ],
-    )
+    return presence_views(sources, _presence(sources))["KeyPresence"]
 
 
 def matches_all(sources: Sources) -> DataFrame:
     """Keys present in every source (Validator.cs:81-84)."""
-    return (
-        _presence(sources)
-        .where(F.size("present_in") == len(sources))
-        .select("key")
-    )
+    return presence_views(sources, _presence(sources))["MatchesAll"]
 
 
 def missing_by_file(sources: Sources) -> DataFrame:
     """(source, key) pairs where the key exists elsewhere but not in
     ``source`` (Validator.cs:86-91)."""
-    all_names = F.array(*[F.lit(n) for n in sources])
-    return _presence(sources).select(
-        F.explode(F.array_except(all_names, "present_in")).alias("source"), "key"
-    )
+    return presence_views(sources, _presence(sources))["MissingByFile"]

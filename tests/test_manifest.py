@@ -151,11 +151,11 @@ def test_crash_before_manifest_append_resumes_without_double_count(
     assert _vio_set(resumed) == _vio_set(fresh)
     assert resumed.violations().count() == fresh.violations().count()  # no dupes
 
-    # atomic publish: manifest dir holds only whole batch files, no
-    # staging/_temporary residue anywhere under the output dir
+    # atomic publish: manifest dir holds only whole batch files — no
+    # dot-prefixed temp file and no _temporary residue
     files = os.listdir(f"{out}/manifest")
     assert files and all(f.startswith("batch-") and f.endswith(".parquet") for f in files)
-    assert not glob.glob(f"{out}/**/.manifest_staging/*", recursive=True)
+    assert not [f for f in files if f.startswith(".")]
     assert not glob.glob(f"{out}/manifest/_temporary*")
 
 
@@ -647,10 +647,8 @@ def test_expire_runs_sweeps_crash_orphans(spark, data, tmp_path_factory):
     import os
     import time as _time
 
-    from assetdatavalidationtool_spark.manifest import (
-        _publish_manifest_batch,
-        expire_runs,
-    )
+    from assetdatavalidationtool_spark.manifest import MANIFEST_SCHEMA, expire_runs
+    from assetdatavalidationtool_spark.rules.base import publish_rows
 
     images, _ = data
     out = str(tmp_path_factory.mktemp("expire_crash"))
@@ -664,10 +662,11 @@ def test_expire_runs_sweeps_crash_orphans(spark, data, tmp_path_factory):
     m = spark.read.parquet(f"{out}/manifest")
     max_seq = m.agg(F.max("seq")).collect()[0][0]
     done = m.where("run_id = 'g1' and status = 'done'").collect()
-    _publish_manifest_batch(
+    publish_rows(
         spark, f"{out}/manifest",
         [("g1", r["rule"], int(r["bucket"]), "expired", 0, 0, 0.0,
           int(max_seq) + 1) for r in done],
+        MANIFEST_SCHEMA, append=True,
     )
     assert os.path.isdir(f"{out}/violations/run_id=g1")  # orphaned data
 
@@ -676,6 +675,135 @@ def test_expire_runs_sweeps_crash_orphans(spark, data, tmp_path_factory):
     assert res["swept"] == ["g1"]
     assert not os.path.isdir(f"{out}/violations/run_id=g1")
     assert os.path.isdir(f"{out}/violations/run_id=live1")
+
+
+def test_leftover_publish_temp_files_are_invisible_and_expired(
+    spark, data, tmp_path_factory
+):
+    """A publish that crashed between its write and its rename leaves a
+    dot-prefixed temp file in manifest/. Readers skip it: completed(),
+    the manifest row count and expire_runs' result are those of the same
+    layout without it. expire_runs removes such a file once it is an
+    hour old and leaves a younger one, which may be a publish in flight."""
+    import os
+    import time as _time
+
+    from assetdatavalidationtool_spark.manifest import expire_runs
+
+    images, _ = data
+    clean = str(tmp_path_factory.mktemp("torn_clean"))
+    for rid in ("t1", "t2"):
+        ValidationRun(spark, clean, make_rules()[:1], num_buckets=8, run_id=rid).run(images)
+        _time.sleep(1.1)
+    torn = str(tmp_path_factory.mktemp("torn")) + "/layout"
+    shutil.copytree(clean, torn)
+    old, young = (f"{torn}/manifest/.batch-{n}.parquet.0123abcd" for n in ("old", "young"))
+    for path in (old, young):
+        with open(path, "wb") as f:
+            f.write(b"PAR1 torn publish")
+    hour_ago = _time.time() - 3700
+    os.utime(old, (hour_ago, hour_ago))
+
+    def state(out):
+        run = ValidationRun(spark, out, make_rules()[:1], num_buckets=8, run_id="t1")
+        return run.completed(), run.read_manifest().count()
+
+    assert state(torn) == state(clean)
+    assert expire_runs(spark, torn, keep_last=1) == expire_runs(spark, clean, keep_last=1)
+    left = [f for f in os.listdir(f"{torn}/manifest") if f.startswith(".")]
+    assert left == [os.path.basename(young)]
+    assert state(torn) == state(clean)
+
+
+def test_publish_rows_replaces_and_cleans_up(spark, tmp_path_factory, monkeypatch):
+    """publish_rows: a replace leaves exactly one data file, an append
+    adds one batch file, and a write or rename that raises leaves no
+    temp file behind."""
+    import os
+
+    from assetdatavalidationtool_spark.rules import base
+    from assetdatavalidationtool_spark.rules.base import publish_rows, read_table
+
+    out = str(tmp_path_factory.mktemp("publish"))
+    schema = "k string, v bigint"
+    spark.createDataFrame([("old", 0)], schema).write.parquet(f"{out}/t")  # a Spark-written table
+    publish_rows(spark, f"{out}/t", [("a", 1), ("b", None)], schema)
+    publish_rows(spark, f"file://{out}/t", [("c", 3)], schema)
+    assert [f for f in os.listdir(f"{out}/t") if not f.startswith(".")] == ["part-0.parquet"]
+    assert [tuple(r) for r in read_table(spark, f"{out}/t", schema).collect()] == [("c", 3)]
+
+    for rows in ([("a", 1)], [("b", 2)]):
+        publish_rows(spark, f"{out}/m", rows, schema, append=True)
+    assert len(os.listdir(f"{out}/m")) == 2
+    assert sorted(tuple(r) for r in read_table(spark, f"{out}/m", schema).collect()) == [
+        ("a", 1), ("b", 2)]
+
+    def torn_write(table, where):
+        with open(where, "wb") as f:
+            f.write(b"PAR1")
+        raise OSError("simulated crash mid-write")
+
+    def failing_rename(src, dst):
+        raise OSError("simulated crash at rename")
+
+    for target, name, fake in ((base.pq, "write_table", torn_write),
+                               (base.os, "rename", failing_rename)):
+        with monkeypatch.context() as m:
+            m.setattr(target, name, fake)
+            with pytest.raises(OSError, match="simulated"):
+                publish_rows(spark, f"{out}/m", [("c", 3)], schema, append=True)
+        assert len(os.listdir(f"{out}/m")) == 2
+
+
+def test_driver_tables_start_no_job(spark, data, tmp_path_factory, monkeypatch):
+    """Driver-sized tables skip Spark: publishing a manifest batch,
+    writing the fingerprint table at the end of
+    ``run(record_fingerprints=True)`` and ``persist_snapshot`` each
+    start 0 jobs, and the plans of the fingerprint ``_meta`` union,
+    ``DriftRule.metrics`` and a missing path's ``read_table`` hold no
+    RDD scan."""
+    import io
+    from contextlib import redirect_stdout
+
+    from assetdatavalidationtool_spark import manifest
+    from assetdatavalidationtool_spark.rules import RuleContext
+    from assetdatavalidationtool_spark.rules.base import publish_rows, read_table
+    from assetdatavalidationtool_spark.rules.drift import persist_snapshot, snapshot_reference
+
+    sc = spark.sparkContext
+    images, captions = data
+    out = str(tmp_path_factory.mktemp("driver_tables"))
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    published = []
+    monkeypatch.setattr(manifest, "publish_rows", lambda *a, **kw: published.append(
+        (a[1].rsplit("/", 1)[-1], jobs(f"publish{len(published)}",
+                                       lambda: publish_rows(*a, **kw)))))
+    ValidationRun(spark, out, make_rules(), num_buckets=8, run_id="rJ").run(
+        images, captions, record_fingerprints=True)
+    assert published == [("manifest", 0), ("run_id=rJ", 0)]
+
+    snap = snapshot_reference(images, "fmt", "categorical")
+    assert jobs("snapshot", lambda: persist_snapshot(spark, snap, out, "rJ", "fmt")) == 0
+
+    def plan(df):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain()
+        return buf.getvalue()
+
+    ctx = RuleContext(spark=spark, images=images, captions=captions, num_buckets=8)
+    for df in (manifest.bucket_fingerprints(ctx), make_rules()[3].metrics(ctx),
+               read_table(spark, f"{out}/nothing", manifest.MANIFEST_SCHEMA)):
+        p = plan(df)
+        assert "LocalTableScan" in p and "ExistingRDD" not in p, p
 
 
 def test_expire_runs_requires_explicit_keep(spark, tmp_path_factory):

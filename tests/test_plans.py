@@ -279,13 +279,51 @@ def test_ruleset_verdicts_reuses_persisted_violations(spark):
 def test_headline_violations_plan_has_no_rdd_scans(ctx):
     """Empty violation seeds are local relations that Catalyst prunes:
     no branch of the headline rule set's violations plan scans an
-    RDD-backed ``createDataFrame``."""
+    RDD-backed ``createDataFrame``, and neither does its metrics plan
+    (the stats aggregates and ``DriftRule.metrics``' driver rows)."""
     import bench
 
-    vio = bench.build_ruleset(ctx.spark, ctx.images).run(ctx, persist=False)["violations"]
-    p = plan(vio)
+    out = bench.build_ruleset(ctx.spark, ctx.images).run(ctx, persist=False)
+    p = plan(out["violations"])
     assert "Scan parquet" in p
     assert "ExistingRDD" not in p
+    m = plan(out["metrics"])
+    assert "LocalTableScan" in m
+    assert "ExistingRDD" not in m
+
+
+def test_local_rows_round_trips_as_local_table_scan(spark):
+    """``local_rows`` keeps every type the package passes through it,
+    NULLs, zero rows, a non-nullable field and collected ``Row``s; the
+    frame is a ``LocalTableScan``, and neither building nor collecting
+    it starts a job."""
+    from assetdatavalidationtool_spark.rules.base import local_rows
+
+    ddl = "s string NOT NULL, l bigint, i int, d double, b boolean, x binary"
+    rows = [("a", 2**40, 7, 1.5, True, b"\x00\xff"), ("", None, None, None, None, None)]
+    sc = spark.sparkContext
+    sc.setJobGroup("local_rows_build", "local_rows_build")
+    try:
+        df = local_rows(spark, rows, ddl)
+        empty = local_rows(spark, [], ddl)
+        again = local_rows(spark, rows[:1] + df.collect()[1:], df.schema)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("local_rows_build") == []
+    assert df.schema.simpleString() == (
+        "struct<s:string,l:bigint,i:int,d:double,b:boolean,x:binary>")
+    assert not df.schema["s"].nullable and df.schema["l"].nullable
+    assert [tuple(r) for r in df.collect()] == rows
+    assert [tuple(r) for r in again.collect()] == rows
+    assert empty.collect() == [] and empty.schema == df.schema
+    for frame in (df, empty):
+        p = plan(frame)
+        assert "LocalTableScan" in p and "ExistingRDD" not in p
+    # an empty seed is pruned from a union
+    assert "LocalTableScan" not in plan(
+        spark.range(3).selectExpr("'r' AS s").unionByName(empty.select("s")))
+    with pytest.raises(ValueError, match="non-nullable"):
+        local_rows(spark, [(None, 1, 1, 1.0, True, b"")], ddl)
 
 
 def test_headline_key_rules_share_one_image_id_aggregate(ctx):

@@ -23,6 +23,8 @@ The bug-fix scenarios carry their own check: ``partial_cleanup``
 (one bucket dir of a base run's violations deleted before an
 incremental run) records whether day 2's violations, verdicts, metrics
 and split equal a fresh run's; ``empty_stats`` runs ``StatsRule`` over an empty table.
+``torn_publish`` leaves a dot-prefixed temp file in ``manifest/`` (a
+publish that crashed before its rename) between two runs of one run id.
 """
 from __future__ import annotations
 
@@ -185,6 +187,17 @@ def run(checkout: str, out_json: str, only: list[str]) -> None:
         return {"summary": [s1, s2], "deleted": victim, "day2": day2,
                 "day2_equals_fresh": same}
 
+    def torn_publish(out):
+        # a publish that crashed between its write and its rename leaves a
+        # dot-prefixed temp file in manifest/ between two runs of one run id
+        s1 = ValidationRun(spark, out, make_rules()[:2], num_buckets=8, run_id="t").run(
+            images, captions)
+        with open(f"{out}/manifest/.batch-torn.parquet.0", "wb") as f:
+            f.write(b"PAR1 torn publish")
+        s2 = ValidationRun(spark, out, make_rules(), num_buckets=8, run_id="t").run(
+            images, captions)
+        return {"summary": [s1, s2], **dump(out, "t", images, num_buckets=8)}
+
     def empty_stats(out):
         empty = images.where("false")
         rules = make_rules() + [StatsRule(columns=["w", "fmt"])]
@@ -195,7 +208,7 @@ def run(checkout: str, out_json: str, only: list[str]) -> None:
     sc = spark.sparkContext
     results = {}
     for fn in (fresh, canary, partial, incremental, custom_bucket, schema_table_level,
-               global_uniqueness, empty_images, partial_cleanup, empty_stats):
+               global_uniqueness, empty_images, partial_cleanup, empty_stats, torn_publish):
         name = fn.__name__
         if only and name not in only:
             continue
