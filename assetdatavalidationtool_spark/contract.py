@@ -2270,18 +2270,42 @@ _CC_FROM_HPAIRS = """edges AS (
 _PHASH_CC_CTES = _PHASH_CTES + ",\n    " + _CC_FROM_HPAIRS
 
 
+def _synthetic_phash(k: F.Column) -> F.Column:
+    """The deterministic 64-bit phash of order key ``k`` — the value the
+    DuckDB oracle derives for the same row."""
+    return (
+        (k * 40503 + 11) % 65536
+        + ((k * 9973 + 12345) % 65536) * 65536
+        + ((k * 31 + 7) % 65536) * F.lit(4294967296)
+    ).cast("long")
+
+
+def _phash_pairs(tbl: DataFrame) -> DataFrame:
+    """(image_a, image_b, hamming): the banded Hamming <= 3 near-dup
+    pairs of an (image_id, phash) table, as every pHash query builds
+    them."""
+    from .operators.phash import phash_neardup_pairs
+
+    return phash_neardup_pairs(
+        tbl, "image_id", "phash", max_hamming=3, bands=4, max_bucket_size=200,
+    )
+
+
+def _phash_clusters(tbl: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id): connected components of
+    :func:`_phash_pairs` of ``tbl``."""
+    from .operators.dedup import connected_components
+
+    return connected_components(_phash_pairs(tbl), src="image_a", dst="image_b")
+
+
 def _phash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic (image_id, phash) table with planted near/exact
     duplicates — the same rows the DuckDB oracle derives from orders."""
     k = F.col("o_orderkey").cast("long")
-    phash = (
-        (k * 40503 + 11) % 65536
-        + ((k * 9973 + 12345) % 65536) * 65536
-        + ((k * 31 + 7) % 65536) * F.lit(4294967296)
-    )
     base = _t(spark, sf_dir, "orders").select(
         F.concat(F.lit("img_"), k.cast("string")).alias("image_id"),
-        phash.cast("long").alias("phash"),
+        _synthetic_phash(k).alias("phash"),
         k.alias("k"),
     )
     near = base.where(F.col("k") % 97 == 0).select(
@@ -2297,12 +2321,7 @@ def _phash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("phash_neardup", _PHASH_SQL)
 def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.phash import phash_neardup_pairs
-
-    return phash_neardup_pairs(
-        _phash_table(spark, sf_dir),
-        "image_id", "phash", max_hamming=3, bands=4, max_bucket_size=200,
-    )
+    return _phash_pairs(_phash_table(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2701,14 +2720,7 @@ def q_image_curation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "WITH RECURSIVE " + _PHASH_CC_CTES + "\n    SELECT image_id, cluster_id FROM cc",
 )
 def q_image_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import connected_components
-    from .operators.phash import phash_neardup_pairs
-
-    pairs = phash_neardup_pairs(
-        _phash_table(spark, sf_dir),
-        "image_id", "phash", max_hamming=3, bands=4, max_bucket_size=200,
-    )
-    return connected_components(pairs, src="image_a", dst="image_b").select(
+    return _phash_clusters(_phash_table(spark, sf_dir)).select(
         F.col("doc_id").alias("image_id"), "cluster_id"
     )
 
@@ -2734,14 +2746,10 @@ def q_image_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_image_phash_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import canonical_docs, connected_components
-    from .operators.phash import phash_neardup_pairs
+    from .operators.dedup import canonical_docs
 
     tbl = _phash_table(spark, sf_dir)
-    pairs = phash_neardup_pairs(
-        tbl, "image_id", "phash", max_hamming=3, bands=4, max_bucket_size=200,
-    )
-    clusters = connected_components(pairs, src="image_a", dst="image_b")
+    clusters = _phash_clusters(tbl)
     attrs = tbl.select(
         "image_id",
         F.col("image_id").startswith("img_").cast("int").alias("orig"),
@@ -2867,13 +2875,7 @@ def _curated_corpus_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     m0 = _t(spark, sf_dir, "orders").select(
         k.alias("k"),
         *_meta_col_exprs(k),
-        (
-            (k * 40503 + 11) % 65536
-            + ((k * 9973 + 12345) % 65536) * 65536
-            + ((k * 31 + 7) % 65536) * F.lit(4294967296)
-        )
-        .cast("long")
-        .alias("phash"),
+        _synthetic_phash(k).alias("phash"),
     )
     base = m0.select(
         F.concat(F.lit("img_"), F.col("k").cast("string")).alias("image_id"),
@@ -2908,18 +2910,12 @@ def q_image_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from .operators.dedup import connected_components
     from .operators.images import aspect_bucket_expr, gate_reason_expr
-    from .operators.phash import phash_neardup_pairs
 
     gated = _curated_corpus_table(spark, sf_dir).where(
         gate_reason_expr().isNull()
     )
-    pairs = phash_neardup_pairs(
-        gated.select("image_id", "phash"),
-        "image_id", "phash", max_hamming=3, bands=4, max_bucket_size=200,
-    )
-    cc = connected_components(pairs, src="image_a", dst="image_b")
+    cc = _phash_clusters(gated.select("image_id", "phash"))
     w_rn = Window.partitionBy("cluster_id").orderBy(
         F.desc("orig"), F.asc("doc_id")
     )

@@ -264,16 +264,8 @@ class ValidationRun:
         m = self.read_manifest()
         if m is None:
             return {}
-        w = Window.partitionBy("rule", "bucket").orderBy(F.desc("seq"))
-        latest = (
-            m.where(F.col("run_id") == (run_id or self.run_id))
-            .withColumn("_rn", F.row_number().over(w))
-            .where("_rn = 1")
-        )
         done: dict[str, set[int]] = {}
-        for r in latest.where(
-            F.col("status").isin("done", "inherited")
-        ).collect():
+        for r in _live_units(m.where(F.col("run_id") == (run_id or self.run_id))).collect():
             done.setdefault(r["rule"], set()).add(r["bucket"])
         return done
 
@@ -738,6 +730,17 @@ class ValidationRun:
         return read_results(self.spark, self.out, "metrics", self.run_id)
 
 
+def _live_units(m: DataFrame) -> DataFrame:
+    """(run_id, rule, bucket, seq) of each unit of the manifest ``m``
+    whose latest row (highest ``seq``) is ``done`` or ``inherited``."""
+    w = Window.partitionBy("run_id", "rule", "bucket").orderBy(F.desc("seq"))
+    return (
+        m.withColumn("_rn", F.row_number().over(w))
+        .where((F.col("_rn") == 1) & F.col("status").isin("done", "inherited"))
+        .select("run_id", "rule", "bucket", "seq")
+    )
+
+
 def expire_runs(
     spark: SparkSession,
     output_dir: str,
@@ -745,7 +748,8 @@ def expire_runs(
     keep_run_ids: tuple[str, ...] | list[str] = (),
 ) -> dict:
     """Retire old validation runs — the Iceberg expire-snapshots analog
-    for the checkpoint layout. Returns {"kept", "expired", "tombstones"}.
+    for the checkpoint layout. Returns {"kept", "expired", "swept",
+    "tombstones"}; a layout with no manifest yet has nothing to expire.
 
     Runs are ordered by their newest manifest ``seq``; the keep set is
     ``keep_run_ids`` plus the ``keep_last`` most recent. At least one
@@ -785,24 +789,16 @@ def expire_runs(
     root = output_dir.removeprefix("file://")
     mdir = f"{root}/manifest"
     cutoff = time.time() - 3600
-    for f in os.listdir(mdir):
+    for f in os.listdir(mdir) if os.path.isdir(mdir) else ():
         # a young temp file may be renamed away under us: skip it
         with contextlib.suppress(FileNotFoundError):
             if f.startswith(".") and os.path.getmtime(f"{mdir}/{f}") < cutoff:
                 os.remove(f"{mdir}/{f}")
-    m = spark.read.schema(MANIFEST_SCHEMA).parquet(mdir)
-    # Latest status per (run, rule, bucket); only LIVE ('done')
-    # partitions define a run's existence and recency — tombstones
-    # carry high seqs by design and must not make an expired run look
-    # newest, and a fully-tombstoned ghost must drop out entirely.
-    w = Window.partitionBy("run_id", "rule", "bucket").orderBy(F.desc("seq"))
-    live = (
-        m.withColumn("_rn", F.row_number().over(w))
-        .where("_rn = 1")
-        .where(F.col("status").isin("done", "inherited"))
-        .select("run_id", "rule", "bucket", "seq")
-        .persist()
-    )
+    m = read_table(spark, mdir, MANIFEST_SCHEMA)
+    # only LIVE partitions define a run's existence and recency —
+    # tombstones carry high seqs by design and must not make an expired
+    # run look newest, and a fully-tombstoned ghost must drop out entirely
+    live = _live_units(m).persist()
     ordered = [
         r["run_id"]
         for r in live.groupBy("run_id")

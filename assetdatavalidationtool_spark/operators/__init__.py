@@ -1,6 +1,6 @@
 """Large-scale training-data pipeline operators (beyond the reference's
-own surface): deduplication, similarity search, text analysis, and
-multimodal column plumbing. All DataFrame-first; hashing uses md5 so
+own surface): deduplication, similarity search, text analysis, and the
+per-row media harness. All DataFrame-first; hashing uses md5 so
 results are engine-portable (the DuckDB oracles mirror it exactly).
 """
 

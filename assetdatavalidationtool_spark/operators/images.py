@@ -362,7 +362,15 @@ def _be_uint(bytes_col: F.Column, off: int, nbytes: int) -> F.Column:
 
 def _header_exprs(b: F.Column) -> tuple[F.Column, F.Column, F.Column]:
     """(hdr_fmt, hdr_w, hdr_h) Column expressions over a binary payload
-    column — shared by header_fields and header_consistency."""
+    column, as :func:`header_consistency` stages them.
+
+    Containers carry their own dimensions: PNG in the IHDR chunk
+    (bytes 17-24 big-endian, after the 8-byte signature + 4-byte length
+    + "IHDR"), the engine's stub-lossy formats at bytes 5-12 after
+    their 4-byte magic (codecs.py::encode_stub_lossy). ``hdr_fmt`` is
+    NULL for a NULL, short, or unrecognized-magic payload. Pure Column
+    expressions (substring/hex/conv, inside whole-stage codegen): only
+    the first 24 bytes of the payload are ever transformed."""
     magic8 = F.hex(F.substring(b, 1, 8))       # 16 hex chars, uppercase
     magic4 = F.substring(magic8, 1, 8)
     hdr_fmt = (
@@ -382,34 +390,6 @@ def _header_exprs(b: F.Column) -> tuple[F.Column, F.Column, F.Column]:
     hdr_w = F.when(png_ok, _be_uint(b, 17, 4)).when(stub_ok, _be_uint(b, 5, 4))
     hdr_h = F.when(png_ok, _be_uint(b, 21, 4)).when(stub_ok, _be_uint(b, 9, 4))
     return hdr_fmt, hdr_w, hdr_h
-
-
-def header_fields(
-    df: DataFrame,
-    bytes_col: str = "bytes",
-    id_col: str = "image_id",
-) -> DataFrame:
-    """Parse (hdr_fmt, hdr_w, hdr_h) out of the payload's embedded
-    header → (<id_col>, w, h, fmt, hdr_fmt, hdr_w, hdr_h).
-
-    Containers carry their own dimensions: PNG in the IHDR chunk
-    (bytes 17-24 big-endian, after the 8-byte signature + 4-byte length
-    + "IHDR"), the engine's stub-lossy formats at bytes 5-12 after
-    their 4-byte magic (codecs.py::encode_stub_lossy). ``hdr_fmt`` is
-    NULL for a NULL, short, or unrecognized-magic payload.
-
-    Scale: pure Column expressions (substring/hex/conv — JVM, inside
-    whole-stage codegen), no decompression, no Python. The payload
-    column is read but only its first 24 bytes are ever transformed;
-    this is the cheapest check that touches ``bytes`` at all — the
-    tier below it is :func:`image_gate` (metadata only), the tier above
-    is the full pixel invariant (rules/row_invariant.py).
-    """
-    hdr_fmt, hdr_w, hdr_h = _header_exprs(F.col(bytes_col))
-    return df.select(
-        id_col, "w", "h", "fmt",
-        hdr_fmt.alias("hdr_fmt"), hdr_w.alias("hdr_w"), hdr_h.alias("hdr_h"),
-    )
 
 
 def header_consistency(

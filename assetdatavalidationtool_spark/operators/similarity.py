@@ -269,16 +269,6 @@ def attach_cell(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> Da
     return _attach(df, cents, cell=_nearest_cell(vec_col))
 
 
-def attach_probe_cells(
-    df: DataFrame, vec_col: str, centroids: list[list[float]], n_probe: int
-) -> DataFrame:
-    """All input columns + ``probe_cells``: array<int> of the n_probe
-    nearest cells by dot product (ties → lower cell; empty for a
-    malformed vector). n_probe=1 selects exactly `attach_cell`'s cell."""
-    cents = _centroid_row(df.sparkSession, centroids)
-    return _attach(df, cents, probe_cells=_probe_cells(vec_col, n_probe))
-
-
 def ivf_assign(
     df: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
 ) -> DataFrame:

@@ -183,16 +183,6 @@ def _read_snapshot(spark, output_dir: str, run_id: str, column: str):
     )
 
 
-def load_snapshot(spark, output_dir: str, run_id: str, column: str) -> dict[str, float]:
-    """Read back a snapshot persisted by ``persist_snapshot`` as the
-    ``reference=`` dict for a DriftRule in a later run."""
-    return {
-        r["column"]: r["value"]
-        for r in _read_snapshot(spark, output_dir, run_id, column)
-        if r["metric"] == "frac"
-    }
-
-
 def load_snapshot_spec(
     spark, output_dir: str, run_id: str, column: str,
     legacy_kind: str | None = None,

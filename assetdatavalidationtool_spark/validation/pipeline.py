@@ -10,13 +10,13 @@ from CSV/XLSX readers, parquet scans, or the REST/LDAP connectors'
 Conflicts, and persists the result tables through the report sink.
 
 Scale shape: KeyPresence, MatchesAll and MissingByFile are each one
-projection of ONE presence aggregate (``present_in`` per key), persisted
-for the three writes, so the sources are scanned and shuffled once;
-conflicts is one melt->aggregate. The report sink
-counts and previews each table from its written copy, so each table's
-plan runs once. No driver-side row loops — connector frames are
-dimension-sized by nature, file/table sources stream through the
-executors.
+projection of ONE presence aggregate (``present_in`` per key), planned
+per view: caching it would pin its shuffle partitions, which AQE
+otherwise coalesces, and cost more tasks than the rescan it saves.
+Conflicts is one melt->aggregate. The report sink counts and previews
+each table from its written copy, so each table's plan runs once. No
+driver-side row loops — connector frames are dimension-sized by
+nature, file/table sources stream through the executors.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from pyspark.sql import SparkSession
 
 from ..sources.report import write_report_tables
 from .conflicts import Sources, common_columns, conflicts
-from .presence import _presence, presence_views
+from .presence import presence_views
 
 
 def validate_sources(
@@ -43,12 +43,8 @@ def validate_sources(
     Engine-internal columns (``_``-prefixed) never participate in the
     conflict column intersection.
     """
-    presence = _presence(sources).persist()
-    try:
-        tables = presence_views(sources, presence)
-        cols = [c for c in common_columns(sources) if not c.startswith("_")]
-        if cols:
-            tables["Conflicts"] = conflicts(sources, order_col, columns=cols)
-        return write_report_tables(spark, out_dir, tables, preview_limit=preview_limit)
-    finally:
-        presence.unpersist()
+    tables = presence_views(sources)
+    cols = [c for c in common_columns(sources) if not c.startswith("_")]
+    if cols:
+        tables["Conflicts"] = conflicts(sources, order_col, columns=cols)
+    return write_report_tables(spark, out_dir, tables, preview_limit=preview_limit)

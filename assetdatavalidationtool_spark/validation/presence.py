@@ -52,10 +52,10 @@ def _presence(sources: Sources) -> DataFrame:
     )
 
 
-def presence_views(sources: Sources, presence: DataFrame) -> dict[str, DataFrame]:
+def presence_views(sources: Sources) -> dict[str, DataFrame]:
     """KeyPresence, MatchesAll and MissingByFile as projections of one
-    ``presence`` frame (:func:`_presence` of ``sources``); persisting it
-    makes the three share one aggregate."""
+    :func:`_presence` aggregate of ``sources``."""
+    presence = _presence(sources)
     all_names = F.array(*[F.lit(n) for n in sources])
     return {
         "KeyPresence": presence.select(
@@ -71,15 +71,15 @@ def presence_views(sources: Sources, presence: DataFrame) -> dict[str, DataFrame
 def key_presence(sources: Sources) -> DataFrame:
     """One row per key in the union of key sets; boolean ``present_<src>``
     per source (KeyPresence, Validator.cs:67-79)."""
-    return presence_views(sources, _presence(sources))["KeyPresence"]
+    return presence_views(sources)["KeyPresence"]
 
 
 def matches_all(sources: Sources) -> DataFrame:
     """Keys present in every source (Validator.cs:81-84)."""
-    return presence_views(sources, _presence(sources))["MatchesAll"]
+    return presence_views(sources)["MatchesAll"]
 
 
 def missing_by_file(sources: Sources) -> DataFrame:
     """(source, key) pairs where the key exists elsewhere but not in
     ``source`` (Validator.cs:86-91)."""
-    return presence_views(sources, _presence(sources))["MissingByFile"]
+    return presence_views(sources)["MissingByFile"]

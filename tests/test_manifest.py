@@ -404,7 +404,7 @@ def test_cross_run_drift_from_persisted_snapshot(spark, data, tmp_path_factory):
     table loads it as the DriftRule reference and fires."""
     from assetdatavalidationtool_spark.rules import DriftRule, RuleContext, RuleSet
     from assetdatavalidationtool_spark.rules.drift import (
-        load_snapshot,
+        load_snapshot_spec,
         persist_snapshot,
         snapshot_reference,
     )
@@ -414,7 +414,7 @@ def test_cross_run_drift_from_persisted_snapshot(spark, data, tmp_path_factory):
     snap = snapshot_reference(images, "fmt", "categorical")
     persist_snapshot(spark, snap, out, "day1", "fmt")
 
-    ref = load_snapshot(spark, out, "day1", "fmt")
+    ref = load_snapshot_spec(spark, out, "day1", "fmt")[0]
     assert ref == pytest.approx(snap)
 
     drifted = images.withColumn("fmt", F.lit("webp"))  # all-webp: massive drift
@@ -479,7 +479,6 @@ def test_snapshot_spec_roundtrip_and_missing_error(spark, data, tmp_path_factory
     snapshot reports what the run DID record instead of a raw parquet
     path error."""
     from assetdatavalidationtool_spark.rules.drift import (
-        load_snapshot,
         load_snapshot_spec,
         persist_snapshot,
         snapshot_reference,
@@ -494,8 +493,6 @@ def test_snapshot_spec_roundtrip_and_missing_error(spark, data, tmp_path_factory
     ref, kind, lo, hi, bins = load_snapshot_spec(spark, out, "day1", "w")
     assert ref == pytest.approx(snap)
     assert (kind, lo, hi, bins) == ("numeric", 0.0, 2048.0, 16)
-    # legacy reader ignores the meta rows
-    assert load_snapshot(spark, out, "day1", "w") == pytest.approx(snap)
 
     with pytest.raises(FileNotFoundError, match=r"no snapshot for column 'fmt'.*\['w'\]"):
         load_snapshot_spec(spark, out, "day1", "fmt")
@@ -814,6 +811,16 @@ def test_expire_runs_requires_explicit_keep(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("expire_guard"))
     with pytest.raises(ValueError, match="EVERY run"):
         expire_runs(spark, out)
+
+
+def test_expire_runs_without_manifest_is_empty(spark, tmp_path_factory):
+    """A layout that has recorded no manifest batch yet has no runs:
+    expiring it returns the empty summary instead of raising."""
+    from assetdatavalidationtool_spark.manifest import expire_runs
+
+    out = str(tmp_path_factory.mktemp("expire_empty"))
+    assert expire_runs(spark, out, keep_last=1) == {
+        "kept": [], "expired": [], "swept": [], "tombstones": 0}
 
 
 def test_load_snapshot_spec_legacy_kind_required(spark, tmp_path_factory):

@@ -194,132 +194,6 @@ def test_ivf_topk_finds_planted_neighbor(vectors):
     assert all(ranks == list(range(1, len(ranks) + 1)) for ranks in map(sorted, by_q.values()))
 
 
-def test_multimodal_image_features_and_resize(spark):
-    from assetdatavalidationtool_spark.datagen import generate_images
-    from assetdatavalidationtool_spark.operators.multimodal import (
-        image_features,
-        resize_images,
-    )
-
-    imgs = generate_images(spark, 12, partitions=2).cache()
-    feats = {r["image_id"]: r for r in image_features(imgs).collect()}
-    assert len(feats) == 12 and all(r["decode_ok"] for r in feats.values())
-    # decoded dims equal declared dims
-    declared = {r["image_id"]: (r["w"], r["h"]) for r in imgs.select("image_id", "w", "h").collect()}
-    for iid, r in feats.items():
-        assert (r["decoded_w"], r["decoded_h"]) == declared[iid]
-        assert 0 <= r["mean_r"] <= 255 and r["contrast"] > 0
-
-    resized = resize_images(imgs.limit(3), 32, 32).collect()
-    from assetdatavalidationtool_spark.codecs import decode_image
-    for r in resized:
-        out = decode_image(bytes(r["bytes"]), r["fmt"])
-        assert out.shape == (32, 32, 3)
-
-    # corrupt bytes → decode_ok False, no crash
-    from pyspark.sql import functions as F
-    bad = imgs.limit(2).withColumn("bytes", F.lit(b"not an image"))
-    got = image_features(bad).collect()
-    assert all(not r["decode_ok"] for r in got)
-
-
-def test_image_features_null_key_yields_fault_row(spark):
-    """A null image_id is a fault row (decode_ok False), not a failed
-    task: the output key field is nullable like the input's."""
-    from pyspark.sql import types as T
-
-    from assetdatavalidationtool_spark.datagen import IMAGES_SCHEMA, make_row
-    from assetdatavalidationtool_spark.operators.multimodal import image_features
-
-    rows = [make_row(1), make_row(2)]
-    rows[1]["image_id"] = None
-    schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in IMAGES_SCHEMA])
-    got = {r["image_id"]: r["decode_ok"]
-           for r in image_features(spark.createDataFrame(rows, schema)).collect()}
-    assert got == {rows[0]["image_id"]: True, None: False}
-
-
-def test_video_frame_sampling_y4m(spark):
-    """Real end-to-end video path: synthesize Y4M clips, sample every
-    n-th frame in the Arrow batch UDF, verify the PLANTED moving-square
-    frames come back (PSNR > 40 dB vs the rendered reference — the Y4M
-    C444 round trip is +/-1 per channel); corrupt payloads degrade to
-    decode_ok=False per row, not a job failure."""
-    import numpy as np
-
-    from assetdatavalidationtool_spark.codecs import decode_image
-    from assetdatavalidationtool_spark.datagen import make_video_row, render_video
-    from assetdatavalidationtool_spark.operators.multimodal import sample_video_frames
-
-    rows = [make_video_row(i, n_frames=9) for i in range(3)]
-    rows.append(make_video_row(3, n_frames=9, subsampling="420"))
-    rows.append({"video_id": "video_bad", "bytes": b"not a video",
-                 "n_frames": 0, "fps": 0})
-    vids = spark.createDataFrame(
-        rows, "video_id string, bytes binary, n_frames int, fps int"
-    )
-    got = sample_video_frames(vids, every_n=4).collect()
-    by_vid = {}
-    for r in got:
-        by_vid.setdefault(r["video_id"], []).append(r)
-
-    bad = by_vid["video_bad"]
-    assert len(bad) == 1 and bad[0]["decode_ok"] is False and bad[0]["frame_idx"] == -1
-
-    for i in (0, 1, 2, 3):
-        vid = f"video_{i:09d}"
-        rs = sorted(by_vid[vid], key=lambda r: r["frame_idx"])
-        assert [r["frame_idx"] for r in rs] == [0, 4, 8]   # every 4th of 9
-        assert all(r["n_frames"] == 9 and r["fps"] == 30 and r["decode_ok"] for r in rs)
-        ref = render_video(vid, 9).astype(np.float64)
-        for r in rs:
-            frame = decode_image(bytes(r["frame_bytes"]), "png").astype(np.float64)
-            mse = ((frame - ref[r["frame_idx"]]) ** 2).mean()
-            psnr = 10 * np.log10(255.0 ** 2 / mse) if mse else 99.0
-            # C444 round trip is near-lossless; C420 chroma is averaged
-            assert psnr > (40.0 if i < 3 else 25.0)
-
-
-def test_audio_features_wav(spark):
-    """Real end-to-end audio path: synthesize WAV clips, decode in the
-    Arrow batch UDF, check features against driver-side numpy; non-WAV
-    payloads degrade to decode_ok=False per row (not a job failure)."""
-    import numpy as np
-
-    from assetdatavalidationtool_spark.datagen import make_audio_row, render_audio
-    from assetdatavalidationtool_spark.operators.multimodal import audio_features
-
-    rows = [make_audio_row(i, n_samples=4000) for i in range(6)]
-    rows.append({"clip_id": "clip_bad", "bytes": b"not audio",
-                 "sample_rate": 0, "n_samples": 0})
-    corrupt = make_audio_row(99, n_samples=4000, corrupt=True)
-    rows.append(corrupt)
-    clips = spark.createDataFrame(
-        rows, "clip_id string, bytes binary, sample_rate int, n_samples int"
-    )
-    got = {r["clip_id"]: r for r in audio_features(clips).collect()}
-    assert len(got) == 8
-    assert got["clip_bad"]["decode_ok"] is False and got["clip_bad"]["rms"] is None
-
-    # negative-rail clipping: the 4x-amplified corrupt clip saturates at
-    # BOTH rails; int16 abs wraps -32768 back to -32768, so the widened
-    # abs is what lets the detector see the negative rail at all.
-    s99 = (render_audio("clip_000000099", 4000).astype(np.int32) * 4).clip(-32768, 32767)
-    a99 = np.abs(s99)
-    expect_clip = round(float(np.mean(a99 >= 32767)), 6)
-    r99 = got["clip_000000099"]
-    assert (s99 == -32768).any(), "fixture must actually hit the negative rail"
-    assert r99["clip_frac"] == expect_clip and expect_clip > 0.0
-    assert r99["peak"] == int(a99.max()) == 32768
-
-    s = render_audio("clip_000000003", 4000).astype(np.float64)
-    expect_rms = round(float(np.sqrt(np.mean(s * s))), 4)
-    r3 = got["clip_000000003"]
-    assert r3["decode_ok"] and r3["n_samples"] == 4000
-    assert r3["sample_rate"] == 16000 and abs(r3["duration_sec"] - 0.25) < 1e-9
-    assert abs(r3["rms"] - expect_rms) < 1e-6
-    assert 0.0 < r3["zero_cross_rate"] < 0.5 and r3["clip_frac"] == 0.0
-
 def test_ivf_hot_cell_guard_drops_mega_cell(vectors, spark):
     """A planted hot cluster (30 identical vectors in one cell) must be
     excluded from the candidate side when max_cell_size caps it — the
@@ -526,13 +400,27 @@ def test_ivf_assign_matches_numpy_argmax(spark):
 MALFORMED = [(901, None), (902, []), (903, [1.0, 2.0]), (904, [0.5, None, 0.5, 0.5])]
 
 
+def _probe_cells_by_id(df, cents, n_probe):
+    """vec_id -> the cells ``ivf_topk`` probes for that query, in order:
+    its probe-cell array over the same broadcast centroid row, before
+    the explode."""
+    from assetdatavalidationtool_spark.operators.similarity import (
+        _attach,
+        _centroid_row,
+        _probe_cells,
+    )
+
+    row = _centroid_row(df.sparkSession, cents)
+    probed = _attach(df, row, probe_cells=_probe_cells("embedding", n_probe))
+    return {r["vec_id"]: list(r["probe_cells"]) for r in probed.collect()}
+
+
 def test_ivf_assign_malformed_vector_gets_no_cell(spark):
     """A null, empty, short or null-holding vector has a NULL dot with
     every centroid: it gets cell NULL (the oracle's ``CASE WHEN d_i =
     greatest(...)`` matches no branch) and probes no cell, at a small
     and at a large quantizer alike."""
     from assetdatavalidationtool_spark.operators.similarity import (
-        attach_probe_cells,
         ivf_assign,
         ivf_centroids,
     )
@@ -548,8 +436,7 @@ def test_ivf_assign_malformed_vector_gets_no_cell(spark):
             **{i: int(np.argmax([_dot_fold(v, c) for c in cents])) for i, v in good},
             **{i: None for i, _ in MALFORMED},
         }
-        probes = {r["vec_id"]: list(r["probe_cells"])
-                  for r in attach_probe_cells(df, "embedding", cents, 2).collect()}
+        probes = _probe_cells_by_id(df, cents, 2)
         assert all(probes[i] == [] for i, _ in MALFORMED)
         assert all(probes[i][0] == cells[i] for i, _ in good)
 
@@ -676,7 +563,6 @@ def test_ivf_topk_large_quantizer_join_path(spark):
     import numpy as np
 
     from assetdatavalidationtool_spark.operators.similarity import (
-        attach_probe_cells,
         ivf_centroids,
         ivf_topk,
     )
@@ -692,8 +578,7 @@ def test_ivf_topk_large_quantizer_join_path(spark):
     ).cache()
 
     # probe selection parity vs numpy
-    got = {r["vec_id"]: list(r["probe_cells"])
-           for r in attach_probe_cells(df, "embedding", cents, 3).collect()}
+    got = _probe_cells_by_id(df, cents, 3)
     dots = base.astype(np.float32).astype(np.float64) @ np.array(cents).T
     for i in range(n_vecs):
         order = sorted(range(n_cells), key=lambda c: (-dots[i][c], c))[:3]
@@ -1823,7 +1708,6 @@ def test_header_consistency_real_payloads(spark):
     from assetdatavalidationtool_spark.operators.images import (
         HEADER_ORDER,
         header_consistency,
-        header_fields,
     )
 
     # first png and first stub-lossy row datagen produces
@@ -1871,13 +1755,12 @@ def test_header_consistency_real_payloads(spark):
     assert {k: v["reason"] for k, v in got.items()} == expect
     assert all(got[k]["consistent"] == (v is None) for k, v in expect.items())
     assert {v for v in expect.values() if v} <= set(HEADER_ORDER)
-    # parsed dims come from the REAL stream on readable rows
-    fields = {r["image_id"]: r for r in header_fields(df).collect()}
-    assert fields["ok_png"]["hdr_w"] == png["w"]
-    assert fields["ok_png"]["hdr_h"] == png["h"]
-    assert fields["ok_stub"]["hdr_w"] == stub["w"]
-    assert fields["ok_stub"]["hdr_fmt"] == stub["fmt"]
-    assert fields["garbage"]["hdr_fmt"] is None
+    # parsed header fields come from the REAL stream on readable rows
+    assert got["ok_png"]["hdr_w"] == png["w"]
+    assert got["ok_png"]["hdr_h"] == png["h"]
+    assert got["ok_stub"]["hdr_w"] == stub["w"]
+    assert got["ok_stub"]["hdr_fmt"] == stub["fmt"]
+    assert got["garbage"]["hdr_fmt"] is None
     # truncation check can be disabled: the cut tail then passes
     got_notrunc = {
         r["image_id"]: r["reason"]

@@ -549,6 +549,46 @@ def test_media_rule_data_error_is_row_fault(kind, fault, error, monkeypatch):
     assert out["error"].tolist() == [error]
 
 
+def test_video_check_passes_c444_and_c420_clips():
+    """In-process, no Spark: sampled frames of a C444 clip match the
+    rendered reference near-losslessly, and a C420 clip's averaged
+    chroma still clears the 25 dB frame gate."""
+    import pandas as pd
+
+    from assetdatavalidationtool_spark.datagen import make_video_row
+    from assetdatavalidationtool_spark.rules import video
+
+    rows = [make_video_row(0, n_frames=9), make_video_row(1, n_frames=9, subsampling="420")]
+    pdf = pd.DataFrame(rows)[["video_id", "bytes", "n_frames", "fps"]]
+    out = next(video._video_check_batches(4)(iter([pdf])))
+    assert out["decode_ok"].all() and out["meta_ok"].all() and out["frames_ok"].all()
+    assert out["error"].isna().all()
+    c444, c420 = out["min_psnr_db"].tolist()
+    assert c444 > 40.0 and c420 > video.PSNR_GATE_DB
+
+
+def test_audio_check_counts_negative_rail_clipping():
+    """In-process, no Spark: a 4x-amplified clip saturates both rails;
+    its clipping fraction counts the -32768 samples too (an int16 abs
+    wraps them back to -32768), and its samples mismatch the reference."""
+    import numpy as np
+    import pandas as pd
+
+    from assetdatavalidationtool_spark.datagen import make_audio_row, render_audio
+    from assetdatavalidationtool_spark.rules import audio
+
+    pdf = pd.DataFrame([make_audio_row(99, n_samples=4000, corrupt=True)])[
+        ["clip_id", "bytes", "sample_rate", "n_samples"]]
+    out = next(audio._audio_check_batches(iter([pdf])))
+    s99 = (render_audio("clip_000000099", 4000).astype(np.int32) * 4).clip(-32768, 32767)
+    assert (s99 == -32768).any(), "fixture must actually hit the negative rail"
+    expect = float(np.mean(np.abs(s99) >= 32767))
+    assert expect > float(np.mean(s99 >= 32767))
+    assert out["decode_ok"].tolist() == [True] and out["meta_ok"].tolist() == [True]
+    assert out["ref_ok"].tolist() == [False]
+    assert out["clip_frac"].tolist() == [expect]
+
+
 def test_audio_invariant_rule_counts(spark):
     """AudioInvariantRule over a faulted clips table: closed-form
     violation counts. n=40 with 3 corrupt (decode), 4 clipped (ref
